@@ -57,6 +57,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from readwise_vector_db_spark import storage
 from readwise_vector_db_spark.functions.text import fingerprint_md5
 from readwise_vector_db_spark.operators.dedup import (
     N_HASHES,
@@ -95,10 +96,7 @@ def _write_synced_version(store_root: str, version: int) -> None:
     import os
 
     os.makedirs(f"{store_root}/_bands", exist_ok=True)
-    tmp = f"{store_root}/_bands/_SYNCED_VERSION.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, f"{store_root}/_bands/_SYNCED_VERSION")
+    storage.atomic_write_text(f"{store_root}/_bands/_SYNCED_VERSION", str(version))
 
 
 def ensure_band_index(
@@ -883,17 +881,13 @@ def _append_gate_anchor(root: str, summary: dict, anchor_n: int) -> None:
     anchor until ``anchor_n`` are captured — single-writer streams are
     the store's documented regime, so read-modify-write + atomic
     replace suffices; once full the file never changes again."""
-    import json as _json
-    import os as _os
-
     cur = _read_gate_anchor(root)
     if len(cur) >= anchor_n:
         return
     cur.append(summary)
-    tmp = f"{_gate_anchor_path(root)}.tmp.{_os.getpid()}"
-    with open(tmp, "w") as f:
-        _json.dump({"summaries": cur, "n": int(anchor_n)}, f)
-    _os.replace(tmp, _gate_anchor_path(root))
+    storage.atomic_write_json(
+        _gate_anchor_path(root), {"summaries": cur, "n": int(anchor_n)}
+    )
 
 
 def commit_batch_signals(
@@ -1341,10 +1335,7 @@ def readmit_quarantined(
             base_v = int(f.read().strip())
     else:
         base_v = table.latest_version() or 0
-        tmp = f"{pin}.tmp.{_os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(str(base_v))
-        _os.replace(tmp, pin)
+        storage.atomic_write_text(pin, str(base_v))
     cleaned, stats = span_dedup_batch_against_store(
         spark, docs, table, n=n, id_col=id_col, text_col=text_col,
         read_version=base_v,
@@ -1411,10 +1402,7 @@ def signals_run_id_for_checkpoint(checkpoint_dir: str) -> str | None:
     if not _os.path.isfile(run_marker):
         offsets = f"{checkpoint_dir}/offsets"
         legacy = _os.path.isdir(offsets) and bool(_os.listdir(offsets))
-        tmp = f"{run_marker}.tmp.{_os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write("" if legacy else _uuid.uuid4().hex)
-        _os.replace(tmp, run_marker)
+        storage.atomic_write_text(run_marker, "" if legacy else _uuid.uuid4().hex)
     with open(run_marker) as f:
         return f.read().strip() or None
 
@@ -1508,10 +1496,7 @@ def run_incremental_span_dedup(
                 base_v = int(f.read().strip())
         else:
             base_v = table.latest_version() or 0
-            tmp = f"{marker}.tmp"
-            with open(tmp, "w") as f:
-                f.write(str(base_v))
-            _os.replace(tmp, marker)
+            storage.atomic_write_text(marker, str(base_v))
         # optional per-batch signal row (round 10; round 11 moved it to
         # the VERSIONED signals table + drift gate): scored against the
         # SAME pinned snapshot as the cut, BEFORE this batch's

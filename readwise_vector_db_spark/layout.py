@@ -8,8 +8,8 @@ table for its Postgres schema
 studied, not copied): a loader must know WHICH on-disk contract it is
 reading before it trusts the bytes.  Rules:
 
-- Savers stamp the layout atomically (tmp + rename) as the LAST step,
-  so a half-written build is never stamped.
+- Savers stamp the layout atomically (``storage.atomic_write_json``)
+  as the LAST step, so a half-written build is never stamped.
 - Loaders call :func:`check_layout`: an unstamped directory is a
   legacy v1 layout (pre-round-10 builds — structurally identical to
   v2, which only ADDED the stamp, so it loads fine); a stamp from a
@@ -28,10 +28,10 @@ from __future__ import annotations
 import contextlib
 import json
 import os
-import shutil
 import threading
 import time
-import uuid
+
+from readwise_vector_db_spark import storage
 
 # The CURRENT on-disk contract version.  History:
 #   1 — implicit (pre-round-10): no stamp file.
@@ -54,10 +54,7 @@ def stamp_layout(path: str, family: str, extra: dict | None = None) -> None:
     rec = {"layout_version": LAYOUT_VERSION, "family": family}
     if extra:
         rec.update(extra)
-    tmp = os.path.join(path, f"{_STAMP}.tmp.{os.getpid()}")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(path, _STAMP))
+    storage.atomic_write_json(os.path.join(path, _STAMP), rec)
 
 
 def read_stamp(path: str) -> dict | None:
@@ -109,21 +106,16 @@ def check_layout(path: str, family) -> int:
 
 # --- maintenance lease --------------------------------------------------------
 #
-# Round 11 (r10 verdict item 1): index-layout maintenance — compaction,
-# cell reclustering, appends — previously excluded each other only by a
-# docstring ("single-maintainer contract"), while the versioned table
-# solved the identical problem structurally (staged-rename CAS claim +
-# pid-liveness recovery, sources/versioned.py:_claim_version).  Two
-# concurrent maintainers on one layout can interleave partition
-# overwrites (a compactor's directory swap silently drops files an
-# appender wrote into the old directory after the rewrite snapshotted
-# it).  The same CAS pattern applied here makes exclusion a LAYOUT
-# property: one lease directory per layout root, acquired by renaming a
-# fully-built staging dir (owner json already inside) onto the lease
-# path — exactly one maintainer lands, a visible lease is never
-# ownerless, and a crashed holder (pid gone) is recovered by the next
-# acquirer.  The reference never faces this: Postgres serializes HNSW
-# maintenance internally (alembic/...create_initial_tables.py:43-50).
+# Index-layout maintenance (compaction, cell reclustering, appends, warm
+# layout swaps) excludes itself structurally: one lease dir per layout
+# root, taken with the owner-dir lock of ``storage.acquire`` — exactly one
+# maintainer lands, a visible lease is never ownerless, and a crashed
+# holder (pid gone) is reaped by the next acquirer.  Two maintainers on
+# one layout could otherwise interleave partition overwrites (a
+# compactor's directory swap silently drops files an appender wrote into
+# the old directory after the rewrite snapshotted it).  The reference
+# never faces this: Postgres serializes HNSW maintenance internally
+# (alembic/...create_initial_tables.py:43-50).
 
 _LEASE = "_MAINT_LEASE"
 # grace window for an OWNERLESS lease (foreign protocol / torn write):
@@ -132,178 +124,10 @@ _LEASE_GRACE_SEC = 60.0
 
 _HELD_TLS = threading.local()
 
-# Serializes SAME-PROCESS lease transitions (acquire-rename, release,
-# reap) — round 12.  The rename-first reap protocol is exact across
-# processes, but within one process the check→rename gap let a queued
-# reaper (whose dead-verdict a peer had already acted on) rename a
-# sibling THREAD's live lease into its grave and bet on the restore —
-# the FAIR-scheduler threads case the module docstring names, and the
-# interleave the r12 stress test fires under load.  Holding one mutex
-# around the microsecond filesystem transitions makes thread-vs-thread
-# verdicts exact; cross-process reaps keep the documented
-# detected-and-preserved residue.  The guarded ops are tiny dir
-# renames/rmtrees on maintenance entry/exit — nowhere near a data path.
-_LEASE_FS_LOCK = threading.Lock()
-
 
 class MaintenanceBusy(RuntimeError):
     """Another maintainer holds the layout's lease.  Carries the
     holder's pid/purpose so the operator knows WHAT is running."""
-
-
-def _lease_owner(lease: str) -> dict | None:
-    try:
-        with open(os.path.join(lease, "owner")) as f:
-            return json.load(f)
-    except (FileNotFoundError, NotADirectoryError, ValueError, OSError):
-        return None
-
-
-def _lease_is_dead(lease: str) -> bool:
-    """True iff the lease belongs to a maintainer that no longer exists
-    — same oracle as VersionedTable._claim_is_dead: pid liveness for
-    owned leases, an mtime grace window for ownerless debris."""
-    owner = _lease_owner(lease)
-    if owner is None or "pid" not in owner:
-        try:
-            age = time.time() - os.stat(lease).st_mtime
-        except FileNotFoundError:
-            return False  # released while we looked — retry, not stale
-        return age > _LEASE_GRACE_SEC
-    pid = int(owner["pid"])
-    if pid == os.getpid():
-        return False  # another thread of THIS process — live
-    try:
-        os.kill(pid, 0)
-        return False
-    except ProcessLookupError:
-        return True
-    except PermissionError:
-        return False  # exists, owned by someone else
-
-
-def _owner_pid_alive(lease_dir: str) -> bool:
-    """True iff ``lease_dir``'s owner json names a pid that still runs
-    (this process's own pid counts — a displaced holder may be another
-    THREAD).  Ownerless dirs are not 'alive' — they carry no displaced
-    holder to protect."""
-    owner = _lease_owner(lease_dir)
-    if owner is None or "pid" not in owner:
-        return False
-    pid = int(owner["pid"])
-    if pid == os.getpid():
-        return True
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-
-
-def _sweep_stale_lease_tmps(root: str) -> None:
-    """Staging/grave dirs left by maintainers that crashed between
-    building and renaming (or mid-reap) — the name embeds the pid, so
-    liveness needs no grace window (same sweep as
-    VersionedTable._sweep_stale_claim_tmps).
-
-    The namer's death alone is NOT sufficient for graves (r11 ADVICE):
-    the restore-lost path of :func:`_reap_dead_lease` deliberately
-    preserves a DISPLACED LIVE lease inside a grave and raises — once
-    the raising process exits, a name-pid-only sweep would erase the
-    evidence the error told the operator to inspect and un-exclude a
-    maintainer that may still be running.  So a candidate dir is swept
-    only when its OWNER json is dead too (for stage dirs the owner IS
-    the dead namer — behavior unchanged; ownerless torn dirs age out
-    through the grace window)."""
-    try:
-        names = os.listdir(root)
-    except FileNotFoundError:
-        return
-    for name in names:
-        for marker in (f"{_LEASE}.tmp-", f"{_LEASE}.grave-"):
-            if not name.startswith(marker):
-                continue
-            try:
-                pid = int(name[len(marker):].split("-", 1)[0])
-                os.kill(pid, 0)
-            except (ValueError, IndexError, PermissionError):
-                continue  # unparsable or live-but-foreign: leave it
-            except ProcessLookupError:
-                full = os.path.join(root, name)
-                # stage dirs are only ever written by their dead namer —
-                # name-pid liveness suffices; a grave may instead hold a
-                # DISPLACED owner (the restore-lost evidence), so sweep
-                # it only when that owner is dead too.  An ownerless
-                # grave stays reaper-pid debris (the original contract).
-                if marker == f"{_LEASE}.grave-" and _owner_pid_alive(full):
-                    continue  # preserved live-owner grave: keep it
-                shutil.rmtree(full, ignore_errors=True)
-
-
-def _reap_dead_lease(root: str, lease: str) -> None:
-    """Remove a dead holder's lease without the check-then-rmtree race
-    (r11 review, twice refined): a plain ``rmtree`` after a liveness
-    check can delete a LIVE lease that landed in between, and a
-    serializing mkdir-mutex just moves the same race one level down
-    (its own recovery is check-then-rmtree — the second review's
-    cascade finding).  The mutex-free protocol inverts the order:
-
-    1. **Rename FIRST**: atomically move whatever occupies the lease
-       path onto a reaper-unique grave.  Exactly one reaper wins
-       (ENOENT for the rest); from this instant the grave is OURS —
-       nothing else reads or mutates it.
-    2. **Verify on the grave**: the liveness verdict is now computed on
-       an IMMUTABLE directory, so it is exact — no window between check
-       and removal exists at all.  Dead → delete the grave, done.
-    3. **Stale verdict** (we grabbed a holder that was alive after all
-       — possible only if the dead lease was reaped AND a live one
-       landed between the CALLER's check and our rename): put it back
-       with the reverse rename.  That restore can lose only to an
-       acquirer landing inside this microsecond window; if it does, we
-       do NOT delete anything — the live lease is PRESERVED in the
-       grave and a loud RuntimeError names both dirs, because at that
-       point two maintainers may genuinely be active and silent
-       continuation is the one unacceptable outcome.  (POSIX offers no
-       compare-and-rename; this protocol reduces the unfixable residue
-       to a detected, state-preserving, operator-visible stop.)
-
-    Ownership-verified release (``maintenance_lease``'s finally)
-    complements this: a holder whose lease was stolen can no longer
-    delete the usurper's lease on its way out."""
-    # Re-verify deadness HERE, not just at the call site (round 12): the
-    # caller's verdict goes stale whenever a peer wins the reap AND a
-    # live acquirer lands before this call runs — under contention that
-    # stale-verdict window spans whole scheduling quanta, and every
-    # queued reaper then renames a LIVE lease into its grave, betting on
-    # the restore rename.  One fresh check collapses that to the single
-    # check→rename syscall gap; the grave-side verification below stays
-    # the exact verdict.
-    with _LEASE_FS_LOCK:
-        if not _lease_is_dead(lease):
-            return
-        grave = f"{lease}.grave-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        try:
-            os.rename(lease, grave)
-        except OSError:
-            return  # released or reaped concurrently — nothing to do
-        if _lease_is_dead(grave):
-            shutil.rmtree(grave, ignore_errors=True)
-            return
-        try:
-            os.rename(grave, lease)  # stale verdict — restore the live holder
-            return
-        except OSError:
-            owner = _lease_owner(grave) or {}
-    raise RuntimeError(
-            f"lease reap at {root!r} hit the unrecoverable window: a live "
-            f"lease (pid {owner.get('pid', '?')}, purpose "
-            f"{owner.get('purpose', '?')!r}) was displaced and a new "
-            f"maintainer landed before it could be restored — the "
-            f"displaced lease is preserved at {grave!r}; stop one of the "
-            "maintainers and remove the grave after inspecting"
-        )
 
 
 @contextlib.contextmanager
@@ -329,35 +153,16 @@ def maintenance_lease(path: str, purpose: str, wait: float = 0.0,
         return
     lease = os.path.join(root, _LEASE)
     os.makedirs(root, exist_ok=True)
-    _sweep_stale_lease_tmps(root)
+    storage.sweep(root, _LEASE)
     deadline = time.monotonic() + max(0.0, float(wait))
-    nonce = uuid.uuid4().hex
     while True:
-        # fully-built stage (owner inside) → rename is the CAS: exactly
-        # one maintainer lands, and a visible lease is never ownerless
-        stage = os.path.join(
-            root, f"{_LEASE}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        nonce = storage.acquire(
+            lease, {"purpose": purpose, "ts": time.time()}, _LEASE_GRACE_SEC
         )
-        os.makedirs(stage)
-        with open(os.path.join(stage, "owner"), "w") as f:
-            json.dump(
-                {
-                    "pid": os.getpid(), "purpose": purpose,
-                    "ts": time.time(), "nonce": nonce,
-                },
-                f,
-            )
-        try:
-            with _LEASE_FS_LOCK:
-                os.rename(stage, lease)
+        if nonce is not None:
             break
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-        if _lease_is_dead(lease):
-            _reap_dead_lease(root, lease)  # race-safe: see its docstring
-            continue
         if time.monotonic() >= deadline:
-            owner = _lease_owner(lease) or {}
+            owner = storage.lock_owner(lease) or {}
             raise MaintenanceBusy(
                 f"layout at {path!r} is under maintenance "
                 f"({owner.get('purpose', 'unknown')!r} by pid "
@@ -370,13 +175,7 @@ def maintenance_lease(path: str, purpose: str, wait: float = 0.0,
         yield
     finally:
         held.pop(root, None)
-        # ownership-verified release: if OUR lease was displaced by a
-        # reap gone wrong, the dir at the path belongs to someone else
-        # now — deleting it would cascade the theft onto THEM
-        with _LEASE_FS_LOCK:
-            owner = _lease_owner(lease) or {}
-            if owner.get("nonce") == nonce:
-                shutil.rmtree(lease, ignore_errors=True)
+        storage.release(lease, nonce)
 
 
 def migrate_layout(path: str, family: str, required: tuple[str, ...]) -> int:

@@ -100,7 +100,7 @@ def cell_coherence_frame(
     index-resident twin of ``pq.cell_distortion_frame`` (which scores
     raw increment vectors).  One Arrow map pass sharing the probes'
     decode gemm, one cells-sized shuffle of partials."""
-    from readwise_vector_db_spark.operators.pq import _pq_reconstruct
+    from readwise_vector_db_spark.operators.pq import pq_reconstruct
 
     ordered = sorted(centroids)
     c = np.asarray([v for _, v in ordered], dtype=np.float64)
@@ -114,7 +114,7 @@ def cell_coherence_frame(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            recon = _pq_reconstruct(
+            recon = pq_reconstruct(
                 np.asarray(list(pdf["pq_code"]), dtype=np.int64), books32, rot
             )
             xn = recon / np.maximum(
@@ -160,9 +160,9 @@ def _tombstone_stats(spark, path: str, subdir: str) -> tuple[int, int, float]:
     autovacuum must not crash on PATH_NOT_FOUND exactly when a
     compactor died mid-swap — the post-crash state it exists to
     manage."""
-    from readwise_vector_db_spark.operators.pq import _recover_codes_dir
+    from readwise_vector_db_spark.storage import recover_swap
 
-    _recover_codes_dir(path, subdir)
+    recover_swap(path, subdir)
     rows = spark.read.parquet(f"{path}/{subdir}").count()
     tomb_dir = f"{path}/tombstones"
     tomb = 0
@@ -195,14 +195,14 @@ def _drifted_cells(
     cells are a minority; a majority-drifted layout under-detects here
     but is exactly what the ``rebuild_cell_frac`` ladder step exists
     for — and whole-distribution shift is retrain territory anyway."""
-    from readwise_vector_db_spark.operators.signals import _median
+    from readwise_vector_db_spark.operators.signals import median
 
     populated = [
         r for r in cell_rows if int(r["n"]) >= policy.min_cell_rows
     ]
     if not populated:
         return [], 0.0, 0
-    base = _median([float(r["mean_dist"]) for r in populated])
+    base = median([float(r["mean_dist"]) for r in populated])
     if base <= 0:
         return [], base, len(populated)
     drifted = [

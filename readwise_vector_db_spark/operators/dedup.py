@@ -1819,7 +1819,7 @@ def _maximal_run_positions(
     return runs.select("id", F.explode(F.sequence("_s", "_e")).alias("pos"))
 
 
-def _dup_token_coverage(
+def dup_token_coverage(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -1898,11 +1898,11 @@ def doc_dup_fraction(
     the every-repeated-window behavior.
 
     Scale shape: detection is :func:`repeated_ngram_spans` (strings
-    never shuffle); coverage is a distinct + count over the REPEATED
-    positions only (result-sized, hot-key-free — keys are (id, index)),
-    and the final join brings in only (id, token-count) — document text
-    never shuffles."""
-    cov = _dup_token_coverage(
+    never shuffle); coverage is :func:`dup_token_coverage`'s one-pass
+    interval union over the REPEATED window positions only
+    (result-sized, one shuffle by id), and the final join brings in
+    only (id, token-count) — document text never shuffles."""
+    cov = dup_token_coverage(
         docs, id_col=id_col, text_col=text_col, n=n,
         min_repeats=min_repeats, min_span_tokens=min_span_tokens,
     )

@@ -234,10 +234,10 @@ def save_bigram_lm(
     from a whitespace split and cannot contain whitespace.  Layout is
     stamped family ``bigram_lm`` (readwise_vector_db_spark.layout):
     loaders refuse wrong-family/newer-engine artifacts loudly."""
-    import json
     import os
 
     from readwise_vector_db_spark.layout import stamp_layout
+    from readwise_vector_db_spark.storage import atomic_write_json
 
     os.makedirs(path, exist_ok=True)
     rec = {
@@ -246,10 +246,7 @@ def save_bigram_lm(
         "uni": {w: int(c) for w, c in uni.items()},
         "bi": {f"{w1} {w2}": int(c) for (w1, w2), c in bi.items()},
     }
-    tmp = os.path.join(path, f"model.json.tmp.{os.getpid()}")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(path, "model.json"))
+    atomic_write_json(os.path.join(path, "model.json"), rec)
     stamp_layout(path, "bigram_lm")
 
 
@@ -275,7 +272,7 @@ def load_bigram_lm(path: str) -> tuple[dict, dict, int, float]:
     return uni, bi, int(rec["vocab_size"]), float(rec["add_k"])
 
 
-def _make_scorer(uni, bi, vocab_size: int, add_k: float):
+def make_scorer(uni, bi, vocab_size: int, add_k: float):
     """Per-text closure → (n_bigrams, raw mean logp | None).
 
     Each bigram's logp is rounded at 9 dp AS INTEGER NANO-UNITS so the
@@ -331,7 +328,7 @@ def lm_ppl_udf(
 
     @pandas_udf("double")
     def ppl(texts: pd.Series) -> pd.Series:
-        score = _make_scorer(*bc.value)
+        score = make_scorer(*bc.value)
 
         def one(t):
             if t is None:
@@ -374,7 +371,7 @@ def lm_score_docs(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        score = _make_scorer(*bc.value)
+        score = make_scorer(*bc.value)
         for pdf in batches:
             ids, ns, avgs = [], [], []
             for did, text in zip(pdf["id"], pdf["t"]):

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from readwise_vector_db_spark import storage as _storage
 from readwise_vector_db_spark.layout import check_layout as _check_layout
 from readwise_vector_db_spark.layout import stamp_layout as _stamp_layout
 
@@ -482,18 +483,11 @@ def size_rescore_factors(
 
 
 def _save_rescore_json(path: str, record: dict) -> None:
-    import json as _json
-    import os as _os
-
+    # Atomic (storage.atomic_write_json): _refresh_persisted_rf rewrites
+    # this on EVERY append, so a torn write would truncate the sidecar and
+    # every future load would silently fall back to the ~8s probe path.
     _os.makedirs(path, exist_ok=True)
-    # Atomic write (tmp + os.replace), matching filter_columns.json and the
-    # _TOUCHED records: _refresh_persisted_rf rewrites this on EVERY append,
-    # so a plain open('w') crash window would truncate the sidecar and every
-    # future load would silently fall back to the ~8s probe path.
-    tmp = f"{path}/rescore.json.tmp.{_os.getpid()}"
-    with open(tmp, "w") as f:
-        _json.dump(record, f)
-    _os.replace(tmp, f"{path}/rescore.json")
+    _storage.atomic_write_json(f"{path}/rescore.json", record)
 
 
 def _prime_persisted_rf(path: str) -> None:
@@ -857,94 +851,6 @@ def _apply_tombstones(spark, path: str, codes: DataFrame) -> DataFrame:
     )
 
 
-def _swap_intent_path(path: str, subdir: str) -> str:
-    return f"{path}/.{subdir}_swap_intent"
-
-
-def _recover_codes_dir(path: str, subdir: str = "codes") -> None:
-    """Crash recovery for :func:`compact_index`'s directory swap (two
-    renames — POSIX has no atomic directory exchange): if ``codes`` is
-    missing, roll FORWARD — but only to the stage the interrupted swap
-    had actually COMMITTED to, named in the ``.{subdir}_swap_intent``
-    marker written just before rename #1.  An orphan stage dir from a
-    run that crashed mid-write (no intent) is never installed: it may
-    predate appends/tombstones that landed after it was staged, so
-    rolling forward to it would silently drop rows and resurrect
-    deletes.  With no intent, roll BACK to the newest saved old
-    directory (mtime, not lexicographic pid order).  Called by the
-    loaders and by ``compact_index`` itself, so an interrupted
-    compaction self-heals on the next touch.  When ``codes`` exists the
-    function touches nothing — a loader must not clean dirs a live
-    compactor in another process may be writing; orphan cleanup happens
-    only inside :func:`compact_index` (single-writer by contract)."""
-    import glob as _glob
-    import os as _os
-
-    if _os.path.isdir(f"{path}/{subdir}"):
-        return
-    intent = _swap_intent_path(path, subdir)
-    if _os.path.isfile(intent):
-        with open(intent) as f:
-            stage = f.read().strip()
-        if stage and _os.path.isdir(f"{path}/{stage}"):
-            _os.rename(f"{path}/{stage}", f"{path}/{subdir}")
-            _os.remove(intent)
-            return
-        # intent names a dir that's gone: rename #2 completed but the
-        # crash hit before the marker removal AND codes was since
-        # removed externally, or the marker is garbage — fall through
-        # to roll-back
-        _os.remove(intent)
-    olds = _glob.glob(f"{path}/.{subdir}_old_*")
-    if olds:
-        _os.rename(max(olds, key=_os.path.getmtime), f"{path}/{subdir}")
-
-
-def _swap_in_stage(path: str, subdir: str, stage_name: str) -> None:
-    """Commit a fully-written stage dir over ``{path}/{subdir}`` with
-    the crash-ordered double rename: intent marker (atomic write) →
-    rename old away → rename stage in → remove intent → drop old.  A
-    crash anywhere resolves deterministically via
-    :func:`_recover_codes_dir` (roll FORWARD only to the intent-named
-    stage; roll back otherwise).  Shared by the codes compaction and
-    the reservoir purge — one hand-maintained copy of the
-    crash-ordering-critical sequence (round-12 review)."""
-    import os as _os
-    import shutil as _shutil
-    import time as _time
-
-    intent = _swap_intent_path(path, subdir)
-    tmp = f"{intent}.tmp.{_os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write(stage_name)
-    _os.replace(tmp, intent)
-    old = f"{path}/.{subdir}_old_{_time.time_ns()}_{_os.getpid()}"
-    _os.rename(f"{path}/{subdir}", old)
-    _os.rename(f"{path}/{stage_name}", f"{path}/{subdir}")
-    _os.remove(intent)
-    _shutil.rmtree(old, ignore_errors=True)
-
-
-def _clean_orphan_stage_dirs(path: str, subdir: str) -> None:
-    """Remove aborted stage/old dirs and stale intent markers.  Only
-    safe to call when ``{path}/{subdir}`` exists (it is the authority)
-    and from the single compaction writer — see
-    :func:`_recover_codes_dir` for why loaders must not do this."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    if not _os.path.isdir(f"{path}/{subdir}"):  # pragma: no cover
-        return
-    intent = _swap_intent_path(path, subdir)
-    if _os.path.isfile(intent):
-        _os.remove(intent)
-    for d in _glob.glob(f"{path}/.{subdir}_compact_*") + _glob.glob(
-        f"{path}/.{subdir}_old_*"
-    ):
-        _shutil.rmtree(d, ignore_errors=True)
-
-
 def compact_index(
     spark, path: str, partition_cluster: bool | None = None,
     subdir: str = "codes", lease_wait: float = 0.0,
@@ -955,7 +861,7 @@ def compact_index(
     ``delete_from_index`` landing mid-compaction keeps its tombstone
     and still applies on the next load (no resurrection).  The swap is
     two renames (POSIX has no atomic directory exchange); a crash
-    between them is self-healed by :func:`_recover_codes_dir` at the
+    between them is self-healed by ``storage.recover_swap`` at the
     next load or compaction (roll-forward to the counted stage), so
     serving never regresses past one touch.  ``partition_cluster``
     controls whether the rewrite keeps the IVF-PQ cluster partitioning
@@ -978,20 +884,19 @@ def _compact_index_locked(
 ) -> int:
     import os as _os
     import shutil as _shutil
-    import time as _time
 
-    _recover_codes_dir(path, subdir)
+    _storage.recover_swap(path, subdir)
     # an interrupted RESERVOIR purge must also self-heal BEFORE the
     # tombstone accounting below (round-12 review): if the reservoir
     # were left swapped-away, the purge block's isdir gate would skip
     # it while the final loop still dropped the tombstone files —
     # deleted ids' raw vectors retained forever and resurrectable
     if subdir == "codes":
-        _recover_codes_dir(path, "reservoir")
+        _storage.recover_swap(path, "reservoir")
     # codes exists now and we are the single writer: aborted stage/old
     # dirs from prior crashed runs (any pid) are garbage — clear them so
     # they can never be mistaken for a committed stage later
-    _clean_orphan_stage_dirs(path, subdir)
+    _storage.clean_orphans(path, subdir)
     # snapshot the tombstone files BEFORE the rewrite: only these are
     # guaranteed applied by the stage job; later arrivals must survive
     tomb_dir = f"{path}/tombstones"
@@ -1002,7 +907,7 @@ def _compact_index_locked(
     codes = _apply_tombstones(spark, path, spark.read.parquet(f"{path}/{subdir}"))
     if partition_cluster is None:
         partition_cluster = "cluster" in codes.columns
-    stage_name = f".{subdir}_compact_{_time.time_ns()}_{_os.getpid()}"
+    stage_name = _storage.swap_stage_name(subdir)
     stage = f"{path}/{stage_name}"
     _shutil.rmtree(stage, ignore_errors=True)
     w = codes.write.mode("overwrite")
@@ -1011,8 +916,8 @@ def _compact_index_locked(
     w.parquet(stage)
     n = spark.read.parquet(stage).count()
     # commit the stage: recovery only ever rolls FORWARD to the stage
-    # named in the intent marker (see _recover_codes_dir / _swap_in_stage)
-    _swap_in_stage(path, subdir, stage_name)
+    # named in the intent marker (see storage.recover_swap)
+    _storage.swap_dir(path, subdir, stage_name)
     # Physically purge tombstoned rows from the raw-vector reservoir too
     # (round 12) — the reservoir stores RAW vectors, so leaving deleted
     # rows' bytes behind would break the right-to-be-forgotten contract
@@ -1021,18 +926,18 @@ def _compact_index_locked(
     # place, so reservoir loads keep filtering and the next compaction
     # finishes the purge — never a resurrection window.  Same staged
     # double-rename as the codes swap (self-healed by
-    # _recover_codes_dir via _load_reservoir).
+    # storage.recover_swap via _load_reservoir).
     if subdir == "codes" and _os.path.isdir(f"{path}/reservoir") and pre_files:
-        _clean_orphan_stage_dirs(path, "reservoir")
+        _storage.clean_orphans(path, "reservoir")
         res_clean = _apply_tombstones(
             spark, path, spark.read.parquet(f"{path}/reservoir")
         )
-        rstage_name = f".reservoir_compact_{_time.time_ns()}_{_os.getpid()}"
+        rstage_name = _storage.swap_stage_name("reservoir")
         res_clean.write.mode("overwrite").parquet(f"{path}/{rstage_name}")
         meta_src = f"{path}/reservoir/_meta.json"
         if _os.path.isfile(meta_src):
             _shutil.copy(meta_src, f"{path}/{rstage_name}/_meta.json")
-        _swap_in_stage(path, "reservoir", rstage_name)
+        _storage.swap_dir(path, "reservoir", rstage_name)
     for fp_ in pre_files:
         try:
             _os.remove(fp_)
@@ -1055,7 +960,7 @@ def load_pq_index(spark, path: str) -> tuple[DataFrame, list[np.ndarray]]:
     returned scan."""
     _check_layout(path, "pq")
     _prime_persisted_rf(path)
-    _recover_codes_dir(path)
+    _storage.recover_swap(path, "codes")
     codes = _apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
     cb = spark.read.parquet(f"{path}/codebooks").collect()
     m = 1 + max(r["subspace"] for r in cb)
@@ -1262,14 +1167,10 @@ def coarse_distortion_by(
 
 
 def _write_reservoir_meta(path: str, per_cell: int, seed: int) -> None:
-    import json as _json
-    import os as _os
-
     _os.makedirs(f"{path}/reservoir", exist_ok=True)
-    tmp = f"{path}/reservoir/_meta.json.tmp.{_os.getpid()}"
-    with open(tmp, "w") as f:
-        _json.dump({"per_cell": int(per_cell), "seed": int(seed)}, f)
-    _os.replace(tmp, f"{path}/reservoir/_meta.json")
+    _storage.atomic_write_json(
+        f"{path}/reservoir/_meta.json", {"per_cell": int(per_cell), "seed": int(seed)}
+    )
 
 
 def reservoir_per_cell(path: str) -> int | None:
@@ -1405,7 +1306,7 @@ def _load_reservoir(spark, path: str) -> DataFrame | None:
     from pyspark.sql.window import Window
 
     rdir = f"{path}/reservoir"
-    _recover_codes_dir(path, "reservoir")  # self-heal an interrupted purge swap
+    _storage.recover_swap(path, "reservoir")  # self-heal an interrupted purge swap
     # meta read AFTER the recovery (round-12 review): mid-swap the dir —
     # and the _meta.json inside it — is absent, and a pre-recovery read
     # would report 'no reservoir' for a layout that has one
@@ -1522,7 +1423,7 @@ def load_ivfpq_index(spark, path: str):
     (:func:`delete_from_index`) are excluded from the returned scan."""
     _check_layout(path, "ivfpq")
     _prime_persisted_rf(path)
-    _recover_codes_dir(path)
+    _storage.recover_swap(path, "codes")
     codes = _apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
     cent = spark.read.parquet(f"{path}/centroids").collect()
     centroids = sorted(
@@ -2029,7 +1930,7 @@ def cell_distortion_frame(
     )
 
 
-def _pq_reconstruct(
+def pq_reconstruct(
     codes: np.ndarray, books: list[np.ndarray], rotation: np.ndarray | None
 ) -> np.ndarray:
     """Decode (n, m) PQ codes to the normalized-space vectors ADC
@@ -2200,7 +2101,7 @@ def _recluster_cells_locked(
     for c in cells:
         rows_c = [r["pq_code"] for r in sample_rows if r["cluster"] == c]
         if rows_c:
-            existing_sample[c] = _pq_reconstruct(
+            existing_sample[c] = pq_reconstruct(
                 np.asarray(rows_c, dtype=np.int64), books, rotation
             )
 
@@ -2279,7 +2180,7 @@ def _recluster_cells_locked(
                 mask = pdf["cluster"].to_numpy() == c
                 if not mask.any():
                     continue
-                x = _pq_reconstruct(codes_np[mask], books32, rot)
+                x = pq_reconstruct(codes_np[mask], books32, rot)
                 d2 = (sub * sub).sum(1)[None, :] - 2.0 * (x @ sub.T)
                 out_cluster[mask] = ids[d2.argmin(1)]
             pdf = pdf.assign(cluster=out_cluster.astype(np.int32))
@@ -2528,7 +2429,7 @@ def _rebuild_ivfpq_locked(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                x = _pq_reconstruct(
+                x = pq_reconstruct(
                     np.asarray(list(pdf["pq_code"]), dtype=np.int64),
                     books32, rot,
                 )

@@ -150,13 +150,13 @@ def export_term_weight_artifact(
     absent tokens as weight 0 (a stated approximation vs
     ``model.transform``, exact whenever the scoring corpus ⊆ the
     vocabulary corpus — the oracle's configuration)."""
-    import json
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq_
 
     from readwise_vector_db_spark.layout import stamp_layout
+    from readwise_vector_db_spark.storage import atomic_write_json
 
     tf = model.stages[1]
     lr = model.stages[2]
@@ -188,10 +188,7 @@ def export_term_weight_artifact(
         "n_features": int(tf.getNumFeatures()),
         "n_terms": len(rows),
     }
-    tmp = os.path.join(out_dir, f"model.json.tmp.{os.getpid()}")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(out_dir, "model.json"))
+    atomic_write_json(os.path.join(out_dir, "model.json"), rec)
     stamp_layout(out_dir, "quality_lr")
     return rec
 

@@ -44,8 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from readwise_vector_db_spark.operators.dedup import _dup_token_coverage
-from readwise_vector_db_spark.operators.lm import _make_scorer
+from readwise_vector_db_spark.operators.dedup import dup_token_coverage
+from readwise_vector_db_spark.operators.lm import make_scorer
 
 # re.ASCII (r11): Python's default \s is UNICODE-aware — it splits
 #  / -class whitespace that Java's \s (Spark split) and
@@ -100,7 +100,7 @@ def doc_quality_signals(
     # so the emitted values are bit-identical; the left join shrinks
     # from corpus-sized (every doc) to coverage-sized (docs with ≥1
     # repeated window).
-    cov = _dup_token_coverage(
+    cov = dup_token_coverage(
         docs, id_col=id_col, text_col=text_col, n=n,
         min_repeats=min_repeats, min_span_tokens=min_span_tokens,
     ).select(F.col("id").alias(id_col), "dup_tokens")
@@ -214,7 +214,7 @@ class QualityDriftError(RuntimeError):
         self.reference = reference
 
 
-def _median(xs: list[float]) -> float:
+def median(xs: list[float]) -> float:
     """Interpolated median (``statistics.median`` semantics): even-length
     inputs average the two middle elements — r11 ADVICE fix; the upper
     element previously biased the drift-gate reference and the
@@ -263,7 +263,7 @@ def quality_drift_gate(
     if len(reference) < min_ref:
         return
     ref = {
-        k: _median([float(r[k]) for r in reference if r.get(k) is not None])
+        k: median([float(r[k]) for r in reference if r.get(k) is not None])
         for k in ("ppl_p50", "dup_frac_p90", "rep_bad_frac", "ppl_null_frac")
         if any(r.get(k) is not None for r in reference)
     }
@@ -350,7 +350,7 @@ def per_doc_signal_frame(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        score = _make_scorer(*bc.value)
+        score = make_scorer(*bc.value)
         for pdf in batches:
             out: dict[str, list] = {
                 k: [] for k in

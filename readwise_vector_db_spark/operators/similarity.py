@@ -472,13 +472,11 @@ def load_ivf_index(spark, path: str) -> tuple[DataFrame, list[tuple[int, list[fl
     index families) are excluded from the returned scan; compact with
     ``pq.compact_index(spark, path, subdir="assigned")``."""
     from readwise_vector_db_spark.layout import check_layout
-    from readwise_vector_db_spark.operators.pq import (
-        _apply_tombstones,
-        _recover_codes_dir,
-    )
+    from readwise_vector_db_spark.operators.pq import _apply_tombstones
+    from readwise_vector_db_spark.storage import recover_swap
 
     check_layout(path, "ivf")
-    _recover_codes_dir(path, "assigned")
+    recover_swap(path, "assigned")
     assigned = _apply_tombstones(
         spark, path, spark.read.parquet(f"{path}/assigned")
     )

@@ -18,7 +18,9 @@ data layout written once and exploited by every query:
 the layout under ``<repo>/.warm_index/<sf-tag>`` and registers catalog
 tables; later calls (any session) re-register the existing files after
 checking a source fingerprint (size+mtime of the fixture parquets), so a
-regenerated fixture never serves a stale index.
+regenerated fixture never serves a stale index.  A rebuild is staged
+beside the live layout and swapped in (``storage.swap_dir``), so the
+live layout is never deleted before its replacement is whole.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from readwise_vector_db_spark import storage
 from readwise_vector_db_spark.sources.tables import corpus_split
 
 N_BUCKETS = 8
@@ -104,6 +107,42 @@ def _register_external(
     )
 
 
+def _is_fresh(base: Path, fp: str) -> bool:
+    marker = base / "FINGERPRINT"
+    return marker.exists() and marker.read_text() == fp
+
+
+# A warm-layout swap holds the index root's lease for two renames; a
+# waiter only ever queues behind another builder's swap.
+_SWAP_LEASE_WAIT_S = 60.0
+
+
+def _install_layout(base: Path, fp: str, build, force: bool = False) -> bool:
+    """Build a warm layout into a stage beside ``base`` and swap it in
+    (``storage.swap_dir``) under the index root's maintenance lease, so
+    the live layout is never deleted before its replacement is whole
+    and a crash at any step leaves one complete layout.  Racing
+    builders end with one winner: under the lease, a layout another
+    builder already made fresh is kept and this stage is dropped (unless
+    ``force``).  Returns True when this build went live."""
+    from readwise_vector_db_spark.layout import maintenance_lease
+
+    parent, name = str(base.parent), base.name
+    stage = storage.stage_path(str(base))
+    try:
+        build(stage)
+        with maintenance_lease(
+            str(_INDEX_ROOT), f"warm layout {name}", wait=_SWAP_LEASE_WAIT_S
+        ):
+            storage.recover_swap(parent, name)
+            if not force and _is_fresh(base, fp):
+                return False
+            storage.swap_dir(parent, name, os.path.basename(stage))
+            return True
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)  # no-op once swapped in
+
+
 def build_search_index(spark: SparkSession, sf_dir: str, force: bool = False) -> bool:
     """Write the bucketed (vectors, metadata) layout for ``sf_dir`` —
     the offline index build.  Safe to call repeatedly; rebuilds only when
@@ -111,37 +150,32 @@ def build_search_index(spark: SparkSession, sf_dir: str, force: bool = False) ->
     when a (re)build happened."""
     tag = _tag(sf_dir)
     base = _INDEX_ROOT / tag
-    marker = base / "FINGERPRINT"
     fp = _source_fingerprint(sf_dir)
-    if not force and marker.exists() and marker.read_text() == fp:
+    if not force and _is_fresh(base, fp):
         return False
-    if base.exists():
-        shutil.rmtree(base)
-    base.mkdir(parents=True, exist_ok=True)
     meta, vecs = corpus_split(spark, sf_dir)
-    # write through temp catalog names; the durable artifact is the files
-    for df, sub, schema in (
-        (vecs, "vectors", _VEC_SCHEMA),
-        (meta, "metadata", _META_SCHEMA),
-    ):
-        path = base / sub
-        tmp_table = f"rw_warm_build_{tag}_{sub}"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        (
-            df.repartition(N_BUCKETS, "id")
-            .write.bucketBy(N_BUCKETS, "id")
-            .sortBy("id")
-            .option("path", str(path))
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tmp_table)
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-    from readwise_vector_db_spark.layout import stamp_layout
 
-    stamp_layout(str(base), "search_warm")
-    marker.write_text(fp)
-    return True
+    def build(stage: str) -> None:
+        # write through temp catalog names; the durable artifact is the files
+        for df, sub in ((vecs, "vectors"), (meta, "metadata")):
+            tmp_table = f"rw_warm_build_{tag}_{sub}"
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
+            (
+                df.repartition(N_BUCKETS, "id")
+                .write.bucketBy(N_BUCKETS, "id")
+                .sortBy("id")
+                .option("path", f"{stage}/{sub}")
+                .mode("overwrite")
+                .format("parquet")
+                .saveAsTable(tmp_table)
+            )
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
+        from readwise_vector_db_spark.layout import stamp_layout
+
+        stamp_layout(stage, "search_warm")
+        Path(stage, "FINGERPRINT").write_text(fp)
+
+    return _install_layout(base, fp, build, force=force)
 
 
 # (vec_dir, qid, source-fingerprint) → embedding.  Driver-process-local
@@ -550,9 +584,9 @@ def ivf_warm_index(
         if declared_base.is_dir() and tuple(
             _declared_filter_columns(declared_base)
         ) != tuple(filter_columns):
-            tmp = declared_base / (_FILTER_COLS_FILE + ".tmp")
-            tmp.write_text(_json.dumps(list(filter_columns)))
-            os.replace(tmp, declared_base / _FILTER_COLS_FILE)
+            storage.atomic_write_json(
+                declared_base / _FILTER_COLS_FILE, list(filter_columns)
+            )
     hit = _IVF_RELS.get(key)
     if hit is not None:
         return hit
@@ -568,35 +602,26 @@ def ivf_warm_index(
             pass
     _, vecs = warm_tables(spark, sf_dir)
     base = _INDEX_ROOT / tag / f"ivf{n_clusters}"
-    marker = base / "FINGERPRINT"
-    if not (marker.exists() and marker.read_text() == fp):
+    if not _is_fresh(base, fp):
         # offline build: KMeans-assign the warm vectors, persist the
-        # cluster-partitioned layout.  Staged under a pid-unique dir and
-        # renamed so a reader never sees a half-written index and two
-        # racing builders resolve to one winner (same pattern as the
-        # planted-artifact publish in suites/similarity.py).
+        # cluster-partitioned layout, swap it in (_install_layout)
         assigned, centroids = sim.build_ivf_index(
             vecs, n_clusters=n_clusters, id_col="id", vec_col="embedding", seed=seed
         )
-        stage = base.parent / f".ivf{n_clusters}_stage_{os.getpid()}"
-        shutil.rmtree(stage, ignore_errors=True)
-        sim.save_ivf_index(assigned, centroids, str(stage))
-        (stage / _FILTER_COLS_FILE).write_text(
-            _json.dumps(list(filter_columns or _DEFAULT_FILTER_COLUMNS))
-        )
-        (stage / "FINGERPRINT").write_text(fp)
-        shutil.rmtree(base, ignore_errors=True)
-        try:
-            os.rename(stage, base)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)  # a racer won; use theirs
+
+        def build(stage: str) -> None:
+            sim.save_ivf_index(assigned, centroids, stage)
+            Path(stage, _FILTER_COLS_FILE).write_text(
+                _json.dumps(list(filter_columns or _DEFAULT_FILTER_COLUMNS))
+            )
+            Path(stage, "FINGERPRINT").write_text(fp)
+
+        _install_layout(base, fp, build)
     elif filter_columns is not None and tuple(
         _declared_filter_columns(base)
     ) != tuple(filter_columns):
         # re-declaration against an existing layout the memo hadn't seen
-        tmp = base / (_FILTER_COLS_FILE + ".tmp")
-        tmp.write_text(_json.dumps(list(filter_columns)))
-        os.replace(tmp, base / _FILTER_COLS_FILE)
+        storage.atomic_write_json(base / _FILTER_COLS_FILE, list(filter_columns))
     # Read with fold-CPU-sized splits, then sort each partition by
     # cluster so cached batches carry tight cluster min/max stats and
     # the in-memory scan's batch pruning SKIPS non-probed cells instead

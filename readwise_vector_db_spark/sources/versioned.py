@@ -19,11 +19,11 @@ Layout:
 - ``commit`` writes the next snapshot dir, then atomically renames a
   tmp manifest over ``_LATEST`` (POSIX rename; on an object store this
   pointer swap is the job of a commit/catalog service — same protocol).
-- Concurrent writers serialize on an atomic version CLAIM (``os.rename``
-  of a fully-built staging dir onto ``_CLAIM_<v>`` is the CAS, so a
-  visible claim always carries its owner file): racing commits both
-  land, one after the other, and crash-recovery only ever deletes debris
-  whose claim is provably dead — never a live peer's in-flight segment.
+- Concurrent writers serialize on an atomic version CLAIM ``_CLAIM_<v>``
+  (``storage.acquire``'s owner-dir lock, so a visible claim always
+  carries its owner file): racing commits both land, one after the
+  other, and crash-recovery only ever deletes debris whose claim is
+  provably dead — never a live peer's in-flight segment.
 - Read-modify-write transactions (round 8): ``merge`` records the base
   snapshot it read and — Delta's optimistic-concurrency rule — REJECTS
   at commit time when ``latest_version`` advanced past it
@@ -46,6 +46,7 @@ Layout:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -53,6 +54,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from readwise_vector_db_spark import storage
 from readwise_vector_db_spark.operators.upsert import merge_upsert
 
 _MANIFEST = "_LATEST"
@@ -169,6 +171,8 @@ class VersionedTable:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # version → nonce of the claims this instance holds
+        self._claim_nonces: dict[int, str] = {}
 
     # --- manifest ------------------------------------------------------------
 
@@ -183,10 +187,7 @@ class VersionedTable:
         return os.path.join(self.root, f"v={version:08d}")
 
     def _flip_manifest(self, version: int) -> None:
-        tmp = os.path.join(self.root, f"{_MANIFEST}.tmp.{version}")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(self.root, _MANIFEST))  # atomic pointer swap
+        storage.atomic_write_text(os.path.join(self.root, _MANIFEST), str(version))
 
     def _prepare_version(self, version: int) -> str:
         """Reserve the directory for ``version``, clearing debris from a
@@ -205,7 +206,7 @@ class VersionedTable:
         if os.path.exists(d):
             shutil.rmtree(d)
         seg = os.path.join(self.root, f"{_SEGMENTS}_{version:08d}")
-        for stray in (seg, seg + ".tmp"):
+        for stray in [seg] + glob.glob(glob.escape(seg) + ".tmp*"):
             if os.path.exists(stray):
                 os.remove(stray)
         return d
@@ -215,125 +216,23 @@ class VersionedTable:
     def _claim_dir(self, version: int) -> str:
         return os.path.join(self.root, f"{_CLAIM}_{version:08d}")
 
-    def _claim_is_dead(self, claim: str) -> bool:
-        """True iff ``claim`` belongs to a writer that no longer exists.
-        The owner file records the claimant's pid; a pid that can't be
-        signalled is gone (mkdir-then-crash leaves an ownerless claim —
-        live within a short grace window, debris after).  Same-host
-        liveness is the right oracle here because the whole manifest
-        protocol already assumes POSIX rename on a shared local FS; on
-        an object store BOTH the pointer swap and this claim belong to
-        a commit/catalog service (Delta's LogStore, an Iceberg
-        catalog)."""
-        try:
-            with open(os.path.join(claim, "owner")) as f:
-                pid = int(json.load(f)["pid"])
-        except (FileNotFoundError, ValueError, KeyError, json.JSONDecodeError):
-            try:
-                age = time.time() - os.stat(claim).st_mtime
-            except FileNotFoundError:
-                return False  # released while we looked — not stale, retry
-            return age > _CLAIM_GRACE_SEC
-        if pid == os.getpid():
-            return False  # another thread of THIS process — live
-        try:
-            os.kill(pid, 0)
-            return False
-        except ProcessLookupError:
-            return True
-        except PermissionError:
-            return False  # exists, owned by someone else
-
-    def _sweep_stale_claim_tmps(self) -> None:
-        """Remove staging dirs left by writers that crashed between
-        building the claim and renaming it into place.  The staging name
-        embeds the claimant's pid, so liveness is checkable without any
-        grace window; a live peer's staging dir is never touched.
-
-        Graves from :meth:`_reap_dead_claim`'s restore-lost path match
-        this sweep's pattern but may hold a DISPLACED LIVE claim the
-        RuntimeError preserved for inspection (r11 ADVICE — same fix as
-        ``layout._sweep_stale_lease_tmps``): the namer's death alone
-        must not erase it, so a candidate is swept only when its OWNER
-        is dead too (stage dirs' owner IS the dead namer — unchanged)."""
-        import shutil
-
-        try:
-            names = os.listdir(self.root)
-        except FileNotFoundError:
-            return
-        for name in names:
-            if f"{_CLAIM}_" not in name or ".tmp-" not in name:
-                continue
-            try:
-                pid = int(name.rsplit(".tmp-", 1)[1].split("-", 1)[0])
-                os.kill(pid, 0)
-            except (ValueError, IndexError, PermissionError):
-                continue  # unparsable or live-but-foreign: leave it
-            except ProcessLookupError:
-                full = os.path.join(self.root, name)
-                # stage dirs are only ever written by their dead namer —
-                # name-pid liveness suffices; a grave ("-grave" infix)
-                # may instead hold a DISPLACED owner (the restore-lost
-                # evidence), so it is swept only when that owner is dead
-                # too.  Ownerless graves stay reaper-pid debris.
-                if "-grave" in name:
-                    from readwise_vector_db_spark.layout import (
-                        _owner_pid_alive,
-                    )
-
-                    if _owner_pid_alive(full):
-                        continue  # preserved live-owner grave: keep it
-                shutil.rmtree(full, ignore_errors=True)
-
     def _claim_version(self) -> int:
         """Atomically claim the next version number (round-5 verdict
-        item 4: two racing committers must not both target v=N+1).
-        The CAS is ``os.rename`` of a fully-built staging dir — owner
-        file already inside — onto the claim path: exactly one writer
-        lands (rename onto a non-empty dir fails with ENOTEMPTY), and a
-        visible claim is NEVER ownerless, eliminating the round-6
-        claim-steal window where a writer stalled >grace between mkdir
-        and its owner write looked dead and lost its claim to a peer.
+        item 4: two racing committers must not both target v=N+1) with
+        ``storage.acquire``: exactly one writer lands, a visible claim
+        is NEVER ownerless, and a claim whose writer died is reaped.
         Losers wait for the holder to publish (manifest advances past v)
-        or die (claim removed / pid gone), then retry against the NEW
-        latest — both commits succeed, serially.  The caller must
-        release via ``_release_claim`` in a finally."""
-        import shutil
-        import uuid
-
-        self._sweep_stale_claim_tmps()
+        or die, then retry against the NEW latest — both commits
+        succeed, serially.  The caller must release via
+        ``_release_claim`` in a finally."""
+        storage.sweep(self.root, f"{_CLAIM}_")
         while True:
             v = (self.latest_version() or 0) + 1
-            claim = self._claim_dir(v)
-            # Any PRE-EXISTING claim — including an EMPTY one — takes the
-            # dead/wait branch, never the rename: POSIX rename(2)
-            # atomically swaps onto an empty target dir, so renaming
-            # over a legacy/foreign writer's just-mkdir'd (ownerless)
-            # claim would double-assign the version.  Our own claims are
-            # never empty (owner file rides inside the staged rename),
-            # so the residual check-then-rename window only matters for
-            # a foreign protocol that creates bare claim dirs — which
-            # the grace-window liveness rule already governs.
-            if os.path.exists(claim):
-                if self._claim_is_dead(claim):
-                    self._reap_dead_claim(claim)  # race-safe removal
-                else:
-                    time.sleep(0.05)  # live peer mid-commit on v — wait
+            nonce = storage.acquire(self._claim_dir(v), {}, _CLAIM_GRACE_SEC)
+            if nonce is None:
+                time.sleep(0.05)  # live peer mid-commit on v — wait
                 continue
-            stage = f"{claim}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-            os.makedirs(stage)
-            with open(os.path.join(stage, "owner"), "w") as f:
-                json.dump({"pid": os.getpid()}, f)
-            try:
-                os.rename(stage, claim)
-            except OSError:
-                shutil.rmtree(stage, ignore_errors=True)
-                if self._claim_is_dead(claim):
-                    self._reap_dead_claim(claim)  # race-safe removal
-                else:
-                    time.sleep(0.05)  # live peer mid-commit on v — wait
-                continue
+            self._claim_nonces[v] = nonce
             # the peer that published v removes its claim only AFTER the
             # pointer flip, so we may have claimed a version that is
             # already live — never overwrite it, move on to v+1
@@ -343,48 +242,7 @@ class VersionedTable:
             return v
 
     def _release_claim(self, version: int) -> None:
-        import shutil
-
-        shutil.rmtree(self._claim_dir(version), ignore_errors=True)
-
-    def _reap_dead_claim(self, claim: str) -> None:
-        """Remove a dead writer's claim without the check-then-rmtree
-        race (round 11, twice refined with layout.py `_reap_dead_lease`
-        — a serializing mutex just moves the race into ITS recovery).
-        Mutex-free: atomically rename whatever occupies the claim path
-        onto a reaper-unique grave (one winner), verify liveness on the
-        now-IMMUTABLE grave (exact verdict — no check-to-removal window
-        exists), delete if dead, rename back if the verdict was stale.
-        The restore can lose only to a claimer landing inside that
-        microsecond window; then nothing is deleted — the live claim is
-        preserved in the grave and a loud RuntimeError names it,
-        because at that point two writers may both believe they hold
-        the version and silent continuation is the unacceptable
-        outcome.  The grave name matches the `.tmp-<pid>-` sweep
-        pattern, so a reaper that crashes mid-reap leaves debris the
-        next writer's sweep clears by pid."""
-        import shutil
-        import uuid
-
-        grave = f"{claim}.tmp-{os.getpid()}-grave{uuid.uuid4().hex[:8]}"
-        try:
-            os.rename(claim, grave)
-        except OSError:
-            return  # released or reaped concurrently — nothing to do
-        if self._claim_is_dead(grave):
-            shutil.rmtree(grave, ignore_errors=True)
-            return
-        try:
-            os.rename(grave, claim)  # stale verdict — restore the holder
-        except OSError:
-            raise RuntimeError(
-                f"claim reap at {self.root!r} hit the unrecoverable "
-                f"window: a live claim was displaced and a new writer "
-                f"landed before it could be restored — the displaced "
-                f"claim is preserved at {grave!r}; two writers may be "
-                "targeting one version, stop one and remove the grave "
-                "after inspecting"
-            )
+        storage.release(self._claim_dir(version), self._claim_nonces.pop(version, None))
 
     # --- table ops -----------------------------------------------------------
 
@@ -442,10 +300,7 @@ class VersionedTable:
         the claim, before the pointer flip (same protocol as
         ``_TOUCHED``): a crash in between leaves an unpublished version
         whose record the next claimant overwrites."""
-        tmp = self._schema_path(version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(df.schema.jsonValue(), f)
-        os.replace(tmp, self._schema_path(version))
+        storage.atomic_write_json(self._schema_path(version), df.schema.jsonValue())
 
     def _evolved_or_raise(
         self, df: DataFrame, version: int, schema_mode: str, allow_missing: bool
@@ -542,15 +397,9 @@ class VersionedTable:
             df = self._evolved_or_raise(df, v, schema_mode, allow_missing=False)
             df.write.mode("errorifexists").parquet(self._prepare_version(v))
             if touched is not None:
-                tmp = self._touched_path(v) + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(touched, f)
-                os.replace(tmp, self._touched_path(v))
+                storage.atomic_write_json(self._touched_path(v), touched)
             if meta is not None:
-                mtmp = self._meta_path(v) + ".tmp"
-                with open(mtmp, "w") as f:
-                    json.dump(meta, f)
-                os.replace(mtmp, self._meta_path(v))
+                storage.atomic_write_json(self._meta_path(v), meta)
             self._record_schema(df, v)
             self._flip_manifest(v)
         finally:
@@ -679,15 +528,11 @@ class VersionedTable:
             segs = (self._segments(prev) if prev is not None else []) + [f"v={v:08d}"]
             if retain_segments is not None:
                 segs = segs[-max(1, int(retain_segments)):]
-            tmp = os.path.join(self.root, f"{_SEGMENTS}_{v:08d}.tmp")
-            with open(tmp, "w") as f:
-                json.dump(segs, f)
-            os.replace(tmp, os.path.join(self.root, f"{_SEGMENTS}_{v:08d}"))
+            storage.atomic_write_json(
+                os.path.join(self.root, f"{_SEGMENTS}_{v:08d}"), segs
+            )
             if meta is not None:
-                mtmp = self._meta_path(v) + ".tmp"
-                with open(mtmp, "w") as f:
-                    json.dump(meta, f)
-                os.replace(mtmp, self._meta_path(v))
+                storage.atomic_write_json(self._meta_path(v), meta)
             self._record_schema(df, v)
             self._flip_manifest(v)
         finally:

@@ -235,37 +235,20 @@ _SEMQ_ARTIFACT_VERSION = 1
 def semantic_quantizer_artifact(spark: SparkSession, sf_dir: str) -> str:
     """Build-once path of the persisted SemDeDup quantizer for
     ``sf_dir`` — the offline half (train_semantic_quantizer +
-    similarity.save_quantizer); probe runs only load.  Same race-safe
-    publish as ``suites.similarity.planted_ivf_artifact``: stage into a
-    process-unique dir, rename into place, marker inside."""
-    import hashlib
-    import os
-    import shutil
-    import uuid
-
+    similarity.save_quantizer), published like the planted similarity
+    artifacts; probe runs only load."""
     from readwise_vector_db_spark.operators import similarity as sim
-    from readwise_vector_db_spark.suites.similarity import _IVF_ARTIFACT_ROOT
+    from readwise_vector_db_spark.suites.similarity import publish_artifact
 
-    st = os.stat(f"{sf_dir}/embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}:{int(st.st_mtime)}"
-        f"|semq16|v{_SEMQ_ARTIFACT_VERSION}".encode()
-    ).hexdigest()[:16]
-    path = f"{_IVF_ARTIFACT_ROOT}/{key}"
-    if not os.path.exists(f"{path}/_BUILT"):
+    def build(stage: str) -> None:
         embs = load_table(spark, sf_dir, "embeddings")
         dups = embs.filter(F.col("vec_id") % 20 == 0).withColumn(
             "vec_id", F.col("vec_id") + 1000000
         )
         centroids = dd.train_semantic_quantizer(embs.unionByName(dups))
-        stage = f"{path}.stage-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         sim.save_quantizer(spark, centroids, stage)
-        open(f"{stage}/_BUILT", "w").close()
-        try:
-            os.rename(stage, path)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-    return path
+
+    return publish_artifact(sf_dir, f"semq16|v{_SEMQ_ARTIFACT_VERSION}", build)
 
 
 @register_extra("dedup_semantic_probe", _EMB_PAIRS_ORACLE)

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +19,7 @@ from readwise_vector_db_spark.functions.embedder import embed_text_local
 from readwise_vector_db_spark.operators import search as search_ops
 from readwise_vector_db_spark.operators import similarity as sim
 from readwise_vector_db_spark.registry import register, register_extra
+from readwise_vector_db_spark.storage import publish_dir
 from readwise_vector_db_spark.sources.tables import highlights, load_table
 from readwise_vector_db_spark.suites.sqlfrag import round_pos, seq_cos_dist
 
@@ -182,49 +181,38 @@ _IVF_ARTIFACT_ROOT = os.environ.get(
 )
 
 
+def publish_artifact(sf_dir: str, recipe: str, build) -> str:
+    """Build-once path of the artifact ``recipe`` for ``sf_dir``, built
+    by ``build(stage)`` through ``storage.publish_dir`` on first use.
+    The source fingerprint is in the key: a regenerated fixture (new
+    size/mtime) must never be served by a stale artifact — the planted
+    expectations would silently diverge from the corpus."""
+    st = os.stat(f"{sf_dir}/embeddings.parquet")
+    key = hashlib.md5(
+        f"{os.path.abspath(sf_dir)}|{st.st_size}:{int(st.st_mtime)}"
+        f"|{recipe}".encode()
+    ).hexdigest()[:16]
+    return publish_dir(f"{_IVF_ARTIFACT_ROOT}/{key}", build)
+
+
 def planted_ivf_artifact(spark: SparkSession, sf_dir: str) -> str:
     """Build-once path of the saved planted IVF index for ``sf_dir``.
 
     The offline job: KMeans(16) over corpus ∪ plants, then
     ``save_ivf_index`` writes the cluster-partitioned parquet layout +
     centroid table.  Deterministic (seeded KMeans over a fixed corpus),
-    so concurrent or repeated builds converge to the same artifact; the
-    ``_BUILT`` marker lands only after a complete save."""
-    # source fingerprint in the key: a regenerated fixture (new
-    # size/mtime) must never be served by a stale artifact — the planted
-    # expectations would silently diverge from the corpus
-    st = os.stat(f"{sf_dir}/embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}:{int(st.st_mtime)}"
-        f"|planted16|v{_IVF_ARTIFACT_VERSION}".encode()
-    ).hexdigest()[:16]
-    path = f"{_IVF_ARTIFACT_ROOT}/{key}"
-    marker = f"{path}/_BUILT"
-    if not os.path.exists(marker):
-        # Race-safe publish: two concurrent builders (parallel pytest +
-        # bench) must never overwrite-write into the SAME directory —
-        # one can clobber the other mid-save and the marker would bless
-        # a half-overwritten artifact.  Each builder writes into its own
-        # process-unique staging dir and atomically rename()s it into
-        # place (marker INSIDE the staged dir, so a published path is
-        # complete by construction); the rename loser just discards —
-        # builds are deterministic, so the winner's artifact is
-        # byte-equivalent for probing.
+    so concurrent or repeated builds converge to the same artifact."""
+
+    def build(stage: str) -> None:
         embs = load_table(spark, sf_dir, "embeddings")
         is_query = (F.col("vec_id") < 5) & F.col("embedding").isNotNull()
         dups = embs.filter(is_query).withColumn("vec_id", F.col("vec_id") + 1000000)
         assigned, centroids = sim.build_ivf_index(
             embs.unionByName(dups), n_clusters=16
         )
-        stage = f"{path}.stage-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         sim.save_ivf_index(assigned, centroids, stage)
-        open(f"{stage}/_BUILT", "w").close()
-        try:
-            os.rename(stage, path)
-        except OSError:
-            # a peer published first — keep theirs, drop the stage
-            shutil.rmtree(stage, ignore_errors=True)
-    return path
+
+    return publish_artifact(sf_dir, f"planted16|v{_IVF_ARTIFACT_VERSION}", build)
 
 
 @register("ann_ivf_probe", _PLANTED_SQL)
@@ -317,29 +305,15 @@ def pq_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def planted_pq_artifact(spark: SparkSession, sf_dir: str) -> str:
     """Build-once path of the saved planted PQ index for ``sf_dir`` —
-    same race-safe stage+rename publish as :func:`planted_ivf_artifact`
-    (deterministic build, marker inside the renamed dir)."""
+    published like :func:`planted_ivf_artifact`."""
     from readwise_vector_db_spark.operators import pq
 
-    st = os.stat(f"{sf_dir}/embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}:{int(st.st_mtime)}"
-        f"|pq8x256|v{_IVF_ARTIFACT_VERSION}".encode()
-    ).hexdigest()[:16]
-    path = f"{_IVF_ARTIFACT_ROOT}/{key}"
-    marker = f"{path}/_BUILT"
-    if not os.path.exists(marker):
+    def build(stage: str) -> None:
         corpus = _planted_corpus(spark, sf_dir)
         books = pq.train_pq_codebooks(corpus, m=8, k=256)
-        codes = pq.pq_encode(corpus, books)
-        stage = f"{path}.stage-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        pq.save_pq_index(codes, books, stage)
-        open(f"{stage}/_BUILT", "w").close()
-        try:
-            os.rename(stage, path)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-    return path
+        pq.save_pq_index(pq.pq_encode(corpus, books), books, stage)
+
+    return publish_artifact(sf_dir, f"pq8x256|v{_IVF_ARTIFACT_VERSION}", build)
 
 
 @register_extra("pq_probe", _PQ_PLANTED_SQL)
@@ -513,29 +487,17 @@ def pq_knn_join_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def planted_ivfpq_artifact(spark: SparkSession, sf_dir: str) -> str:
     """Build-once path of the saved planted IVF-PQ index for ``sf_dir``
     (coarse KMeans(16) + PQ 8×256 codebooks, codes partitioned by
-    cluster) — same race-safe publish as the other artifacts."""
+    cluster) — published like the other artifacts."""
     from readwise_vector_db_spark.operators import pq
 
-    st = os.stat(f"{sf_dir}/embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}:{int(st.st_mtime)}"
-        f"|ivfpq16x8x256|v{_IVF_ARTIFACT_VERSION}".encode()
-    ).hexdigest()[:16]
-    path = f"{_IVF_ARTIFACT_ROOT}/{key}"
-    marker = f"{path}/_BUILT"
-    if not os.path.exists(marker):
+    def build(stage: str) -> None:
         corpus = _planted_corpus(spark, sf_dir)
         _, centroids = sim.build_ivf_index(corpus, n_clusters=16)
         books = pq.train_pq_codebooks(corpus, m=8, k=256)
         codes = pq.ivfpq_encode(corpus, centroids, books)
-        stage = f"{path}.stage-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         pq.save_ivfpq_index(codes, centroids, books, stage)
-        open(f"{stage}/_BUILT", "w").close()
-        try:
-            os.rename(stage, path)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-    return path
+
+    return publish_artifact(sf_dir, f"ivfpq16x8x256|v{_IVF_ARTIFACT_VERSION}", build)
 
 
 @register_extra("ivfpq_probe", _PQ_PLANTED_SQL)

@@ -89,6 +89,27 @@ def test_crashed_lease_is_recovered(tmp_path):
     assert not os.path.isdir(stage)
 
 
+def test_empty_legacy_lease_not_clobbered(tmp_path):
+    """POSIX rename atomically replaces an EMPTY target dir, so a bare
+    (ownerless) lease dir — a foreign maintainer's just-mkdir'd lease —
+    must block the acquire instead of being silently replaced: fresh →
+    busy; older than the grace window → swept as debris, then taken."""
+    path = str(tmp_path / "layout")
+    lease = f"{path}/_MAINT_LEASE"
+    os.makedirs(lease)
+    with pytest.raises(MaintenanceBusy):
+        with maintenance_lease(path, "intruder"):
+            pass
+    assert os.path.isdir(lease) and os.listdir(lease) == []
+
+    old = time.time() - 3600
+    os.utime(lease, (old, old))
+    with maintenance_lease(path, "recovered"):
+        with open(f"{lease}/owner") as f:
+            assert json.load(f)["pid"] == os.getpid()
+    assert not os.path.isdir(lease)
+
+
 # --- index fixtures -----------------------------------------------------------
 
 
@@ -621,7 +642,7 @@ def test_sweep_preserves_live_owner_grave(tmp_path):
     DISPLACED LIVE lease inside a grave and raises; once the raising
     (reaper) process exits, the pid-named sweep must NOT erase that
     evidence — only graves whose OWNER is dead too are debris."""
-    from readwise_vector_db_spark.layout import _sweep_stale_lease_tmps
+    from readwise_vector_db_spark.storage import sweep
 
     root = str(tmp_path / "layout")
     os.makedirs(root)
@@ -634,7 +655,7 @@ def test_sweep_preserves_live_owner_grave(tmp_path):
     os.makedirs(grave)
     with open(f"{grave}/owner", "w") as f:
         json.dump({"pid": os.getpid(), "purpose": "displaced", "ts": 0}, f)
-    _sweep_stale_lease_tmps(root)
+    sweep(root, "_MAINT_LEASE")
     assert os.path.isdir(grave)  # evidence preserved
 
     # same grave shape with a DEAD owner is debris — swept
@@ -642,7 +663,7 @@ def test_sweep_preserves_live_owner_grave(tmp_path):
     os.makedirs(grave2)
     with open(f"{grave2}/owner", "w") as f:
         json.dump({"pid": dead, "purpose": "gone", "ts": 0}, f)
-    _sweep_stale_lease_tmps(root)
+    sweep(root, "_MAINT_LEASE")
     assert not os.path.isdir(grave2)
 
 

@@ -6,7 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from readwise_vector_db_spark.sources.versioned import VersionedTable
+from readwise_vector_db_spark import storage
+from readwise_vector_db_spark.sources.versioned import _CLAIM_GRACE_SEC, VersionedTable
 
 
 @pytest.fixture()
@@ -190,14 +191,14 @@ def test_dead_claim_is_broken_live_claim_respected(spark, table):
     os.mkdir(claim)
     with open(os.path.join(claim, "owner"), "w") as f:
         json.dump({"pid": 2 ** 22 + 11}, f)  # beyond default pid_max
-    assert table._claim_is_dead(claim)
+    assert storage.lock_dead(claim, _CLAIM_GRACE_SEC)
     assert table.commit(spark.range(4).select("id")) == 2
     # our own (live) pid → respected
     claim3 = table._claim_dir(3)
     os.mkdir(claim3)
     with open(os.path.join(claim3, "owner"), "w") as f:
         json.dump({"pid": os.getpid()}, f)
-    assert not table._claim_is_dead(claim3)
+    assert not storage.lock_dead(claim3, _CLAIM_GRACE_SEC)
     import shutil
 
     shutil.rmtree(claim3)
@@ -210,7 +211,9 @@ def test_claim_lands_atomically_with_owner(spark, table):
     claim already held (even by a stalled writer that has written
     nothing else yet) makes the rename fail rather than silently merge;
     (c) staging debris from a DEAD claimant is swept, a LIVE claimant's
-    staging dir is left alone."""
+    staging dir is left alone; (d) release verifies the claim's nonce,
+    so a writer whose claim was displaced cannot delete its
+    successor's."""
     import json
     import os
     import shutil
@@ -236,10 +239,23 @@ def test_claim_lands_atomically_with_owner(spark, table):
     live = os.path.join(table.root, f"_CLAIM_{98:08d}.tmp-{os.getpid()}-bb")
     os.makedirs(dead)
     os.makedirs(live)
-    table._sweep_stale_claim_tmps()
+    storage.sweep(table.root, "_CLAIM_")
     assert not os.path.exists(dead)
     assert os.path.exists(live)
     shutil.rmtree(live)
+    # (d) our claim was displaced (reaped on a stale verdict, say) and a
+    # successor now holds the version: our release leaves theirs alone
+    v = table._claim_version()
+    claim = table._claim_dir(v)
+    shutil.rmtree(claim)
+    os.makedirs(claim)
+    with open(os.path.join(claim, "owner"), "w") as f:
+        json.dump({"pid": os.getpid(), "nonce": "successor"}, f)
+    table._release_claim(v)
+    assert os.path.isdir(claim)
+    with open(os.path.join(claim, "owner")) as f:
+        assert json.load(f)["nonce"] == "successor"
+    shutil.rmtree(claim)
 
 def test_merge_conflict_detected_not_last_writer_wins(spark, table):
     """r7 verdict item 5: two merges racing from the SAME base snapshot
@@ -679,7 +695,9 @@ def test_crashed_append_meta_not_attributed_to_next_commit(spark, table):
     assert [m["batch_id"] for _, m in table.commit_metas()] == [0]
 
 
-def test_reap_dead_claim_never_kills_live_replacement(spark, table, tmp_path):
+def test_reap_dead_claim_never_kills_live_replacement(
+    spark, table, tmp_path, monkeypatch
+):
     """r11: dead-claim recovery is rename-to-grave under a reap mutex —
     a reaper whose verdict went stale (the dead claim was already
     replaced by a LIVE peer's) must leave the live claim untouched."""
@@ -696,8 +714,8 @@ def test_reap_dead_claim_never_kills_live_replacement(spark, table, tmp_path):
     os.makedirs(claim)
     with open(f"{claim}/owner", "w") as f:
         _json.dump({"pid": proc.pid}, f)
-    assert table._claim_is_dead(claim)
-    table._reap_dead_claim(claim)
+    assert storage.lock_dead(claim, _CLAIM_GRACE_SEC)
+    storage.reap(claim, _CLAIM_GRACE_SEC)
     assert not os.path.exists(claim)
 
     # 2. the stale-verdict scenario: by the time the reaper acts, a
@@ -706,8 +724,15 @@ def test_reap_dead_claim_never_kills_live_replacement(spark, table, tmp_path):
     os.makedirs(claim)
     with open(f"{claim}/owner", "w") as f:
         _json.dump({"pid": os.getpid()}, f)  # live (this process)
-    table._reap_dead_claim(claim)
-    assert os.path.exists(claim)  # untouched (restored via the grave)
+    renames = []
+    real_rename = os.rename
+    monkeypatch.setattr(
+        os, "rename", lambda a, b: (renames.append(a), real_rename(a, b))[1]
+    )
+    storage.reap(claim, _CLAIM_GRACE_SEC)
+    monkeypatch.undo()
+    assert os.path.exists(claim)  # untouched
+    assert renames == []  # deadness re-verified before any grave rename
     with open(f"{claim}/owner") as f:
         assert _json.load(f)["pid"] == os.getpid()
 
@@ -715,10 +740,62 @@ def test_reap_dead_claim_never_kills_live_replacement(spark, table, tmp_path):
     # embeds its pid — the next writer's sweep clears it
     grave = f"{claim}.tmp-{proc.pid}-gravedeadbeef"
     os.makedirs(grave)
-    table._sweep_stale_claim_tmps()
+    storage.sweep(table.root, "_CLAIM_")
     assert not os.path.exists(grave)
     # and the claim itself reaps normally once its holder dies
     with open(f"{claim}/owner", "w") as f:
         _json.dump({"pid": proc.pid}, f)  # now dead again
-    table._reap_dead_claim(claim)
+    storage.reap(claim, _CLAIM_GRACE_SEC)
     assert not os.path.exists(claim)
+
+
+def test_dead_claim_reap_is_race_safe(table):
+    """The claim-side twin of test_dead_lease_reap_is_race_safe: eight
+    threads race to reap one dead claim and then cycle claim/release
+    on the same version under contention — exclusion holds at every
+    instant, and a crashed reaper's grave is swept, never waited out."""
+    import json as _json
+    import os
+    import subprocess
+    import threading
+    import time as _time
+
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    claim = table._claim_dir(1)
+    os.makedirs(claim)
+    with open(f"{claim}/owner", "w") as f:
+        _json.dump({"pid": proc.pid}, f)
+    os.makedirs(f"{claim}.grave-{proc.pid}-deadbeef")
+
+    active = {"n": 0, "max": 0, "cycles": 0}
+    lock = threading.Lock()
+    errors: list[BaseException] = []
+
+    def worker():
+        try:
+            for _ in range(6):
+                v = table._claim_version()
+                try:
+                    with lock:
+                        active["n"] += 1
+                        active["max"] = max(active["max"], active["n"])
+                        active["cycles"] += 1
+                    _time.sleep(0.01)
+                    with lock:
+                        active["n"] -= 1
+                finally:
+                    table._release_claim(v)
+        except BaseException as e:  # noqa: BLE001 — surface to the test
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not errors, errors
+    assert active["cycles"] == 48
+    assert active["max"] == 1  # never two holders
+    assert not os.path.isdir(claim)
+    assert not os.path.isdir(f"{claim}.grave-{proc.pid}-deadbeef")
