@@ -79,7 +79,7 @@ def _band_table_name(store_root: str) -> str:
     return f"rvdb_inc_bands_{digest}"
 
 
-def _synced_version(store_root: str) -> int:
+def synced_version(store_root: str) -> int:
     """Store version whose rows the band index fully covers (0 = never
     synced).  The marker makes index staleness DETECTABLE: without it,
     a store migrated from ``batch_join="broadcast"`` — or one whose
@@ -129,7 +129,7 @@ def ensure_band_index(
     if repair:
         store = VersionedTable(store_root)
         latest = store.latest_version() or 0
-        if latest > _synced_version(store_root):
+        if latest > synced_version(store_root):
             rebuild_band_index(spark, store, n_buckets)
     return name
 
@@ -548,14 +548,14 @@ def span_dedup_batch_against_store(
     which only semi-joins the store.
     """
     from readwise_vector_db_spark.functions.text import ws_tokens
-    from readwise_vector_db_spark.operators.dedup import _begin_detector_call
+    from readwise_vector_db_spark.operators.dedup import begin_detector_call
 
     # generation bump (round 10 — was a drop-everything entry drain): a
     # long-running per-batch loop stays bounded at the two newest
     # batches' frames, and a caller who planned batch N's cleaned frame
     # but hasn't consumed it yet keeps its cache across batch N+1's
     # planning instead of silently recomputing the whole cut
-    _begin_detector_call()
+    begin_detector_call()
     if read_version is None:
         read_version = table.latest_version() or 0
     store_exists = read_version > 0
@@ -672,10 +672,10 @@ def span_dedup_batch_against_store(
     # handle before materializing or never consume it.
     from readwise_vector_db_spark.operators.dedup import (
         SelfDrainingFrame,
-        _register_cached,
+        register_cached,
     )
 
-    _register_cached(cleaned)
+    register_cached(cleaned)
     return SelfDrainingFrame(cleaned, [cleaned]), stats
 
 
@@ -739,13 +739,13 @@ def span_dup_fraction_batch_against_store(
     ``read_version`` pins the snapshot for streaming retries, exactly
     like the cut path."""
     from readwise_vector_db_spark.functions.text import ws_tokens
-    from readwise_vector_db_spark.operators.dedup import _begin_detector_call
+    from readwise_vector_db_spark.operators.dedup import begin_detector_call
 
     # r10 ADVICE: this is a PUBLIC detector entry — a scoring-only
     # per-batch loop (no cut call to bump the generation) must still
     # advance the cache generation, or each batch's persisted `wins`
     # accumulates unboundedly — the exact leak the registry prevents.
-    _begin_detector_call()
+    begin_detector_call()
     if read_version is None:
         read_version = table.latest_version() or 0
 
@@ -791,9 +791,9 @@ def span_dup_fraction_batch_against_store(
     )
     # wins' persist outlives this lazy plan — the generation registry
     # (two newest calls kept) releases it, same as the cut path's frames
-    from readwise_vector_db_spark.operators.dedup import _register_cached
+    from readwise_vector_db_spark.operators.dedup import register_cached
 
-    _register_cached(wins)
+    register_cached(wins)
     return (
         base.join(cov, "id", "left")
         .select(
@@ -837,7 +837,7 @@ def batch_quality_signals(
     store probe + one id join scores it — no corpus rescan, no
     per-batch LM retraining."""
     from readwise_vector_db_spark.operators.signals import (
-        _join_signals,
+        join_signals,
         per_doc_signal_frame,
     )
 
@@ -851,7 +851,7 @@ def batch_quality_signals(
         spark, batch, table, n=n, id_col=id_col, text_col=text_col,
         read_version=read_version,
     ).select(id_col, "dup_tokens", "dup_fraction")
-    return _join_signals(per_doc, dup, id_col)
+    return join_signals(per_doc, dup, id_col)
 
 
 _GATE_BAND_KEYS = (

@@ -1,7 +1,8 @@
 """Index-layout maintenance policy (round 11 — r10 verdict item 1).
 
 The engine MEASURES everything an index janitor needs — tombstone
-fraction (``delete_from_index`` / ``compact_index``), per-cell drift
+fraction (``delete_from_index`` / ``compact_index``, both in
+``operators/index_lifecycle.py``), per-cell drift
 distortion (``cell_distortion_frame`` / ``recluster_cells``), rescore-
 factor staleness (``rescore.json``) — but until this round choosing
 compact-vs-recluster-vs-rebuild was manual.  The reference gets the
@@ -97,9 +98,9 @@ def cell_coherence_frame(
     """(cluster, n, mean_dist) over an IVF-PQ layout's OWN rows: each
     row's PQ reconstruction scored by cosine distance to its nearest
     coarse centroid, grouped by the row's ASSIGNED cell — the
-    index-resident twin of ``pq.cell_distortion_frame`` (which scores
-    raw increment vectors).  One Arrow map pass sharing the probes'
-    decode gemm, one cells-sized shuffle of partials."""
+    index-resident twin of ``index_lifecycle.cell_distortion_frame``
+    (which scores raw increment vectors).  One Arrow map pass sharing
+    the probes' decode gemm, one cells-sized shuffle of partials."""
     from readwise_vector_db_spark.operators.pq import pq_reconstruct
 
     ordered = sorted(centroids)
@@ -286,8 +287,8 @@ def maintain_dedup_store(
     streams are the store's documented regime — the lease is for the
     out-of-band maintenance this function performs)."""
     from readwise_vector_db_spark.jobs.incremental_dedup import (
-        _synced_version,
         rebuild_band_index,
+        synced_version,
     )
     from readwise_vector_db_spark.sources.versioned import VersionedTable
 
@@ -295,7 +296,7 @@ def maintain_dedup_store(
     with maintenance_lease(store_root, "maintain-store", wait=lease_wait):
         table = VersionedTable(store_root)
         latest = table.latest_version() or 0
-        synced = _synced_version(store_root)
+        synced = synced_version(store_root)
         segments = len(table._segments(latest)) if latest else 0
         band_files = 0
         bands_dir = os.path.join(store_root, "_bands")
@@ -323,7 +324,7 @@ def maintain_dedup_store(
             if execute:
                 rebuild_band_index(spark, table)
                 result = {
-                    "synced_to": _synced_version(store_root),
+                    "synced_to": synced_version(store_root),
                     "band_files_after": sum(
                         1
                         for _, _, files in os.walk(bands_dir)
@@ -575,11 +576,22 @@ def maintain_index(
     invokes re-enter it (same thread), while any concurrent maintainer
     refuses or waits — the policy is one maintainer, structurally.
     """
+    from readwise_vector_db_spark.operators.index_lifecycle import (
+        cell_distortion_frame,
+        compact_index,
+    )
     from readwise_vector_db_spark.operators.pq import (
-        _compact_index_locked,
-        _recluster_cells_locked,
         load_ivfpq_index,
         load_rotation,
+        rebuild_ivfpq_index,
+        recluster_cells,
+        reservoir_per_cell,
+    )
+    from readwise_vector_db_spark.operators.similarity import (
+        build_ivf_index,
+        load_ivf_index,
+        recluster_ivf_cells,
+        save_ivf_index,
     )
 
     policy = policy or MaintenancePolicy()
@@ -605,13 +617,6 @@ def maintain_index(
             ).collect()
             drifted, base, n_cells = _drifted_cells(cell_rows, policy)
         elif family == "ivf":
-            from readwise_vector_db_spark.operators.pq import (
-                cell_distortion_frame,
-            )
-            from readwise_vector_db_spark.operators.similarity import (
-                load_ivf_index,
-            )
-
             assigned, centroids = load_ivf_index(spark, path)
             # sample_fraction bounds the health scan for THIS family too
             # (r11 ADVICE: it previously applied only to ivfpq's
@@ -647,10 +652,6 @@ def maintain_index(
         executed = False
         reservoir_bound = None
         if family == "ivfpq":
-            from readwise_vector_db_spark.operators.pq import (
-                reservoir_per_cell,
-            )
-
             reservoir_bound = reservoir_per_cell(path)
             if reservoir_bound is not None:
                 measurements["reservoir_per_cell"] = reservoir_bound
@@ -663,17 +664,13 @@ def maintain_index(
                 and family == "ivfpq"
                 and (reservoir_bound is not None or raw_vecs is not None)
             ):
-                from readwise_vector_db_spark.operators.pq import (
-                    _rebuild_ivfpq_locked,
-                )
-
                 # executable since round 12: the layout's raw-vector
                 # reservoir (save_ivfpq_index(reservoir_per_cell=))
                 # retrains centroids + codebooks blue/green; raw_vecs=
                 # (the base table) upgrades it to the full-fidelity
                 # REINDEX mode — see rebuild_ivfpq_index for the bias
                 # story and bounds
-                result = _rebuild_ivfpq_locked(
+                result = rebuild_ivfpq_index(
                     spark, path, rebuild_to, raw_vecs=raw_vecs,
                     vec_col=vec_col,
                 )
@@ -689,11 +686,6 @@ def maintain_index(
                     "drifted layout"
                 )
             elif execute and rebuild_to is not None and family == "ivf":
-                from readwise_vector_db_spark.operators.similarity import (
-                    build_ivf_index,
-                    save_ivf_index,
-                )
-
                 # `assigned`/`centroids` are still valid from the
                 # measurement branch — nothing has written to `path`
                 # since (second review: the reload paid a duplicate
@@ -750,30 +742,21 @@ def maintain_index(
             action = "recluster"
             measurements["drift_hint"] = drifted_vecs is not None
             if execute:
-                if family == "ivfpq":
-                    result = _recluster_cells_locked(
-                        spark, path, drifted_vecs, drifted, policy.n_splits,
-                        policy.drift_ratio_max, vec_col,
-                        policy.min_cell_rows, 4_000, 7,
-                    )
-                else:
-                    from readwise_vector_db_spark.operators.similarity import (
-                        _recluster_ivf_cells_locked,
-                    )
-
-                    result = _recluster_ivf_cells_locked(
-                        spark, path, drifted_vecs, drifted, policy.n_splits,
-                        policy.drift_ratio_max, vec_col,
-                        policy.min_cell_rows, 4_000, 7,
-                    )
+                recluster = (
+                    recluster_cells if family == "ivfpq" else recluster_ivf_cells
+                )
+                result = recluster(
+                    spark, path, drifted_vecs=drifted_vecs, cells=drifted,
+                    n_splits=policy.n_splits,
+                    max_distortion_ratio=policy.drift_ratio_max,
+                    vec_col=vec_col, min_cell_rows=policy.min_cell_rows,
+                )
                 executed = True
         elif tomb_frac > policy.tombstone_frac_max:
             action = "compact"
             if execute:
                 result = {
-                    "rows_surviving": _compact_index_locked(
-                        spark, path, None, subdir
-                    )
+                    "rows_surviving": compact_index(spark, path, subdir=subdir)
                 }
                 executed = True
         else:

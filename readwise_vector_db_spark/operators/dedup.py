@@ -92,7 +92,7 @@ class _same_generation:
         return False
 
 
-def _begin_detector_call() -> None:
+def begin_detector_call() -> None:
     """Entry hook for every detector / rescored-join / batch call:
     advance the generation and drain entries ≥ _KEEP_GENERATIONS old.
     No-op inside a :class:`_same_generation` block (nested composition)."""
@@ -111,7 +111,7 @@ def _begin_detector_call() -> None:
             pass
 
 
-def _register_cached(*frames: DataFrame) -> None:
+def register_cached(*frames: DataFrame) -> None:
     with _CACHED_FRAMES_LOCK:
         _CACHED_FRAMES.extend((_CACHE_GENERATION, f) for f in frames)
 
@@ -318,7 +318,7 @@ def _exact_group_fanout(
     instead of being rediscovered through an inverted index or banded
     signatures.
     """
-    _begin_detector_call()
+    begin_detector_call()
     ids = docs.select(
         F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("_gfp")
     ).persist()
@@ -370,7 +370,7 @@ def _exact_group_fanout(
     )
     with _same_generation():
         rep_pairs = inner(reps)
-    _register_cached(ids, groups, members)
+    register_cached(ids, groups, members)
     ga = members.select(F.col("gid").alias("id_a"), F.col("id").alias("_ma"))
     gb = members.select(F.col("gid").alias("id_b"), F.col("id").alias("_mb"))
     cross = (
@@ -480,7 +480,7 @@ def ngram_jaccard_pairs(
             ),
         )
 
-    _begin_detector_call()
+    begin_detector_call()
     raw = docs.select(
         F.col(id_col).alias("id"), F.explode(word_shingles(text_col, k)).alias("shingle")
     )
@@ -504,7 +504,7 @@ def ngram_jaccard_pairs(
         # persist so the scan+shingle+hash pass runs once, not twice
         # (MEMORY_AND_DISK: at 100 TB this spills instead of evicting)
         raw = raw.persist()
-        _register_cached(raw)
+        register_cached(raw)
         freq = raw.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         joined = raw.join(freq, "shingle")
         tbl = (
@@ -534,7 +534,7 @@ def ngram_jaccard_pairs(
             .drop("arr")
             .persist()
         )
-        _register_cached(sh)
+        register_cached(sh)
         ex = sh.select("id", "n_sh", F.explode("pref").alias("shingle"))
     else:
         # per-doc distinct shingle sets (collect_set also merges hash
@@ -548,7 +548,7 @@ def ngram_jaccard_pairs(
             .filter(F.col("n_sh") > 0)
             .persist()
         )
-        _register_cached(sh)
+        register_cached(sh)
         ex = sh.select("id", "n_sh", F.explode("sh").alias("shingle"))
 
         if df_max is not None:
@@ -557,7 +557,7 @@ def ngram_jaccard_pairs(
             # without a persist the df-count + join chain runs twice —
             # the static plan showed zero exchange reuse.
             ex = ex.join(freq, "shingle").filter(F.col("df") <= df_max).persist()
-            _register_cached(ex)
+            register_cached(ex)
 
     a, b = ex.alias("a"), ex.alias("b")
     # length filter: J(A,B) ≤ min/max of sizes, so J ≥ t ⇒ na ≥ t·nb (wlog);
@@ -756,9 +756,9 @@ def minhash_lsh_pairs(
     # self-join AND the verification join — without it the shingle+64-min
     # aggregation (the expensive stage) runs twice.  At 100 TB this is a
     # materialized parquet intermediate, not executor cache.
-    _begin_detector_call()
+    begin_detector_call()
     sigs = minhash_signatures(docs, k, id_col, text_col, base_hash).persist()
-    _register_cached(sigs)
+    register_cached(sigs)
     bands = sigs.select(
         "id", "sig", F.posexplode(band_keys("sig")).alias("band", "bh")
     )
@@ -877,9 +877,9 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3, id_col: str = "doc_id",
     chunk_mask = (1 << chunk_w) - 1
     # persist: fingerprints feed both sides of the chunk self-join and the
     # final hamming verification — the 60-bit-sum aggregation runs once
-    _begin_detector_call()
+    begin_detector_call()
     fps = simhash_fingerprints(docs, id_col, text_col, base_hash).persist()
-    _register_cached(fps)
+    register_cached(fps)
     chunk_structs = [
         F.struct(
             F.lit(j).alias("chunk"),
@@ -1040,7 +1040,7 @@ def lsh_embedding_pairs(
     elif n_projections is None:
         n_projections, _ = e2lsh_plan(threshold, bucket_length, target_recall)
 
-    _begin_detector_call()
+    begin_detector_call()
     rng = random.Random(seed)
     dim_row = embs.select(F.size(F.col(vec_col)).alias("d")).filter(
         F.col("d") > 0
@@ -1066,7 +1066,7 @@ def lsh_embedding_pairs(
         .filter(F.col("nv").isNotNull())
         .persist()
     )
-    _register_cached(base)
+    register_cached(base)
 
     # All tables×projections built as ONE JVM-parsed expr — the Column
     # API inlined tables·k·dim F.lit weights (1 152 py4j round-trips at
@@ -1098,7 +1098,7 @@ def lsh_embedding_pairs(
         "id",
         F.posexplode(F.expr(f"array({tables_sql})")).alias("table", "bucket"),
     ).persist()
-    _register_cached(hashed)
+    register_cached(hashed)
     a = hashed.select("table", "bucket", F.col("id").alias("id_a"))
     b = hashed.select("table", "bucket", F.col("id").alias("id_b"))
     cands = (
@@ -1208,7 +1208,7 @@ def _vector_group_fanout(
         members.filter(F.col("id") == F.col("gid")).select("id"), "id", "left_semi"
     )
     rep_pairs = inner(reps, n_groups)
-    _register_cached(keyed, groups, members)
+    register_cached(keyed, groups, members)
     ga = members.select(F.col("gid").alias("id_a"), F.col("id").alias("_ma"))
     gb = members.select(F.col("gid").alias("id_b"), F.col("id").alias("_mb"))
     cross = (
@@ -1390,7 +1390,7 @@ def _within_cell_candidates_blas(
     # dedup_semantic_probe 1.7 → 3.3 s before this cache).  Tracked in
     # the detector cache registry, drained on the next detector call.
     narrow = assigned.select("id", "v", "cluster").persist()
-    _register_cached(narrow)
+    register_cached(narrow)
     counts = {
         r["cluster"]: int(r["c"])
         for r in narrow.groupBy("cluster").agg(F.count("*").alias("c")).collect()
@@ -1505,7 +1505,7 @@ def semantic_dedup_pairs(
         build_ivf_index,
     )
 
-    _begin_detector_call()
+    begin_detector_call()
     base0 = embs.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).filter(F.col("v").isNotNull())
@@ -1638,7 +1638,7 @@ def semantic_dedup(
         losers = losers.join(
             mapping.withColumnRenamed("nid", "id"), "id"
         ).select(F.col("oid").alias(id_col))
-        _register_cached(mapping)
+        register_cached(mapping)
     else:
         losers = losers.select(F.col("id").alias(id_col))
     return embs.join(losers, id_col, "left_anti")
@@ -1722,7 +1722,7 @@ def repeated_ngram_spans(
     # the detector-cache registry drains it with every other dedup
     # cache between bench reps.
     hashed = hashed.persist()
-    _register_cached(hashed)
+    register_cached(hashed)
     hot = (
         hashed.groupBy("h")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -1780,7 +1780,7 @@ def repeated_ngram_spans(
     # (persist default) spills rather than OOMs, and the detector-cache
     # registry releases it with every other dedup cache.
     spans = spans.persist()
-    _register_cached(spans)
+    register_cached(spans)
     exact = (
         spans.groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))

@@ -32,6 +32,7 @@ vectors) — north-star scope, SURVEY §2.7.
 
 from __future__ import annotations
 
+import os as _os
 import threading
 from collections import OrderedDict
 from typing import Iterator, Sequence
@@ -45,6 +46,8 @@ from pyspark.sql import types as T
 from readwise_vector_db_spark import storage as _storage
 from readwise_vector_db_spark.layout import check_layout as _check_layout
 from readwise_vector_db_spark.layout import stamp_layout as _stamp_layout
+from readwise_vector_db_spark.operators import index_lifecycle as _lifecycle
+from readwise_vector_db_spark.session import env_int as _env_int
 
 # Max candidate-union size pushed into the batched rescore scan as an
 # IN literal (round 13 — r12 residue item 2).  Below this, the literal
@@ -53,131 +56,7 @@ from readwise_vector_db_spark.layout import stamp_layout as _stamp_layout
 # broadcast candidate join (which already bounds the rows exactly)
 # carries the restriction alone.  Serving fan-in (nq·k·rescore_factor)
 # sits far below the default; env-tunable for offline batch callers.
-import os as _os
-
-ISIN_PUSHDOWN_MAX_IDS = int(
-    _os.environ.get("SPARK_GRAFT_ISIN_PUSHDOWN_MAX_IDS", "8192")
-)
-
-
-def _kmeans_np(
-    x: np.ndarray, k: int, iters: int, seed: int, init: np.ndarray | None = None
-) -> np.ndarray:
-    """Deterministic Lloyd's k-means (numpy): k centroids of x.
-    ``init`` warm-starts from given centroids (the OPQ alternation
-    refreshes codebooks incrementally instead of re-seeding)."""
-    rng = np.random.RandomState(seed)
-    n = x.shape[0]
-    if init is not None:
-        cents = init.copy()
-        for _ in range(iters):
-            d2 = ((x**2).sum(1)[:, None] - 2 * x @ cents.T + (cents**2).sum(1)[None, :])
-            assign = d2.argmin(1)
-            for j in range(k):
-                mask = assign == j
-                if mask.any():
-                    cents[j] = x[mask].mean(0)
-        return cents
-    if n <= k:
-        # degenerate: every point its own centroid, pad by repeating
-        reps = x[rng.choice(n, size=k, replace=True)]
-        reps[: min(n, k)] = x[: min(n, k)]
-        return reps
-    cents = x[rng.choice(n, size=k, replace=False)]
-    for _ in range(iters):
-        # (n, k) distances via the expansion trick; argmin per row
-        d2 = ((x**2).sum(1)[:, None] - 2 * x @ cents.T + (cents**2).sum(1)[None, :])
-        assign = d2.argmin(1)
-        for j in range(k):
-            mask = assign == j
-            if mask.any():
-                cents[j] = x[mask].mean(0)
-    return cents
-
-
-def _uniform_vector_sample(
-    vecs: DataFrame,
-    vec_col: str,
-    sample_rows: int,
-    seed: int,
-    with_total: bool = False,
-):
-    """Uniform sample (without replacement) of a vector column in a
-    SINGLE map-only pass — the bottom-k sketch shared by
-    :func:`train_pq_codebooks` and :func:`coarse_distortion`.  Each row
-    draws a U(0,1) key from a partition-seeded RNG and each partition
-    keeps its bottom-``quota`` keys (globally, the rows with the
-    smallest keys ARE a uniform sample without replacement); the driver
-    trims to the global bottom ``sample_rows``.  The per-partition
-    quota carries 2.5× slack over the balanced share; fixed-width
-    vector tables under ``maxPartitionBytes`` splitting are
-    row-balanced, so the sketch loses nothing.  NOT ``limit()`` (and
-    not ``sample(fraction).limit()``): limit takes the first partitions
-    — a spatially biased slice (one ingest epoch, one source).
-
-    ``with_total=True`` returns ``(sample, total_rows)`` — each
-    partition also emits its non-null row count in the SAME pass, so
-    callers needing the population size (e.g. the rescore-factor
-    probe's corpus/sample scaling) pay no extra scan."""
-    live = vecs.select(F.col(vec_col).cast("array<float>").alias("v")).filter(
-        F.col("v").isNotNull()
-    )
-    # Partition count from the UNFILTERED input (r9): a filtered plan's
-    # RDD partition count can diverge from the scan's under AQE.  This
-    # deliberately stays the plan's ACTUAL count, not an upper bound
-    # like defaultParallelism: quota must be ≥ 2.5× the balanced share
-    # over the partitions that really run (2.5·S/actual) — dividing by
-    # a 32-way parallelism cap when the scan has 4 partitions keeps
-    # 4·(2.5·S/32) ≈ 0.3·S rows total and silently starves the sample.
-    # The .rdd conversion is one driver-side plan analysis immediately
-    # before a full scan job — noise against the job it sizes.
-    nparts = max(1, vecs.rdd.getNumPartitions())
-    quota = max(1, -(-int(2.5 * sample_rows) // nparts))
-
-    def bottomk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rng = None
-        kept_k: np.ndarray | None = None
-        kept_v: list | None = None
-        seen = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            seen += len(pdf)
-            if rng is None:
-                rng = np.random.default_rng(
-                    seed * 1_000_003 + int(pdf["pid"].iloc[0])
-                )
-            keys = rng.random(len(pdf))
-            if kept_k is None:
-                kk, kv = keys, list(pdf["v"])
-            else:
-                kk = np.concatenate([kept_k, keys])
-                kv = kept_v + list(pdf["v"])
-            if len(kk) > quota:
-                sel = np.argpartition(kk, quota - 1)[:quota]
-                kept_k, kept_v = kk[sel], [kv[i] for i in sel]
-            else:
-                kept_k, kept_v = kk, kv
-        if kept_k is not None:
-            # summary row (k=2.0 > any U(0,1) key — never in the bottom-k)
-            yield pd.DataFrame(
-                {
-                    "k": list(kept_k.astype(float)) + [2.0],
-                    "v": kept_v + [None],
-                    "cnt": [0] * len(kept_v) + [seen],
-                }
-            )
-
-    rows = (
-        live.withColumn("pid", F.spark_partition_id())
-        .mapInPandas(bottomk, schema="k double, v array<float>, cnt long")
-        .collect()
-    )
-    total = sum(r["cnt"] for r in rows)
-    rows = [r for r in rows if r["v"] is not None]
-    rows.sort(key=lambda r: r["k"])  # global bottom-k = the uniform sample
-    sample = [r["v"] for r in rows[:sample_rows]]
-    return (sample, total) if with_total else sample
+ISIN_PUSHDOWN_MAX_IDS = _env_int("SPARK_GRAFT_ISIN_PUSHDOWN_MAX_IDS", 8192)
 
 
 def train_pq_codebooks(
@@ -196,9 +75,9 @@ def train_pq_codebooks(
     k·d floats, broadcastable anywhere.
 
     Sampling is a SINGLE map-only pass via the bottom-k sketch
-    (:func:`_uniform_vector_sample`) — no ``count()`` pre-pass, no
+    (``index_lifecycle.uniform_vector_sample``) — no ``count()`` pre-pass, no
     first-partitions bias."""
-    sample = _uniform_vector_sample(vecs, vec_col, sample_rows, seed)
+    sample = _lifecycle.uniform_vector_sample(vecs, vec_col, sample_rows, seed)
     x = np.asarray(sample, dtype=np.float32)
     if x.ndim != 2 or x.shape[0] == 0:
         raise ValueError("train_pq_codebooks needs a non-empty vector column")
@@ -208,7 +87,7 @@ def train_pq_codebooks(
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     sub = d // m
     return [
-        _kmeans_np(
+        _lifecycle.kmeans_np(
             np.ascontiguousarray(x[:, j * sub : (j + 1) * sub], dtype=np.float64),
             k,
             iters,
@@ -252,7 +131,7 @@ def train_opq(
     :func:`train_pq_codebooks` (model fitting is sample-bounded; the
     corpus pass stays one vectorized encode).  Cost at 3072-d/20 k rows:
     the XᵀY gemm + d×d SVD per alternation — seconds, offline."""
-    sample = _uniform_vector_sample(vecs, vec_col, sample_rows, seed)
+    sample = _lifecycle.uniform_vector_sample(vecs, vec_col, sample_rows, seed)
     x = np.asarray(sample, dtype=np.float64)
     if x.ndim != 2 or x.shape[0] == 0:
         raise ValueError("train_opq needs a non-empty vector column")
@@ -266,7 +145,7 @@ def train_opq(
     for _ in range(max(1, opq_iters)):
         xr = x @ rot
         books = [
-            _kmeans_np(
+            _lifecycle.kmeans_np(
                 np.ascontiguousarray(xr[:, j * sub : (j + 1) * sub]),
                 k,
                 inner_iters,
@@ -285,7 +164,7 @@ def train_opq(
     # final polish: full Lloyd budget on the converged rotation
     xr = x @ rot
     books = [
-        _kmeans_np(
+        _lifecycle.kmeans_np(
             np.ascontiguousarray(xr[:, j * sub : (j + 1) * sub]),
             k,
             iters,
@@ -359,7 +238,7 @@ def estimate_rescore_factor(
     per trained model, next to the training job."""
     if not 0 < target_recall <= 1:
         raise ValueError("target_recall must be in (0, 1]")
-    sample, total = _uniform_vector_sample(
+    sample, total = _lifecycle.uniform_vector_sample(
         vecs, vec_col, sample_corpus, seed, with_total=True
     )
     x = np.asarray(sample, dtype=np.float64)
@@ -495,7 +374,6 @@ def _prime_persisted_rf(path: str) -> None:
     process-level persisted-rf store — called by the index loaders so a
     loaded layout serves ``rescore_factor="auto"`` without a probe."""
     import json as _json
-    import os as _os
 
     fp_path = f"{path}/rescore.json"
     if not _os.path.isfile(fp_path):
@@ -772,182 +650,11 @@ def load_rotation(spark, path: str) -> np.ndarray | None:
     """The OPQ rotation saved by :func:`save_rotation`, or None when the
     layout was built without one (plain PQ) — callers pass the result
     straight to the ``rotation=`` params."""
-    import os as _os
-
     if not _os.path.isdir(f"{path}/rotation"):
         return None
     rows = spark.read.parquet(f"{path}/rotation").collect()
     ordered = sorted((r["row_idx"], r["vec"]) for r in rows)
     return np.asarray([v for _, v in ordered], dtype=np.float32)
-
-
-def delete_from_index(spark, path: str, ids, id_col: str = "vec_id") -> int:
-    """Tombstone-delete ids from a :func:`save_pq_index` /
-    :func:`save_ivfpq_index` layout (round 9 — the right-to-be-forgotten
-    path; deletes previously meant a full rebuild).  Two-phase, the
-    Delta/Iceberg delete-vector pattern re-expressed on plain parquet:
-
-    1. ``delete_from_index`` appends the ids to ``{path}/tombstones``
-       (one string column, O(delete) write) — every subsequent
-       ``load_*_index`` anti-joins the codes scan against the tombstone
-       set, so deleted ids stop serving IMMEDIATELY, with no touch of
-       the code files.
-    2. :func:`compact_index` physically rewrites the codes minus the
-       tombstones and clears the set — run it when the tombstone
-       fraction warrants (the bytes stay on disk until then — stated
-       honestly; the serving contract is step 1, the storage contract
-       is step 2).
-
-    ``ids`` is a list or a single-column DataFrame.  Returns the number
-    of tombstones written.  Catalyst auto-broadcasts the file-backed
-    tombstone set for the anti-join while compaction keeps it small
-    (the normal regime) and falls back to a shuffle join if a neglected
-    layout accumulates a broadcast-unsafe set — the codes scan's
-    partition pruning is unchanged either way."""
-    if isinstance(ids, DataFrame):
-        tomb = ids.select(F.col(ids.columns[0]).cast("string").alias(id_col))
-    else:
-        ids = list(ids)
-        tomb = spark.createDataFrame(
-            [(str(i),) for i in ids], f"{id_col} string"
-        )
-    n = tomb.count()
-    if n:
-        tomb.coalesce(1).write.mode("append").parquet(f"{path}/tombstones")
-    return n
-
-
-def _apply_tombstones(spark, path: str, codes: DataFrame) -> DataFrame:
-    """Anti-join a loaded codes frame against the layout's tombstone
-    set, if any — id compared as string so long/uuid ids both match."""
-    import os as _os
-
-    if not _os.path.isdir(f"{path}/tombstones") or not any(
-        files for _, _, files in _os.walk(f"{path}/tombstones")
-    ):
-        return codes
-    tomb = spark.read.parquet(f"{path}/tombstones").distinct()
-    tcol = tomb.columns[0]
-    if tcol not in codes.columns:
-        # Never guess a join key: anti-joining on an arbitrary column
-        # (a custom id_col, or a layout whose first column is cluster/
-        # embedding) matches nothing, so deleted ids would silently
-        # keep serving — defeating the delete contract.
-        raise ValueError(
-            f"tombstone column {tcol!r} not present in codes schema "
-            f"{codes.columns}; the layout at {path!r} was written with a "
-            "different id_col than its tombstones"
-        )
-    id_col = tcol
-    # no forced broadcast hint: the tombstone set is file-backed, so
-    # Catalyst auto-broadcasts while it's small (the normal regime,
-    # bounded by compaction cadence) and falls back to a shuffle join
-    # if a neglected layout accumulates a broadcast-unsafe set — slower
-    # probes then, never an executor OOM
-    return codes.join(
-        tomb,
-        codes[id_col].cast("string") == tomb[tcol],
-        "left_anti",
-    )
-
-
-def compact_index(
-    spark, path: str, partition_cluster: bool | None = None,
-    subdir: str = "codes", lease_wait: float = 0.0,
-) -> int:
-    """Physically remove tombstoned rows: rewrite ``{path}/codes`` minus
-    the tombstone set into a staging dir, swap it into place, then drop
-    exactly the tombstone FILES the rewrite consumed — a
-    ``delete_from_index`` landing mid-compaction keeps its tombstone
-    and still applies on the next load (no resurrection).  The swap is
-    two renames (POSIX has no atomic directory exchange); a crash
-    between them is self-healed by ``storage.recover_swap`` at the
-    next load or compaction (roll-forward to the counted stage), so
-    serving never regresses past one touch.  ``partition_cluster``
-    controls whether the rewrite keeps the IVF-PQ cluster partitioning
-    (auto-detected from the schema when None).  Returns surviving row
-    count.
-
-    Mutual exclusion is STRUCTURAL (round 11): the layout's maintenance
-    lease (``layout.maintenance_lease``) is held for the duration — a
-    concurrent compact/recluster/append refuses with
-    ``MaintenanceBusy`` (or waits up to its own ``lease_wait``), and a
-    crashed holder's lease is recovered by pid-liveness."""
-    from readwise_vector_db_spark.layout import maintenance_lease
-
-    with maintenance_lease(path, "compact", wait=lease_wait):
-        return _compact_index_locked(spark, path, partition_cluster, subdir)
-
-
-def _compact_index_locked(
-    spark, path: str, partition_cluster: bool | None, subdir: str
-) -> int:
-    import os as _os
-    import shutil as _shutil
-
-    _storage.recover_swap(path, subdir)
-    # an interrupted RESERVOIR purge must also self-heal BEFORE the
-    # tombstone accounting below (round-12 review): if the reservoir
-    # were left swapped-away, the purge block's isdir gate would skip
-    # it while the final loop still dropped the tombstone files —
-    # deleted ids' raw vectors retained forever and resurrectable
-    if subdir == "codes":
-        _storage.recover_swap(path, "reservoir")
-    # codes exists now and we are the single writer: aborted stage/old
-    # dirs from prior crashed runs (any pid) are garbage — clear them so
-    # they can never be mistaken for a committed stage later
-    _storage.clean_orphans(path, subdir)
-    # snapshot the tombstone files BEFORE the rewrite: only these are
-    # guaranteed applied by the stage job; later arrivals must survive
-    tomb_dir = f"{path}/tombstones"
-    pre_files: list[str] = []
-    if _os.path.isdir(tomb_dir):
-        for root, _, files in _os.walk(tomb_dir):
-            pre_files.extend(_os.path.join(root, fn) for fn in files)
-    codes = _apply_tombstones(spark, path, spark.read.parquet(f"{path}/{subdir}"))
-    if partition_cluster is None:
-        partition_cluster = "cluster" in codes.columns
-    stage_name = _storage.swap_stage_name(subdir)
-    stage = f"{path}/{stage_name}"
-    _shutil.rmtree(stage, ignore_errors=True)
-    w = codes.write.mode("overwrite")
-    if partition_cluster:
-        w = w.partitionBy("cluster")
-    w.parquet(stage)
-    n = spark.read.parquet(stage).count()
-    # commit the stage: recovery only ever rolls FORWARD to the stage
-    # named in the intent marker (see storage.recover_swap)
-    _storage.swap_dir(path, subdir, stage_name)
-    # Physically purge tombstoned rows from the raw-vector reservoir too
-    # (round 12) — the reservoir stores RAW vectors, so leaving deleted
-    # rows' bytes behind would break the right-to-be-forgotten contract
-    # compaction completes for the codes.  Runs BEFORE the tombstone
-    # files are dropped: a crash in between leaves the tombstones in
-    # place, so reservoir loads keep filtering and the next compaction
-    # finishes the purge — never a resurrection window.  Same staged
-    # double-rename as the codes swap (self-healed by
-    # storage.recover_swap via _load_reservoir).
-    if subdir == "codes" and _os.path.isdir(f"{path}/reservoir") and pre_files:
-        _storage.clean_orphans(path, "reservoir")
-        res_clean = _apply_tombstones(
-            spark, path, spark.read.parquet(f"{path}/reservoir")
-        )
-        rstage_name = _storage.swap_stage_name("reservoir")
-        res_clean.write.mode("overwrite").parquet(f"{path}/{rstage_name}")
-        meta_src = f"{path}/reservoir/_meta.json"
-        if _os.path.isfile(meta_src):
-            _shutil.copy(meta_src, f"{path}/{rstage_name}/_meta.json")
-        _storage.swap_dir(path, "reservoir", rstage_name)
-    for fp_ in pre_files:
-        try:
-            _os.remove(fp_)
-        except FileNotFoundError:
-            pass
-    try:
-        _os.rmdir(tomb_dir)  # only if no concurrent delete landed
-    except OSError:
-        pass
-    return int(n)
 
 
 def load_pq_index(spark, path: str) -> tuple[DataFrame, list[np.ndarray]]:
@@ -956,12 +663,12 @@ def load_pq_index(spark, path: str) -> tuple[DataFrame, list[np.ndarray]]:
     total); codes scan lazily.  A ``rescore.json`` sidecar (build-time
     sized auto-rf) primes the persisted-rf store — ``rescore_factor=
     "auto"`` over this layout then resolves without a sampling job.
-    Tombstoned ids (:func:`delete_from_index`) are excluded from the
-    returned scan."""
+    Tombstoned ids (``index_lifecycle.delete_from_index``) are excluded
+    from the returned scan."""
     _check_layout(path, "pq")
     _prime_persisted_rf(path)
     _storage.recover_swap(path, "codes")
-    codes = _apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
+    codes = _lifecycle.apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
     cb = spark.read.parquet(f"{path}/codebooks").collect()
     m = 1 + max(r["subspace"] for r in cb)
     books = []
@@ -1082,7 +789,7 @@ def coarse_distortion(
     i.e. exactly the ingest-epoch-biased cut this statistic must not be
     computed on (the drift baseline and the increment statistic would
     both see one source of a source-ordered corpus)."""
-    sample = _uniform_vector_sample(vecs, vec_col, int(sample_rows), seed)
+    sample = _lifecycle.uniform_vector_sample(vecs, vec_col, int(sample_rows), seed)
     if not sample:
         raise ValueError("coarse_distortion: no non-null vectors to sample")
     x = np.asarray([list(v) for v in sample], dtype=np.float64)
@@ -1301,8 +1008,6 @@ def _load_reservoir(spark, path: str) -> DataFrame | None:
     anti-join matters for more than sampling hygiene: a rebuild unions
     reservoir rows back into the corpus, so an unfiltered reservoir
     would RESURRECT deleted ids."""
-    import os as _os
-
     from pyspark.sql.window import Window
 
     rdir = f"{path}/reservoir"
@@ -1313,7 +1018,7 @@ def _load_reservoir(spark, path: str) -> DataFrame | None:
     per_cell = reservoir_per_cell(path)
     if per_cell is None or not _os.path.isdir(rdir):
         return None
-    df = _apply_tombstones(spark, path, spark.read.parquet(rdir))
+    df = _lifecycle.apply_tombstones(spark, path, spark.read.parquet(rdir))
     id_col = next(c for c in df.columns if c not in ("cluster", "w", "vec"))
     win = Window.partitionBy("cluster").orderBy(
         "w", F.col(id_col).cast("string")
@@ -1369,7 +1074,6 @@ def save_ivfpq_index(
     reservoir rows can be tombstone-filtered and exactly re-encoded at
     rebuild time."""
     import json as _json
-    import os as _os
 
     spark = codes.sparkSession
     codes.write.mode("overwrite").partitionBy("cluster").parquet(f"{path}/codes")
@@ -1401,10 +1105,7 @@ def save_ivfpq_index(
                 id_col, vec_col, seed=7, mode="overwrite",
             )
             _write_reservoir_meta(path, reservoir_per_cell, seed=7)
-    spark.createDataFrame(
-        [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-        "cluster int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _lifecycle.write_centroids(spark, centroids, path)
     rows = [
         (j, c, [float(x) for x in b[c]])
         for j, b in enumerate(codebooks)
@@ -1420,15 +1121,13 @@ def load_ivfpq_index(spark, path: str):
     """(codes, centroids, codebooks) from :func:`save_ivfpq_index`.
     Primes the persisted-rf store from ``{path}/rescore.json`` when the
     layout carries one (see :func:`load_pq_index`).  Tombstoned ids
-    (:func:`delete_from_index`) are excluded from the returned scan."""
+    (``index_lifecycle.delete_from_index``) are excluded from the
+    returned scan."""
     _check_layout(path, "ivfpq")
     _prime_persisted_rf(path)
     _storage.recover_swap(path, "codes")
-    codes = _apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
-    cent = spark.read.parquet(f"{path}/centroids").collect()
-    centroids = sorted(
-        (int(r["cluster"]), [float(x) for x in r["centroid"]]) for r in cent
-    )
+    codes = _lifecycle.apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
+    centroids = _lifecycle.read_centroids(spark, path)
     cb = spark.read.parquet(f"{path}/codebooks").collect()
     m = 1 + max(r["subspace"] for r in cb)
     books = []
@@ -1484,9 +1183,9 @@ def pq_knn_join(
     # persist out from under its unmaterialized plan; see dedup.py's
     # registry contract).  A process issuing only knn-joins still stays
     # bounded at the two newest calls' frames.
-    from readwise_vector_db_spark.operators.dedup import _begin_detector_call
+    from readwise_vector_db_spark.operators.dedup import begin_detector_call
 
-    _begin_detector_call()
+    begin_detector_call()
     m = len(codebooks)
     sub = codebooks[0].shape[1]
     q_rows = queries.select(query_id, query_vec).collect()
@@ -1598,10 +1297,10 @@ def pq_knn_join(
     # the unpersist point is the NEXT detector/join call (or an
     # explicit release_detector_cache()) — without this, every rescored
     # knn-join leaked an InMemoryRelation for the process lifetime.
-    from readwise_vector_db_spark.operators.dedup import _register_cached
+    from readwise_vector_db_spark.operators.dedup import register_cached
 
     shortlist = shortlist.persist()
-    _register_cached(shortlist)
+    register_cached(shortlist)
     cand_ids_df = F.broadcast(shortlist.select("neighbor_id").distinct())
     fetch_vecs = F.broadcast(
         rescore.join(
@@ -1738,112 +1437,99 @@ def append_to_ivfpq_index(
     structural (``lease_wait`` seconds of patience, then
     ``MaintenanceBusy``).
     """
+    import json as _json
+
     from readwise_vector_db_spark.layout import maintenance_lease
 
     with maintenance_lease(path, "append", wait=lease_wait):
-        return _append_to_ivfpq_index_locked(
-            new_vecs, path, id_col, vec_col, max_distortion_ratio, source_col
-        )
-
-
-def _append_to_ivfpq_index_locked(
-    new_vecs: DataFrame,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    max_distortion_ratio: float | None,
-    source_col: str | None,
-) -> int:
-    import json as _json
-
-    spark = new_vecs.sparkSession
-    _, centroids, books = load_ivfpq_index(spark, path)
-    if max_distortion_ratio is not None:
+        spark = new_vecs.sparkSession
+        _, centroids, books = load_ivfpq_index(spark, path)
+        if max_distortion_ratio is not None:
+            try:
+                with open(f"{path}/distortion.json") as f:
+                    base = float(_json.load(f)["base_coarse_distortion"])
+            except (FileNotFoundError, KeyError, ValueError):
+                base = None
+            if base is not None and base > 0:
+                if source_col is not None:
+                    # the gate consumes only the WORST group: ONE scalar
+                    # action folds max(struct(_d, _g)) (keeps the source
+                    # name for the error) together with the group count —
+                    # the cardinality guard coarse_distortion_by carries,
+                    # which a per-row source_col would otherwise silently
+                    # turn into worst-single-vector gating (r9 review
+                    # finding) — without shipping max_groups labeled rows
+                    # to the driver per append (r8 verdict nit)
+                    row = (
+                        grouped_distortion_frame(
+                            new_vecs, centroids, source_col, vec_col=vec_col
+                        )
+                        .agg(
+                            F.max(F.struct(F.col("_d"), F.col("_g"))).alias("w"),
+                            F.count(F.lit(1)).alias("n_groups"),
+                        )
+                        .first()
+                    )
+                    if row is None or row["w"] is None:
+                        raise ValueError(
+                            "append_to_ivfpq_index: no non-null vectors"
+                        )
+                    if row["n_groups"] > DRIFT_MAX_GROUPS:
+                        raise ValueError(
+                            f"append_to_ivfpq_index: more than "
+                            f"{DRIFT_MAX_GROUPS} distinct values in "
+                            f"{source_col!r} — group by a coarser source label"
+                        )
+                    inc = float(row["w"]["_d"])
+                    what = f"source {row['w']['_g']!r}"
+                else:
+                    inc = coarse_distortion(new_vecs, centroids, vec_col=vec_col)
+                    what = "increment"
+                if inc / base > max_distortion_ratio:
+                    raise ValueError(
+                        f"append_to_ivfpq_index: {what} coarse distortion "
+                        f"{inc:.4f} is {inc / base:.1f}x the train-time "
+                        f"{base:.4f} (limit {max_distortion_ratio}x) — the "
+                        "frozen model is stale for this source; remediate the "
+                        "offending cells with recluster_cells(spark, path, "
+                        "drifted_vecs=...) and retry, retrain the index, or "
+                        "pass max_distortion_ratio=None to force"
+                    )
+        # persist: count + write are two actions — uncached they would each
+        # run the encode pass, doubling the increment's cost.  The layout's
+        # OPQ rotation (if any) rides along: increment codes must live in
+        # the same rotated frame as the base codes.
+        codes = ivfpq_encode(
+            new_vecs,
+            centroids,
+            books,
+            id_col=id_col,
+            vec_col=vec_col,
+            rotation=load_rotation(spark, path),
+        ).persist()
         try:
-            with open(f"{path}/distortion.json") as f:
-                base = float(_json.load(f)["base_coarse_distortion"])
-        except (FileNotFoundError, KeyError, ValueError):
-            base = None
-        if base is not None and base > 0:
-            if source_col is not None:
-                # the gate consumes only the WORST group: ONE scalar
-                # action folds max(struct(_d, _g)) (keeps the source
-                # name for the error) together with the group count —
-                # the cardinality guard coarse_distortion_by carries,
-                # which a per-row source_col would otherwise silently
-                # turn into worst-single-vector gating (r9 review
-                # finding) — without shipping max_groups labeled rows
-                # to the driver per append (r8 verdict nit)
-                row = (
-                    grouped_distortion_frame(
-                        new_vecs, centroids, source_col, vec_col=vec_col
-                    )
-                    .agg(
-                        F.max(F.struct(F.col("_d"), F.col("_g"))).alias("w"),
-                        F.count(F.lit(1)).alias("n_groups"),
-                    )
-                    .first()
-                )
-                if row is None or row["w"] is None:
-                    raise ValueError(
-                        "append_to_ivfpq_index: no non-null vectors"
-                    )
-                if row["n_groups"] > DRIFT_MAX_GROUPS:
-                    raise ValueError(
-                        f"append_to_ivfpq_index: more than "
-                        f"{DRIFT_MAX_GROUPS} distinct values in "
-                        f"{source_col!r} — group by a coarser source label"
-                    )
-                inc = float(row["w"]["_d"])
-                what = f"source {row['w']['_g']!r}"
-            else:
-                inc = coarse_distortion(new_vecs, centroids, vec_col=vec_col)
-                what = "increment"
-            if inc / base > max_distortion_ratio:
-                raise ValueError(
-                    f"append_to_ivfpq_index: {what} coarse distortion "
-                    f"{inc:.4f} is {inc / base:.1f}x the train-time "
-                    f"{base:.4f} (limit {max_distortion_ratio}x) — the "
-                    "frozen model is stale for this source; remediate the "
-                    "offending cells with recluster_cells(spark, path, "
-                    "drifted_vecs=...) and retry, retrain the index, or "
-                    "pass max_distortion_ratio=None to force"
-                )
-    # persist: count + write are two actions — uncached they would each
-    # run the encode pass, doubling the increment's cost.  The layout's
-    # OPQ rotation (if any) rides along: increment codes must live in
-    # the same rotated frame as the base codes.
-    codes = ivfpq_encode(
-        new_vecs,
-        centroids,
-        books,
-        id_col=id_col,
-        vec_col=vec_col,
-        rotation=load_rotation(spark, path),
-    ).persist()
-    try:
-        n = codes.count()
-        codes.write.mode("append").partitionBy("cluster").parquet(f"{path}/codes")
-    finally:
-        codes.unpersist()
-    # Reservoir capture AFTER the codes land (a crash between them only
-    # under-samples; the reverse order could put ids in the reservoir
-    # that never reached the index, which a rebuild would then INVENT).
-    # Capturing the increment RAW is what keeps a later rebuild
-    # unbiased on exactly the drifted mass the frozen model mis-codes —
-    # the whole point of the reservoir (see _capture_reservoir).  A
-    # fresh nonce seed decorrelates this event's keys from the build's.
-    per_cell = reservoir_per_cell(path)
-    if per_cell:
-        import time as _time
+            n = codes.count()
+            codes.write.mode("append").partitionBy("cluster").parquet(f"{path}/codes")
+        finally:
+            codes.unpersist()
+        # Reservoir capture AFTER the codes land (a crash between them only
+        # under-samples; the reverse order could put ids in the reservoir
+        # that never reached the index, which a rebuild would then INVENT).
+        # Capturing the increment RAW is what keeps a later rebuild
+        # unbiased on exactly the drifted mass the frozen model mis-codes —
+        # the whole point of the reservoir (see _capture_reservoir).  A
+        # fresh nonce seed decorrelates this event's keys from the build's.
+        per_cell = reservoir_per_cell(path)
+        if per_cell:
+            import time as _time
 
-        _capture_reservoir(
-            new_vecs, centroids, path, per_cell, id_col, vec_col,
-            seed=(_time.time_ns() ^ (id(new_vecs) << 16)) & 0x7FFFFFFF,
-            mode="append",
-        )
-    _refresh_persisted_rf(path, n)
-    return n
+            _capture_reservoir(
+                new_vecs, centroids, path, per_cell, id_col, vec_col,
+                seed=(_time.time_ns() ^ (id(new_vecs) << 16)) & 0x7FFFFFFF,
+                mode="append",
+            )
+        _refresh_persisted_rf(path, n)
+        return n
 
 
 def _refresh_persisted_rf(path: str, appended_rows: int) -> None:
@@ -1857,7 +1543,6 @@ def _refresh_persisted_rf(path: str, appended_rows: int) -> None:
     store re-primes so an appending process that also serves sees the
     new numbers immediately."""
     import json as _json
-    import os as _os
 
     fp_path = f"{path}/rescore.json"
     if not _os.path.isfile(fp_path) or appended_rows <= 0:
@@ -1886,48 +1571,6 @@ def _refresh_persisted_rf(path: str, appended_rows: int) -> None:
     }
     _save_rescore_json(path, rec)
     _prime_persisted_rf(path)
-
-
-def cell_distortion_frame(
-    vecs: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(cluster, n, mean_dist) per ASSIGNED coarse cell — the
-    cell-granular twin of :func:`grouped_distortion_frame`: one
-    vectorized map pass (assignment + distance share the same gemm)
-    plus one tiny shuffle of (cell, partials).  This is the statistic
-    :func:`recluster_cells` localizes drift with: not "the increment is
-    drifted" but "cells 3 and 17 are where the drifted mass lands"."""
-    ordered = sorted(centroids)
-    cell_ids = np.asarray([int(c) for c, _ in ordered], dtype=np.int64)
-    c = np.asarray([v for _, v in ordered], dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-
-    schema = "cluster int, _cd double"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.asarray(list(pdf["_v"]), dtype=np.float64)
-            # assignment on the RAW vector (ivfpq_encode semantics)
-            cells = cell_ids[
-                np.argmin((c * c).sum(1)[None, :] - 2.0 * (raw @ c.T), 1)
-            ]
-            xn = raw / np.maximum(
-                np.linalg.norm(raw, axis=1, keepdims=True), 1e-12
-            )
-            d = 1.0 - (xn @ cn.T).max(axis=1)
-            yield pd.DataFrame({"cluster": cells.astype(np.int32), "_cd": d})
-
-    return (
-        vecs.select(F.col(vec_col).cast("array<float>").alias("_v"))
-        .filter(F.col("_v").isNotNull())
-        .mapInPandas(run, schema=schema)
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"), F.avg("_cd").alias("mean_dist"))
-    )
 
 
 def pq_reconstruct(
@@ -1972,16 +1615,14 @@ def recluster_cells(
     space — from the rows' own PQ reconstructions — preserve probe
     semantics without ever reading raw vectors of the existing corpus.
 
-    Offending cells: explicit ``cells=``, or located from
-    ``drifted_vecs`` via :func:`cell_distortion_frame` — the cells
-    where the drifted increment's mean distortion exceeds
-    ``max_distortion_ratio`` × the train-time base (and at least
-    ``min_cell_rows`` drifted rows land).  Each offending cell is
-    k-means-split into ``n_splits`` sub-centroids trained on a bounded
-    union sample of the cell's existing reconstructions and the drifted
-    rows assigned there; the first sub-centroid REUSES the old cell id
-    (so dynamic partition overwrite replaces that directory), the rest
-    take fresh ids past the current max.
+    This passes the family codec to ``index_lifecycle.recluster``
+    (which documents how offending cells are located, split and
+    rewritten): data in ``{path}/codes``; the drift baseline is the train-time coarse
+    distortion in ``distortion.json``; existing rows decode through
+    :func:`pq_reconstruct`; sub-centroids train in the normalized space
+    and each is rescaled to the cell's raw norm — the drifted rows' mean
+    raw norm when any land there, else the old centroid's norm — since
+    encode-side assignment is raw-euclidean.
 
     Returns stats including ``rows_rewritten`` and
     ``bytes_rewritten`` / ``bytes_total`` — the ≪-full-rebuild record.
@@ -1989,243 +1630,38 @@ def recluster_cells(
     (round 11): the layout's maintenance lease is held throughout —
     a concurrent maintainer refuses with ``MaintenanceBusy`` or waits
     ``lease_wait`` seconds; a crashed holder is pid-liveness-recovered."""
-    from readwise_vector_db_spark.layout import maintenance_lease
 
-    with maintenance_lease(path, "recluster", wait=lease_wait):
-        return _recluster_cells_locked(
-            spark, path, drifted_vecs, cells, n_splits, max_distortion_ratio,
-            vec_col, min_cell_rows, sample_per_cell, seed,
-        )
+    def load(spark, path):
+        codes, centroids, books = load_ivfpq_index(spark, path)
+        rotation = load_rotation(spark, path)
 
+        def decode(vals) -> np.ndarray:
+            return pq_reconstruct(
+                np.asarray(list(vals), dtype=np.int64), books, rotation
+            )
 
-def _recluster_cells_locked(
-    spark,
-    path: str,
-    drifted_vecs: DataFrame | None,
-    cells: Sequence[int] | None,
-    n_splits: int,
-    max_distortion_ratio: float,
-    vec_col: str,
-    min_cell_rows: int,
-    sample_per_cell: int,
-    seed: int,
-) -> dict:
-    import json as _json
-    import os as _os
-    import shutil as _shutil
+        return codes, centroids, decode
 
-    codes_all, centroids, books = load_ivfpq_index(spark, path)
-    rotation = load_rotation(spark, path)
-    cent_by_id = {int(c): list(map(float, v)) for c, v in centroids}
+    def baseline(spark, path, codes, centroids) -> float:
+        import json as _json
 
-    # --- locate the offending cells --------------------------------------
-    drift_sample: dict[int, np.ndarray] = {}
-    drift_scale: dict[int, float] = {}
-    if cells is None:
-        if drifted_vecs is None:
-            raise ValueError("recluster_cells: pass drifted_vecs or cells")
         try:
             with open(f"{path}/distortion.json") as f:
-                base = float(_json.load(f)["base_coarse_distortion"])
+                return float(_json.load(f)["base_coarse_distortion"])
         except (FileNotFoundError, KeyError, ValueError):
             raise ValueError(
                 "recluster_cells: layout has no distortion.json baseline "
                 "(built without base_vecs=) — pass cells= explicitly"
             )
-        rows = cell_distortion_frame(
-            drifted_vecs, centroids, vec_col=vec_col
-        ).collect()
-        cells = [
-            int(r["cluster"])
-            for r in rows
-            if r["n"] >= min_cell_rows
-            and base > 0
-            and float(r["mean_dist"]) / base > max_distortion_ratio
-        ]
-        if not cells:
-            return {
-                "cells_split": [],
-                "new_cells": [],
-                "rows_rewritten": 0,
-                "bytes_rewritten": 0,
-                "bytes_total": _dir_bytes(f"{path}/codes"),
-            }
-    cells = sorted(set(int(c) for c in cells))
-    unknown = [c for c in cells if c not in cent_by_id]
-    if unknown:
-        raise ValueError(f"recluster_cells: unknown cell ids {unknown}")
 
-    if drifted_vecs is not None:
-        # bounded uniform sample of the drifted rows, assigned driver-side
-        # — the same serving-bounded pattern as coarse_distortion
-        samp = _uniform_vector_sample(
-            drifted_vecs, vec_col, sample_per_cell * max(1, len(cells)), seed
-        )
-        if samp:
-            x = np.asarray([list(v) for v in samp], dtype=np.float64)
-            cmat = np.asarray(
-                [cent_by_id[c] for c in sorted(cent_by_id)], dtype=np.float64
-            )
-            ids_sorted = np.asarray(sorted(cent_by_id), dtype=np.int64)
-            assign = ids_sorted[
-                np.argmin((cmat * cmat).sum(1)[None, :] - 2.0 * (x @ cmat.T), 1)
-            ]
-            raw_norms = np.maximum(np.linalg.norm(x, axis=1), 1e-12)
-            xn = x / raw_norms[:, None]
-            for c in cells:
-                mask = assign == c
-                if mask.any():
-                    drift_sample[c] = xn[mask][:sample_per_cell]
-                    drift_scale[c] = float(raw_norms[mask].mean())
-
-    # --- per-cell counts + existing-row samples (partition-pruned) -------
-    counts = {
-        int(r["cluster"]): int(r["n"])
-        for r in codes_all.filter(F.col("cluster").isin(cells))
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    frac_map = []
-    for c in cells:
-        n = counts.get(c, 0)
-        frac_map.extend([F.lit(c), F.lit(min(1.0, sample_per_cell / max(1, n)))])
-    sample_rows = (
-        codes_all.filter(F.col("cluster").isin(cells))
-        .withColumn("_f", F.element_at(F.create_map(*frac_map), F.col("cluster")))
-        .filter(F.rand(seed) < F.col("_f"))
-        .select("cluster", "pq_code")
-        .collect()
+    codec = _lifecycle.CellCodec(
+        "recluster_cells", "codes", "pq_code", True, load, baseline
     )
-    existing_sample: dict[int, np.ndarray] = {}
-    for c in cells:
-        rows_c = [r["pq_code"] for r in sample_rows if r["cluster"] == c]
-        if rows_c:
-            existing_sample[c] = pq_reconstruct(
-                np.asarray(rows_c, dtype=np.int64), books, rotation
-            )
-
-    # --- train the splits -------------------------------------------------
-    next_id = max(cent_by_id) + 1
-    split_cents: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    new_cells: list[int] = []
-    for c in cells:
-        parts = [a for a in (existing_sample.get(c), drift_sample.get(c))
-                 if a is not None and len(a)]
-        if not parts:
-            continue
-        x = np.concatenate(parts, axis=0)
-        k = min(n_splits, len(x))
-        sub = _kmeans_np(x, k, iters=10, seed=seed)
-        # The training sample is NORMALIZED (reconstructions live in the
-        # space ADC scores), but encode-side assignment is raw-euclidean
-        # against centroids at the corpus's RAW scale — a unit-norm
-        # sub-centroid next to norm-‖μ‖ originals would skew every
-        # cross-centroid distance.  Rescale each sub-centroid to the
-        # raw scale observed in the cell: the drifted rows' mean raw
-        # norm when we have it, else the original centroid's own norm
-        # (a k-means centroid is the mean of its raw rows).
-        if c in drift_scale:
-            s = drift_scale[c]
-        else:
-            s = float(np.linalg.norm(np.asarray(cent_by_id[c])))
-        norms = np.maximum(np.linalg.norm(sub, axis=1, keepdims=True), 1e-12)
-        sub = sub / norms * s
-        ids = np.asarray([c] + list(range(next_id, next_id + k - 1)), dtype=np.int64)
-        next_id += k - 1
-        new_cells.extend(int(i) for i in ids[1:])
-        split_cents[c] = (ids, sub)
-    if not split_cents:
-        return {
-            "cells_split": [],
-            "new_cells": [],
-            "rows_rewritten": 0,
-            "bytes_rewritten": 0,
-            "bytes_total": _dir_bytes(f"{path}/codes"),
-        }
-
-    # --- publish the new centroid table FIRST ----------------------------
-    # Crash-ordering (r10 review): a centroid with no partition is
-    # harmless (probes read an empty directory), but a partition whose
-    # cluster id is missing from the centroid table is silently
-    # unsearchable.  Publishing centroids before the rewrite means any
-    # crash window leaves every row reachable: pre-rewrite rows are
-    # still in their old cell id, which the new table keeps (sub0
-    # reuses it); re-running recluster_cells completes the move.
-    new_centroids = [
-        (cid, vec) for cid, vec in centroids if cid not in split_cents
-    ]
-    for c, (ids, sub) in split_cents.items():
-        new_centroids.extend(
-            (int(i), [float(x) for x in sub[j]]) for j, i in enumerate(ids)
-        )
-    spark.createDataFrame(
-        sorted(new_centroids),
-        "cluster int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-    # --- re-assign ONLY the offending cells' rows ------------------------
-    cols = codes_all.columns
-    books32 = [np.asarray(b, dtype=np.float32) for b in books]
-    rot = None if rotation is None else np.asarray(rotation, dtype=np.float64)
-    splits_bc = {c: (ids.copy(), sub.copy()) for c, (ids, sub) in split_cents.items()}
-
-    def reassign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_cluster = pdf["cluster"].to_numpy().copy()
-            codes_np = np.asarray(list(pdf["pq_code"]), dtype=np.int64)
-            for c, (ids, sub) in splits_bc.items():
-                mask = pdf["cluster"].to_numpy() == c
-                if not mask.any():
-                    continue
-                x = pq_reconstruct(codes_np[mask], books32, rot)
-                d2 = (sub * sub).sum(1)[None, :] - 2.0 * (x @ sub.T)
-                out_cluster[mask] = ids[d2.argmin(1)]
-            pdf = pdf.assign(cluster=out_cluster.astype(np.int32))
-            yield pdf[cols]
-
-    touched = codes_all.filter(F.col("cluster").isin(list(split_cents)))
-    # eager localCheckpoint: materializes the reassignment AND truncates
-    # lineage, so the overwrite below doesn't read the directory it is
-    # rewriting (Spark refuses a write whose plan scans the target path)
-    reassigned = touched.mapInPandas(
-        reassign, schema=codes_all.schema
-    ).localCheckpoint(eager=True)
-    written_cells = {
-        int(r["cluster"])
-        for r in reassigned.select("cluster").distinct().collect()
-    }
-    n_rewritten = reassigned.count()
-    old_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
+    return _lifecycle.recluster(
+        spark, path, codec, drifted_vecs, cells, n_splits,
+        max_distortion_ratio, vec_col, min_cell_rows, sample_per_cell, seed,
+        lease_wait,
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        reassigned.write.mode("overwrite").partitionBy("cluster").parquet(
-            f"{path}/codes"
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
-    # a split whose old id received NO rows isn't in the written set, so
-    # dynamic overwrite didn't replace its directory — drop it explicitly
-    # (its rows were all rewritten under other ids)
-    for c in split_cents:
-        if c not in written_cells:
-            _shutil.rmtree(f"{path}/codes/cluster={c}", ignore_errors=True)
-
-    bytes_rewritten = sum(
-        _dir_bytes(f"{path}/codes/cluster={c}")
-        for c in written_cells | set(split_cents)
-    )
-    return {
-        "cells_split": sorted(split_cents),
-        "new_cells": sorted(new_cells),
-        "rows_rewritten": int(n_rewritten),
-        "bytes_rewritten": int(bytes_rewritten),
-        "bytes_total": int(_dir_bytes(f"{path}/codes")),
-    }
 
 
 def rebuild_ivfpq_index(
@@ -2297,220 +1733,192 @@ def rebuild_ivfpq_index(
     captures a fresh reservoir for its own future self-contained
     rebuilds."""
     from readwise_vector_db_spark.layout import maintenance_lease
-
-    with maintenance_lease(path, "rebuild", wait=lease_wait):
-        return _rebuild_ivfpq_locked(
-            spark, path, rebuild_to, seed, raw_vecs=raw_vecs,
-            vec_col=vec_col,
-        )
-
-
-def _rebuild_ivfpq_locked(
-    spark,
-    path: str,
-    rebuild_to: str,
-    seed: int = 7,
-    raw_vecs: DataFrame | None = None,
-    vec_col: str = "embedding",
-) -> dict:
     from readwise_vector_db_spark.operators.similarity import build_ivf_index
 
-    codes, centroids, books = load_ivfpq_index(spark, path)
-    rotation = load_rotation(spark, path)
-    # _load_reservoir first: it self-heals an interrupted purge swap,
-    # and the meta must be read AFTER that recovery (second review — a
-    # pre-recovery read would fabricate the 256 default over the
-    # layout's configured bound)
-    res = _load_reservoir(spark, path)
-    per_cell = reservoir_per_cell(path)
-    if res is None and raw_vecs is None:
-        raise ValueError(
-            f"rebuild_ivfpq_index: layout at {path!r} has no raw-vector "
-            "reservoir — PQ codebooks cannot retrain from codes without "
-            "compounding quantization bias (measured bound in "
-            "maintain_index's docstring).  Rebuild the layout once from "
-            "the raw corpus with save_ivfpq_index(reservoir_per_cell=...) "
-            "to arm future rebuilds, or pass raw_vecs= (the base table) "
-            "for a full-fidelity rebuild"
-        )
-    id_col = next(c for c in codes.columns if c not in ("cluster", "pq_code"))
-    exact_raw = None
-    if raw_vecs is not None:
-        # full-fidelity mode: every index id present in the base table
-        # re-encodes from its TRUE vector; the membership semi-join also
-        # keeps base-table rows that never reached the index OUT of the
-        # rebuild (an index rebuild must not ingest)
-        exact_raw = (
-            raw_vecs.select(
-                F.col(id_col),
-                F.col(vec_col).cast("array<float>").alias("vec"),
-            )
-            .filter(F.col("vec").isNotNull())
-            .join(codes.select(id_col), on=id_col, how="left_semi")
-        )
-    if res is not None:
-        res = res.persist()
-    try:
-        n_reservoir = int(res.count()) if res is not None else 0
-        if exact_raw is not None:
-            exact_raw = exact_raw.persist()
-            n_exact = exact_raw.count()
-            if n_exact == 0:
-                raise ValueError(
-                    "rebuild_ivfpq_index: raw_vecs shares no ids with the "
-                    f"index (id_col {id_col!r}) — wrong table or id column"
-                )
-        elif n_reservoir == 0:
+    with maintenance_lease(path, "rebuild", wait=lease_wait):
+        codes, centroids, books = load_ivfpq_index(spark, path)
+        rotation = load_rotation(spark, path)
+        # _load_reservoir first: it self-heals an interrupted purge swap,
+        # and the meta must be read AFTER that recovery (second review — a
+        # pre-recovery read would fabricate the 256 default over the
+        # layout's configured bound)
+        res = _load_reservoir(spark, path)
+        per_cell = reservoir_per_cell(path)
+        if res is None and raw_vecs is None:
             raise ValueError(
-                "rebuild_ivfpq_index: reservoir is empty (all rows "
-                "tombstoned?) — retrain from the raw corpus (raw_vecs=)"
+                f"rebuild_ivfpq_index: layout at {path!r} has no raw-vector "
+                "reservoir — PQ codebooks cannot retrain from codes without "
+                "compounding quantization bias (measured bound in "
+                "maintain_index's docstring).  Rebuild the layout once from "
+                "the raw corpus with save_ivfpq_index(reservoir_per_cell=...) "
+                "to arm future rebuilds, or pass raw_vecs= (the base table) "
+                "for a full-fidelity rebuild"
             )
-        # exact-vector source: the base table when given, else the
-        # reservoir; the model trains on it and its rows re-encode true
-        exact_src = exact_raw if exact_raw is not None else res
-        # per-capture-cell mean raw norms: the scale repair for decoded
-        # (unit-norm) reconstructions before raw-euclidean re-assignment
-        norm_expr = F.sqrt(
-            F.aggregate(
-                "vec",
-                F.lit(0.0),
-                lambda acc, x: acc + x.cast("double") * x.cast("double"),
-            )
-        )
-        if res is not None:
-            scale_rows = (
-                res.select("cluster", norm_expr.alias("_n"))
-                .groupBy("cluster")
-                .agg(F.avg("_n").alias("s"))
-                .collect()
-            )
-            scales = {int(r["cluster"]): float(r["s"]) for r in scale_rows}
-            global_scale = sum(scales.values()) / max(1, len(scales))
-        else:
-            scales = {}
-            global_scale = float(
-                exact_src.agg(F.avg(norm_expr)).first()[0] or 1.0
-            )
-
-        # --- new model, trained on RAW vectors only ----------------------
-        # (drop any capture-time cluster tag: build_ivf_index predicts
-        # into a "cluster" column of its own)
-        train_src = exact_src
-        for c in ("cluster", "w"):
-            if c in train_src.columns:
-                train_src = train_src.drop(c)
-        _, new_cents = build_ivf_index(
-            train_src, n_clusters=len(centroids),
-            id_col=id_col, vec_col="vec", seed=seed,
-        )
-        m, k = len(books), int(books[0].shape[0])
-        if rotation is not None:
-            new_rot, new_books = train_opq(
-                train_src, m=m, k=k, vec_col="vec", seed=seed
-            )
-        else:
-            new_rot = None
-            new_books = train_pq_codebooks(
-                train_src, m=m, k=k, vec_col="vec", seed=seed
-            )
-
-        # --- corpus in raw space: reservoir exact, the rest transcoded ---
-        books32 = [np.asarray(b, dtype=np.float32) for b in books]
-        rot = None if rotation is None else np.asarray(rotation, np.float64)
-        id_type = codes.schema[id_col].dataType
-        dec_schema = T.StructType(
-            [
-                T.StructField("rid", id_type, False),
-                T.StructField("vec", T.ArrayType(T.FloatType()), False),
-            ]
-        )
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                x = pq_reconstruct(
-                    np.asarray(list(pdf["pq_code"]), dtype=np.int64),
-                    books32, rot,
+        id_col = next(c for c in codes.columns if c not in ("cluster", "pq_code"))
+        exact_raw = None
+        if raw_vecs is not None:
+            # full-fidelity mode: every index id present in the base table
+            # re-encodes from its TRUE vector; the membership semi-join also
+            # keeps base-table rows that never reached the index OUT of the
+            # rebuild (an index rebuild must not ingest)
+            exact_raw = (
+                raw_vecs.select(
+                    F.col(id_col),
+                    F.col(vec_col).cast("array<float>").alias("vec"),
                 )
-                s = np.asarray(
-                    [
-                        scales.get(int(c), global_scale)
-                        for c in pdf["cluster"]
-                    ],
-                    dtype=np.float64,
-                )
-                x = (x * s[:, None]).astype(np.float32)
-                yield pd.DataFrame({"rid": pdf["rid"].values, "vec": list(x)})
-
-        decoded = (
-            codes.select(F.col(id_col).alias("rid"), "cluster", "pq_code")
-            .mapInPandas(decode, schema=dec_schema)
-            .select(F.col("rid").alias(id_col), "vec")
-        )
-        raw = exact_src.select(id_col, "vec")
-        n_res_extra = 0
-        if exact_raw is not None and res is not None:
-            # reservoir-exact fallback (second review): an index id the
-            # base table no longer serves may still have its TRUE raw
-            # vector in the reservoir — prefer it over the transcode
-            res_extra = res.select(id_col, "vec").join(
-                raw.select(id_col), on=id_col, how="left_anti"
+                .filter(F.col("vec").isNotNull())
+                .join(codes.select(id_col), on=id_col, how="left_semi")
             )
-            n_res_extra = res_extra.count()
-            if n_res_extra:
-                raw = raw.unionByName(res_extra)
-        raw_ids = raw.select(id_col)
-        if exact_raw is None:
-            # the reservoir is ≪ corpus by construction — broadcast the
-            # anti-join; the base table is NOT (corpus-sized membership
-            # join, the stated REINDEX price)
-            raw_ids = F.broadcast(raw_ids)
-        corpus = decoded.join(
-            raw_ids, on=id_col, how="left_anti"
-        ).unionByName(raw)
-        new_codes = ivfpq_encode(
-            corpus, new_cents, new_books, id_col=id_col, vec_col="vec",
-            rotation=new_rot,
-        )
-        save_ivfpq_index(
-            new_codes, new_cents, new_books, rebuild_to,
-            base_vecs=exact_src, vec_col="vec", rotation=new_rot,
-            id_col=id_col, reservoir_per_cell=int(per_cell or 256),
-        )
-    finally:
         if res is not None:
-            res.unpersist()
+            res = res.persist()
+        try:
+            n_reservoir = int(res.count()) if res is not None else 0
+            if exact_raw is not None:
+                exact_raw = exact_raw.persist()
+                n_exact = exact_raw.count()
+                if n_exact == 0:
+                    raise ValueError(
+                        "rebuild_ivfpq_index: raw_vecs shares no ids with the "
+                        f"index (id_col {id_col!r}) — wrong table or id column"
+                    )
+            elif n_reservoir == 0:
+                raise ValueError(
+                    "rebuild_ivfpq_index: reservoir is empty (all rows "
+                    "tombstoned?) — retrain from the raw corpus (raw_vecs=)"
+                )
+            # exact-vector source: the base table when given, else the
+            # reservoir; the model trains on it and its rows re-encode true
+            exact_src = exact_raw if exact_raw is not None else res
+            # per-capture-cell mean raw norms: the scale repair for decoded
+            # (unit-norm) reconstructions before raw-euclidean re-assignment
+            norm_expr = F.sqrt(
+                F.aggregate(
+                    "vec",
+                    F.lit(0.0),
+                    lambda acc, x: acc + x.cast("double") * x.cast("double"),
+                )
+            )
+            if res is not None:
+                scale_rows = (
+                    res.select("cluster", norm_expr.alias("_n"))
+                    .groupBy("cluster")
+                    .agg(F.avg("_n").alias("s"))
+                    .collect()
+                )
+                scales = {int(r["cluster"]): float(r["s"]) for r in scale_rows}
+                global_scale = sum(scales.values()) / max(1, len(scales))
+            else:
+                scales = {}
+                global_scale = float(
+                    exact_src.agg(F.avg(norm_expr)).first()[0] or 1.0
+                )
+
+            # --- new model, trained on RAW vectors only ----------------------
+            # (drop any capture-time cluster tag: build_ivf_index predicts
+            # into a "cluster" column of its own)
+            train_src = exact_src
+            for c in ("cluster", "w"):
+                if c in train_src.columns:
+                    train_src = train_src.drop(c)
+            _, new_cents = build_ivf_index(
+                train_src, n_clusters=len(centroids),
+                id_col=id_col, vec_col="vec", seed=seed,
+            )
+            m, k = len(books), int(books[0].shape[0])
+            if rotation is not None:
+                new_rot, new_books = train_opq(
+                    train_src, m=m, k=k, vec_col="vec", seed=seed
+                )
+            else:
+                new_rot = None
+                new_books = train_pq_codebooks(
+                    train_src, m=m, k=k, vec_col="vec", seed=seed
+                )
+
+            # --- corpus in raw space: reservoir exact, the rest transcoded ---
+            books32 = [np.asarray(b, dtype=np.float32) for b in books]
+            rot = None if rotation is None else np.asarray(rotation, np.float64)
+            id_type = codes.schema[id_col].dataType
+            dec_schema = T.StructType(
+                [
+                    T.StructField("rid", id_type, False),
+                    T.StructField("vec", T.ArrayType(T.FloatType()), False),
+                ]
+            )
+
+            def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    x = pq_reconstruct(
+                        np.asarray(list(pdf["pq_code"]), dtype=np.int64),
+                        books32, rot,
+                    )
+                    s = np.asarray(
+                        [
+                            scales.get(int(c), global_scale)
+                            for c in pdf["cluster"]
+                        ],
+                        dtype=np.float64,
+                    )
+                    x = (x * s[:, None]).astype(np.float32)
+                    yield pd.DataFrame({"rid": pdf["rid"].values, "vec": list(x)})
+
+            decoded = (
+                codes.select(F.col(id_col).alias("rid"), "cluster", "pq_code")
+                .mapInPandas(decode, schema=dec_schema)
+                .select(F.col("rid").alias(id_col), "vec")
+            )
+            raw = exact_src.select(id_col, "vec")
+            n_res_extra = 0
+            if exact_raw is not None and res is not None:
+                # reservoir-exact fallback (second review): an index id the
+                # base table no longer serves may still have its TRUE raw
+                # vector in the reservoir — prefer it over the transcode
+                res_extra = res.select(id_col, "vec").join(
+                    raw.select(id_col), on=id_col, how="left_anti"
+                )
+                n_res_extra = res_extra.count()
+                if n_res_extra:
+                    raw = raw.unionByName(res_extra)
+            raw_ids = raw.select(id_col)
+            if exact_raw is None:
+                # the reservoir is ≪ corpus by construction — broadcast the
+                # anti-join; the base table is NOT (corpus-sized membership
+                # join, the stated REINDEX price)
+                raw_ids = F.broadcast(raw_ids)
+            corpus = decoded.join(
+                raw_ids, on=id_col, how="left_anti"
+            ).unionByName(raw)
+            new_codes = ivfpq_encode(
+                corpus, new_cents, new_books, id_col=id_col, vec_col="vec",
+                rotation=new_rot,
+            )
+            save_ivfpq_index(
+                new_codes, new_cents, new_books, rebuild_to,
+                base_vecs=exact_src, vec_col="vec", rotation=new_rot,
+                id_col=id_col, reservoir_per_cell=int(per_cell or 256),
+            )
+        finally:
+            if res is not None:
+                res.unpersist()
+            if exact_raw is not None:
+                exact_raw.unpersist()
+        out = {
+            "mode": "raw" if exact_raw is not None else "reservoir",
+            "rebuilt_to": rebuild_to,
+            "n_clusters": len(new_cents),
+            "rows": spark.read.parquet(f"{rebuild_to}/codes").count(),
+            "reservoir_rows": int(n_reservoir),
+            "reservoir_per_cell": int(per_cell or 256),
+        }
         if exact_raw is not None:
-            exact_raw.unpersist()
-    out = {
-        "mode": "raw" if exact_raw is not None else "reservoir",
-        "rebuilt_to": rebuild_to,
-        "n_clusters": len(new_cents),
-        "rows": spark.read.parquet(f"{rebuild_to}/codes").count(),
-        "reservoir_rows": int(n_reservoir),
-        "reservoir_per_cell": int(per_cell or 256),
-    }
-    if exact_raw is not None:
-        out["raw_rows"] = int(n_exact)
-        out["reservoir_fallback_rows"] = int(n_res_extra)
-        out["transcoded_rows"] = (
-            int(out["rows"]) - int(n_exact) - int(n_res_extra)
-        )
-    return out
-
-
-def _dir_bytes(path: str) -> int:
-    import os as _os
-
-    total = 0
-    for root, _, files in _os.walk(path):
-        for fn in files:
-            try:
-                total += _os.path.getsize(_os.path.join(root, fn))
-            except OSError:
-                pass
-    return total
+            out["raw_rows"] = int(n_exact)
+            out["reservoir_fallback_rows"] = int(n_res_extra)
+            out["transcoded_rows"] = (
+                int(out["rows"]) - int(n_exact) - int(n_res_extra)
+            )
+        return out
 
 
 def ivfpq_search(
@@ -2535,16 +1943,7 @@ def ivfpq_search(
     original-space, matching :func:`ivfpq_encode`'s cell assignment."""
     if not centroids:
         raise ValueError("ivfpq_search needs a non-empty centroid list")
-    q = np.asarray(query, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    def cos_dist(c: list[float]) -> float:
-        cv = np.asarray(c, dtype=np.float64)
-        denom = float(np.linalg.norm(cv)) * qn
-        return 1.0 - float(cv @ q) / denom if denom > 0 else 1.0
-
-    probe = sorted(centroids, key=lambda t: (cos_dist(t[1]), t[0]))[:nprobe]
-    probe_ids = [cid for cid, _ in probe]
+    probe_ids = _lifecycle.probe_cells(centroids, query, nprobe)
     pruned = codes.filter(F.col("cluster").isin(probe_ids)).select(id_col, "pq_code")
     return pq_search(
         pruned,
@@ -2898,18 +2297,10 @@ def ivfpq_search_many(
             "probe-cluster map and per-query candidate sets key on it"
         )
 
-    probe_clusters: dict[int, list[int]] = {}
-    for qid, qvec in queries:
-        q = np.asarray(qvec, dtype=np.float64)
-        qn = float(np.linalg.norm(q))
-
-        def cos_dist(c: list[float]) -> float:
-            cv = np.asarray(c, dtype=np.float64)
-            denom = float(np.linalg.norm(cv)) * qn
-            return 1.0 - float(cv @ q) / denom if denom > 0 else 1.0
-
-        probe = sorted(centroids, key=lambda t: (cos_dist(t[1]), t[0]))[:nprobe]
-        probe_clusters[int(qid)] = [cid for cid, _ in probe]
+    probe_clusters = {
+        int(qid): _lifecycle.probe_cells(centroids, qvec, nprobe)
+        for qid, qvec in queries
+    }
     return pq_search_many(
         codes,
         queries,

@@ -134,7 +134,7 @@ def _join_signals_cov(per_doc: DataFrame, cov: DataFrame, id_col: str) -> DataFr
     )
 
 
-def _join_signals(per_doc: DataFrame, dup: DataFrame, id_col: str) -> DataFrame:
+def join_signals(per_doc: DataFrame, dup: DataFrame, id_col: str) -> DataFrame:
     """The one corpus-wide signal joins on the id — everything else
     never left its document."""
     return per_doc.join(dup, id_col, "left").select(

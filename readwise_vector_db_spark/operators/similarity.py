@@ -387,19 +387,10 @@ def ivf_search(
     probes with the same filter pay the metadata scan once — the same
     discipline as the serving layer's ``_filter_id_set`` cache.
     """
-    import numpy as np
-
-    qv = np.asarray(query_vec, dtype=float)
-
-    def cos_dist(c: list[float]) -> float:
-        cv = np.asarray(c)
-        denom = float(np.linalg.norm(cv) * np.linalg.norm(qv))
-        return 1.0 - float(cv @ qv) / denom if denom > 0 else 1.0
-
-    probe = sorted(centroids, key=lambda t: (cos_dist(t[1]), t[0]))[:nprobe]
-    probe_ids = [cid for cid, _ in probe]
-
+    from readwise_vector_db_spark.operators.index_lifecycle import probe_cells
     from readwise_vector_db_spark.operators.search import vector_literal
+
+    probe_ids = probe_cells(centroids, query_vec, nprobe)
 
     q_lit = vector_literal(query_vec)  # one JVM-parsed expr, not d py4j lits
     # sequential fold (not np.linalg.norm) so the literal is bit-identical
@@ -451,15 +442,13 @@ def save_ivf_index(
     (migration 6e900a582819) re-expressed as a parquet layout.
     """
     from readwise_vector_db_spark.layout import stamp_layout
+    from readwise_vector_db_spark.operators.index_lifecycle import write_centroids
 
     spark = assigned.sparkSession
     assigned.write.mode("overwrite").partitionBy("cluster").parquet(
         f"{path}/assigned"
     )
-    spark.createDataFrame(
-        [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-        "cluster int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    write_centroids(spark, centroids, path)
     stamp_layout(path, "ivf")  # last: a half-written build is never stamped
 
 
@@ -467,24 +456,21 @@ def load_ivf_index(spark, path: str) -> tuple[DataFrame, list[tuple[int, list[fl
     """(assigned, centroids) from a :func:`save_ivf_index` layout.
     ``assigned`` scans the partitioned parquet — cluster predicates
     prune directories; ``centroids`` is driver-side index metadata
-    (n_clusters rows).  Tombstoned ids (``pq.delete_from_index`` — the
-    tombstone/compaction machinery is shared across the three persisted
-    index families) are excluded from the returned scan; compact with
-    ``pq.compact_index(spark, path, subdir="assigned")``."""
+    (n_clusters rows).  Tombstoned ids
+    (``index_lifecycle.delete_from_index`` — the tombstone/compaction
+    machinery is shared across the three persisted index families) are
+    excluded from the returned scan; compact with
+    ``index_lifecycle.compact_index(spark, path, subdir="assigned")``."""
     from readwise_vector_db_spark.layout import check_layout
-    from readwise_vector_db_spark.operators.pq import _apply_tombstones
+    from readwise_vector_db_spark.operators import index_lifecycle as lc
     from readwise_vector_db_spark.storage import recover_swap
 
     check_layout(path, "ivf")
     recover_swap(path, "assigned")
-    assigned = _apply_tombstones(
+    assigned = lc.apply_tombstones(
         spark, path, spark.read.parquet(f"{path}/assigned")
     )
-    cent = spark.read.parquet(f"{path}/centroids").collect()
-    centroids = sorted(
-        (int(r["cluster"]), [float(x) for x in r["centroid"]]) for r in cent
-    )
-    return assigned, centroids
+    return assigned, lc.read_centroids(spark, path)
 
 
 def recluster_ivf_cells(
@@ -505,224 +491,50 @@ def recluster_ivf_cells(
     verdict item 3 covers both persisted families): split ONLY the
     cells a drifted increment lands in, rewrite only their partitions.
 
-    Two ways this family is SIMPLER than IVF-PQ: the layout stores raw
-    vectors, so sub-centroid training and row re-assignment are EXACT
-    (no PQ reconstruction, no scale correction), and the drift baseline
-    is SELF-CALIBRATED — the MEDIAN of the index's own per-cell mean
-    distortions replaces the ``distortion.json`` sidecar the code-only
-    layout needs (median, not mean: the increment is usually already
-    appended when remediation runs, and a mean would be inflated by the
-    very drift being detected; the median holds while drifted cells are
-    a minority — whole-distribution shift is retrain territory).  Crash ordering matches the PQ variant:
-    centroids publish FIRST (a centroid without a partition is
-    harmless; the reverse is silently unsearchable), then the offending
-    partitions rewrite via dynamic partition overwrite.  Tombstones
-    ride through untouched (id-based anti-join).  Multi-assign layouts
-    work per copy: an offending cell's copies re-assign among its
-    splits; copies living in healthy cells are never touched.
-    Mutual exclusion with compact/other maintainers is structural
-    (round 11): the layout's maintenance lease is held throughout."""
-    from readwise_vector_db_spark.layout import maintenance_lease
-
-    with maintenance_lease(path, "recluster", wait=lease_wait):
-        return _recluster_ivf_cells_locked(
-            spark, path, drifted_vecs, cells, n_splits, max_distortion_ratio,
-            vec_col, min_cell_rows, sample_per_cell, seed,
-        )
-
-
-def _recluster_ivf_cells_locked(
-    spark,
-    path: str,
-    drifted_vecs: DataFrame | None,
-    cells,
-    n_splits: int,
-    max_distortion_ratio: float,
-    vec_col: str,
-    min_cell_rows: int,
-    sample_per_cell: int,
-    seed: int,
-) -> dict:
-    import shutil as _shutil
-
+    This passes the family codec to ``index_lifecycle.recluster``
+    (which owns the locate → split → publish-centroids-first → rewrite
+    steps, the crash ordering and the maintenance lease).  Two ways this family is
+    SIMPLER than IVF-PQ: the layout stores raw vectors, so sub-centroid
+    training and row re-assignment are EXACT (no PQ reconstruction, no
+    scale correction), and the drift baseline is SELF-CALIBRATED — the
+    MEDIAN of the index's own per-cell mean distortions replaces the
+    ``distortion.json`` sidecar the code-only layout needs.  Median, not
+    mean: the drifted increment is usually already appended when
+    remediation runs, and a mean over the index rows would be inflated
+    by the very drift being detected (a large increment dilutes
+    mean_dist/base below the threshold and the remediation silently
+    no-ops); the median stays anchored to the healthy majority while
+    drifted cells are a minority — whole-distribution shift is retrain
+    territory."""
     import numpy as np
 
-    from readwise_vector_db_spark.operators.pq import (
-        _dir_bytes,
-        _kmeans_np,
-        _uniform_vector_sample,
-        cell_distortion_frame,
-    )
+    from readwise_vector_db_spark.operators import index_lifecycle as lc
 
-    assigned, centroids = load_ivf_index(spark, path)
-    cent_by_id = {int(c): [float(x) for x in v] for c, v in centroids}
+    def load(spark, path):
+        assigned, centroids = load_ivf_index(spark, path)
 
-    if cells is None:
-        if drifted_vecs is None:
-            raise ValueError("recluster_ivf_cells: pass drifted_vecs or cells")
-        # Self-calibrated baseline, ROBUST to the usual call order (the
-        # drifted increment is already appended): a plain mean over the
-        # index rows would be inflated by the very drift being detected
-        # — a large increment dilutes mean_dist/base below the threshold
-        # and the remediation silently no-ops (r10 review).  The MEDIAN
-        # of per-cell mean distortions stays anchored to the healthy
-        # majority as long as drift is a minority of CELLS; whole-
-        # distribution shift (most cells drifted) breaks any
-        # self-calibration and is retrain territory anyway.
-        idx_cells = cell_distortion_frame(
+        def decode(vals) -> "np.ndarray":
+            return np.asarray(list(vals), dtype=np.float64)
+
+        return assigned, centroids, decode
+
+    def baseline(spark, path, assigned, centroids) -> float:
+        idx_cells = lc.cell_distortion_frame(
             assigned, centroids, vec_col=vec_col
         ).collect()
         means = sorted(float(r["mean_dist"]) for r in idx_cells)
         if not means:
             raise ValueError("recluster_ivf_cells: empty index")
-        base = means[len(means) // 2]
-        rows = cell_distortion_frame(
-            drifted_vecs, centroids, vec_col=vec_col
-        ).collect()
-        cells = [
-            int(r["cluster"])
-            for r in rows
-            if r["n"] >= min_cell_rows
-            and base > 0
-            and float(r["mean_dist"]) / base > max_distortion_ratio
-        ]
-    cells = sorted(set(int(c) for c in cells))
-    unknown = [c for c in cells if c not in cent_by_id]
-    if unknown:
-        raise ValueError(f"recluster_ivf_cells: unknown cell ids {unknown}")
-    if not cells:
-        return {
-            "cells_split": [], "new_cells": [], "rows_rewritten": 0,
-            "bytes_rewritten": 0, "bytes_total": _dir_bytes(f"{path}/assigned"),
-        }
+        return means[len(means) // 2]
 
-    # bounded drifted sample, assigned driver-side (raw space throughout)
-    drift_sample: dict[int, "np.ndarray"] = {}
-    if drifted_vecs is not None:
-        samp = _uniform_vector_sample(
-            drifted_vecs, vec_col, sample_per_cell * max(1, len(cells)), seed
-        )
-        if samp:
-            x = np.asarray([list(v) for v in samp], dtype=np.float64)
-            ids_sorted = np.asarray(sorted(cent_by_id), dtype=np.int64)
-            cmat = np.asarray(
-                [cent_by_id[int(c)] for c in ids_sorted], dtype=np.float64
-            )
-            assign = ids_sorted[
-                np.argmin((cmat * cmat).sum(1)[None, :] - 2.0 * (x @ cmat.T), 1)
-            ]
-            for c in cells:
-                mask = assign == c
-                if mask.any():
-                    drift_sample[c] = x[mask][:sample_per_cell]
-
-    # per-cell EXACT vector samples from the pruned partitions
-    counts = {
-        int(r["cluster"]): int(r["n"])
-        for r in assigned.filter(F.col("cluster").isin(cells))
-        .groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    frac_map = []
-    for c in cells:
-        frac_map.extend(
-            [F.lit(c), F.lit(min(1.0, sample_per_cell / max(1, counts.get(c, 0))))]
-        )
-    sample_rows = (
-        assigned.filter(F.col("cluster").isin(cells))
-        .withColumn("_f", F.element_at(F.create_map(*frac_map), F.col("cluster")))
-        .filter(F.rand(seed) < F.col("_f"))
-        .select("cluster", F.col(vec_col).cast("array<double>").alias("_v"))
-        .collect()
+    codec = lc.CellCodec(
+        "recluster_ivf_cells", "assigned", vec_col, False, load, baseline
     )
-    existing: dict[int, "np.ndarray"] = {}
-    for c in cells:
-        vs = [list(r["_v"]) for r in sample_rows if r["cluster"] == c]
-        if vs:
-            existing[c] = np.asarray(vs, dtype=np.float64)
-
-    next_id = max(cent_by_id) + 1
-    split_cents: dict[int, tuple] = {}
-    new_cells: list[int] = []
-    for c in cells:
-        parts = [a for a in (existing.get(c), drift_sample.get(c))
-                 if a is not None and len(a)]
-        if not parts:
-            continue
-        x = np.concatenate(parts, axis=0)
-        k = min(n_splits, len(x))
-        sub = _kmeans_np(x, k, iters=10, seed=seed)  # raw space: exact
-        ids = np.asarray(
-            [c] + list(range(next_id, next_id + k - 1)), dtype=np.int64
-        )
-        next_id += k - 1
-        new_cells.extend(int(i) for i in ids[1:])
-        split_cents[c] = (ids, sub)
-    if not split_cents:
-        return {
-            "cells_split": [], "new_cells": [], "rows_rewritten": 0,
-            "bytes_rewritten": 0, "bytes_total": _dir_bytes(f"{path}/assigned"),
-        }
-
-    # centroids FIRST (crash ordering — see docstring)
-    new_centroids = [(cid, v) for cid, v in centroids if cid not in split_cents]
-    for c, (ids, sub) in split_cents.items():
-        new_centroids.extend(
-            (int(i), [float(x) for x in sub[j]]) for j, i in enumerate(ids)
-        )
-    spark.createDataFrame(
-        sorted(new_centroids), "cluster int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-    cols = assigned.columns
-    splits_bc = {c: (ids.copy(), sub.copy()) for c, (ids, sub) in split_cents.items()}
-
-    def reassign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_cluster = pdf["cluster"].to_numpy().copy()
-            vecs = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            for c, (ids, sub) in splits_bc.items():
-                mask = pdf["cluster"].to_numpy() == c
-                if not mask.any():
-                    continue
-                xv = vecs[mask]
-                d2 = (sub * sub).sum(1)[None, :] - 2.0 * (xv @ sub.T)
-                out_cluster[mask] = ids[d2.argmin(1)]
-            pdf = pdf.assign(cluster=out_cluster.astype(np.int32))
-            yield pdf[cols]
-
-    touched = assigned.filter(F.col("cluster").isin(list(split_cents)))
-    reassigned = touched.mapInPandas(
-        reassign, schema=assigned.schema
-    ).localCheckpoint(eager=True)
-    written_cells = {
-        int(r["cluster"]) for r in reassigned.select("cluster").distinct().collect()
-    }
-    n_rewritten = reassigned.count()
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        reassigned.write.mode("overwrite").partitionBy("cluster").parquet(
-            f"{path}/assigned"
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
-    for c in split_cents:
-        if c not in written_cells:
-            _shutil.rmtree(f"{path}/assigned/cluster={c}", ignore_errors=True)
-
-    bytes_rewritten = sum(
-        _dir_bytes(f"{path}/assigned/cluster={c}")
-        for c in written_cells | set(split_cents)
+    return lc.recluster(
+        spark, path, codec, drifted_vecs, cells, n_splits,
+        max_distortion_ratio, vec_col, min_cell_rows, sample_per_cell, seed,
+        lease_wait,
     )
-    return {
-        "cells_split": sorted(split_cents),
-        "new_cells": sorted(new_cells),
-        "rows_rewritten": int(n_rewritten),
-        "bytes_rewritten": int(bytes_rewritten),
-        "bytes_total": int(_dir_bytes(f"{path}/assigned")),
-    }
 
 
 def save_quantizer(
@@ -736,11 +548,9 @@ def save_quantizer(
     (:func:`assign_cells`), paying probe cost instead of KMeans build
     cost on every run (round-5 verdict item 3)."""
     from readwise_vector_db_spark.layout import stamp_layout
+    from readwise_vector_db_spark.operators.index_lifecycle import write_centroids
 
-    spark.createDataFrame(
-        [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-        "cluster int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    write_centroids(spark, centroids, path)
     stamp_layout(path, "quantizer")
 
 
@@ -750,12 +560,10 @@ def load_quantizer(spark, path: str) -> list[tuple[int, list[float]]]:
     table is the corpus-independent half all three persist) layout —
     driver-side index metadata, n_clusters rows."""
     from readwise_vector_db_spark.layout import check_layout
+    from readwise_vector_db_spark.operators.index_lifecycle import read_centroids
 
     check_layout(path, ("quantizer", "ivf", "ivfpq"))
-    cent = spark.read.parquet(f"{path}/centroids").collect()
-    return sorted(
-        (int(r["cluster"]), [float(x) for x in r["centroid"]]) for r in cent
-    )
+    return read_centroids(spark, path)
 
 
 def assign_cells(
@@ -884,7 +692,7 @@ def ivf_search_many(
     unfiltered.  The probe list stays centroid-only, exactly like the
     single-query path (predicates never move which cells are probed).
     """
-    import numpy as np
+    from readwise_vector_db_spark.operators.index_lifecycle import probe_cells
 
     if not queries:
         raise ValueError("ivf_search_many needs at least one query")
@@ -895,20 +703,12 @@ def ivf_search_many(
         )
     rows = []
     for qid, qvec in queries:
-        qv = np.asarray(qvec, dtype=float)
-
-        def cos_dist(c: list[float]) -> float:
-            cv = np.asarray(c)
-            denom = float(np.linalg.norm(cv) * np.linalg.norm(qv))
-            return 1.0 - float(cv @ qv) / denom if denom > 0 else 1.0
-
-        probe = sorted(centroids, key=lambda t: (cos_dist(t[1]), t[0]))[:nprobe]
         # sequential fold (not np.linalg.norm) so the value is
         # bit-identical with the single-query literal path
         acc = 0.0
         for x in qvec:
             acc += float(x) * float(x)
-        for cid, _ in probe:
+        for cid in probe_cells(centroids, qvec, nprobe):
             rows.append((int(qid), int(cid), [float(x) for x in qvec], acc ** 0.5))
     spark = assigned.sparkSession
     qcells = spark.createDataFrame(

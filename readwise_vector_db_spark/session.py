@@ -20,11 +20,25 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def env_int(name: str, default: int) -> int:
+    """Integer value of the environment variable ``name``, or ``default``
+    when it is unset or empty.  A value that is not an integer raises
+    ``ValueError`` naming the variable and the value, so a typo in a
+    knob fails where it is read instead of as an anonymous ``int()``
+    error."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"environment variable {name}={raw!r} is not an integer"
+        ) from None
+
+
 def cpu_count() -> int:
-    n = os.environ.get("SPARK_GRAFT_CPUS")
-    if n:
-        return int(n)
-    return os.cpu_count() or 4
+    return env_int("SPARK_GRAFT_CPUS", 0) or os.cpu_count() or 4
 
 
 def get_spark(app_name: str = "readwise_vector_db_spark", cores: int | None = None) -> SparkSession:

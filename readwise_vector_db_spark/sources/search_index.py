@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from readwise_vector_db_spark import storage
+from readwise_vector_db_spark.session import env_int
 from readwise_vector_db_spark.sources.tables import corpus_split
 
 N_BUCKETS = 8
@@ -156,9 +157,12 @@ def build_search_index(spark: SparkSession, sf_dir: str, force: bool = False) ->
     meta, vecs = corpus_split(spark, sf_dir)
 
     def build(stage: str) -> None:
-        # write through temp catalog names; the durable artifact is the files
+        # write through temp catalog names unique to this stage (two
+        # builders of one tag in one process must not drop each other's
+        # table mid-write); the durable artifact is the files
+        suffix = re.sub(r"\W", "_", stage.rsplit(".stage-", 1)[-1])
         for df, sub in ((vecs, "vectors"), (meta, "metadata")):
-            tmp_table = f"rw_warm_build_{tag}_{sub}"
+            tmp_table = f"rw_warm_build_{tag}_{sub}_{suffix}"
             spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
             (
                 df.repartition(N_BUCKETS, "id")
@@ -636,7 +640,7 @@ def ivf_warm_index(
     # under CONCURRENT load (r7 composed study) the fleet has idle cores
     # per request, so a smaller split spreads one request's fold wider —
     # deploy knob, default unchanged.
-    split_mb = int(os.environ.get("SPARK_GRAFT_IVF_SPLIT_MB", "16"))
+    split_mb = env_int("SPARK_GRAFT_IVF_SPLIT_MB", 16)
     mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(split_mb << 20))
@@ -912,7 +916,7 @@ _FILTER_IDS_MAX_ENTRIES = 32
 def _filter_id_set(
     spark: SparkSession, sf_dir: str, where_sql: str, canon_key: tuple = ()
 ) -> frozenset | None:
-    cap = int(os.environ.get("SPARK_GRAFT_FILTER_IDS_MAX", "100000"))
+    cap = env_int("SPARK_GRAFT_FILTER_IDS_MAX", 100000)
     fp = _source_fingerprint(sf_dir)
     key = (fp, canon_key or where_sql)
     with _FILTER_IDS_LOCK:
@@ -952,7 +956,7 @@ def local_ivf_scorer(
     if hit is not None:
         return hit or None
     base = layout_dir / "assigned"
-    budget = int(os.environ.get("SPARK_GRAFT_LOCAL_IVF_MB", "512")) << 20
+    budget = env_int("SPARK_GRAFT_LOCAL_IVF_MB", 512) << 20
     try:
         vec_bytes = _dir_bytes(base)
     except OSError:

@@ -21,8 +21,8 @@ from readwise_vector_db_spark.registry import register, register_extra
 from readwise_vector_db_spark.sources.tables import load_table
 from readwise_vector_db_spark.suites import text_analysis as ta
 from readwise_vector_db_spark.suites.dedup import (
-    _AUG_DOCS_SQL,
-    _augmented_docs,
+    AUG_DOCS_SQL,
+    augmented_docs,
     minhash_pairs_ctes,
 )
 
@@ -40,7 +40,7 @@ from readwise_vector_db_spark.suites.dedup import (
 # detector keeps its own standalone check in dedup_ngram_jaccard.
 
 _CLUSTERS_ORACLE = f"""
-    WITH RECURSIVE aug AS ({_AUG_DOCS_SQL}),
+    WITH RECURSIVE aug AS ({AUG_DOCS_SQL}),
     fps AS (SELECT doc_id,
                    md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fp
             FROM aug),
@@ -93,7 +93,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs feeds the fingerprint pass AND the rep-side of the MinHash
     # chain; fps feeds the group agg and the star-edge join — persist
     # both so the corpus is scanned once and fingerprinted once
-    docs = _augmented_docs(spark, sf_dir).persist()
+    docs = augmented_docs(spark, sf_dir).persist()
     fps = docs.select("doc_id", fingerprint_md5("text").alias("fp")).persist()
     groups = fps.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
     exact_edges = (
@@ -352,7 +352,7 @@ def curate_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a copied doc appears in ≥2 documents.
 
 _CHUNK_DUP_ORACLE = f"""
-    WITH aug AS ({_AUG_DOCS_SQL}),
+    WITH aug AS ({AUG_DOCS_SQL}),
     t AS (
         SELECT doc_id, string_split_regex(text, '\\s+') AS toks,
                len(string_split_regex(text, '\\s+')) AS n
@@ -388,7 +388,7 @@ def chunk_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents.  At 100 TB: one map-only chunking pass and one shuffle on
     the chunk hash with map-side combine — the substring-dedup signal
     without a suffix array."""
-    docs = _augmented_docs(spark, sf_dir)
+    docs = augmented_docs(spark, sf_dir)
     chunks = cu.chunk_overlap(docs, window=_CHUNK_W, stride=_CHUNK_S).select(
         "doc_id", "chunk_md5"
     )

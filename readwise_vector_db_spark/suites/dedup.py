@@ -25,14 +25,14 @@ from readwise_vector_db_spark.registry import register, register_extra
 from readwise_vector_db_spark.sources.tables import load_table
 from readwise_vector_db_spark.suites.sqlfrag import seqdot
 
-_AUG_DOCS_SQL = """
+AUG_DOCS_SQL = """
         SELECT doc_id, text FROM documents
         UNION ALL
         SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 20 = 0
 """
 
 
-def _augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallelize=True).select("doc_id", "text")
     dups = docs.filter(F.col("doc_id") % 20 == 0).withColumn(
         "doc_id", F.col("doc_id") + 1000000
@@ -43,7 +43,7 @@ def _augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_exact",
     f"""
-    WITH aug AS ({_AUG_DOCS_SQL}),
+    WITH aug AS ({AUG_DOCS_SQL}),
     fps AS (SELECT doc_id,
                    md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fp
             FROM aug)
@@ -53,7 +53,7 @@ def _augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup groups on the augmented corpus (25 injected groups)."""
-    return dd.exact_dedup_groups(_augmented_docs(spark, sf_dir))
+    return dd.exact_dedup_groups(augmented_docs(spark, sf_dir))
 
 
 # Composed (U+00E9) vs decomposed (e + U+0301) twins — identical glyphs,

@@ -272,14 +272,14 @@ def test_broadcast_to_bucketed_migration_rebuilds_index(spark, docs, tmp_path):
     table = VersionedTable(str(tmp_path / "store_mig"))
     seed = docs.filter(F.col("doc_id") < 30)
     dedup_batch_against_store(spark, seed, table, batch_join="broadcast")
-    assert inc._synced_version(table.root) == 0  # broadcast mode: no index
+    assert inc.synced_version(table.root) == 0  # broadcast mode: no index
 
     # second increment re-sends the SAME texts with shifted ids: every
     # row is a historical near/exact dup and must be dropped
     replay = seed.withColumn("doc_id", F.col("doc_id") + 10_000)
     stats = dedup_batch_against_store(spark, replay, table, batch_join="bucketed")
     assert stats["accepted"] == 0
-    assert inc._synced_version(table.root) == table.latest_version()
+    assert inc.synced_version(table.root) == table.latest_version()
     name = inc._band_table_name(table.root)
     assert spark.table(name).count() > 0
     spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -311,10 +311,10 @@ def test_band_marker_stamps_callers_version_not_latest(spark, docs, tmp_path):
     inc.append_band_index(
         spark, table.read(spark, version=v1), table.root, synced_version=v1
     )
-    assert inc._synced_version(table.root) == v1
+    assert inc.synced_version(table.root) == v1
     # so the next probe still sees the lag and repairs
     inc.ensure_band_index(spark, table.root)
-    assert inc._synced_version(table.root) == table.latest_version()
+    assert inc.synced_version(table.root) == table.latest_version()
     spark.sql(f"DROP TABLE IF EXISTS {inc._band_table_name(table.root)}")
 
 
@@ -337,10 +337,10 @@ def test_crash_lag_auto_repaired_on_next_probe(spark, docs, tmp_path):
         "doc_id", "text", 3, "xxhash64",
     ).select("doc_id", "fp", "sig")
     table.commit_append(rows)
-    assert inc._synced_version(table.root) < (table.latest_version() or 0)
+    assert inc.synced_version(table.root) < (table.latest_version() or 0)
 
     name = inc.ensure_band_index(spark, table.root)  # probe path → repair
-    assert inc._synced_version(table.root) == table.latest_version()
+    assert inc.synced_version(table.root) == table.latest_version()
     # repaired index covers BOTH increments' signatures
     from readwise_vector_db_spark.operators.dedup import band_keys
     n_bands_per_sig = (

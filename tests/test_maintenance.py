@@ -21,6 +21,7 @@ from readwise_vector_db_spark.maintenance import (
     maintain_index,
     read_maintenance_log,
 )
+from readwise_vector_db_spark.operators import index_lifecycle as lifecycle
 from readwise_vector_db_spark.operators import pq
 from readwise_vector_db_spark.operators import similarity as sim
 
@@ -169,7 +170,7 @@ def test_maintainers_exclude_under_lease(spark, ivfpq_layout):
             t.start()
             t.join()
 
-        in_thread("compact", lambda: pq.compact_index(spark, path))
+        in_thread("compact", lambda: lifecycle.compact_index(spark, path))
         in_thread(
             "append",
             lambda: pq.append_to_ivfpq_index(
@@ -258,7 +259,7 @@ def test_maintain_index_policy_walk(spark, ivfpq_layout):
 
     # 3. tombstone buildup past the policy threshold → compact
     ids = [int(r["vec_id"]) for r in base_df.select("vec_id").collect()]
-    pq.delete_from_index(spark, path, ids[: n // 2])
+    lifecycle.delete_from_index(spark, path, ids[: n // 2])
     rec3 = maintain_index(spark, path)
     assert rec3["action"] == "compact" and rec3["executed"]
     assert rec3["measurements"]["tombstone_fraction"] > 0.2
@@ -351,7 +352,7 @@ def test_maintain_index_dry_run_and_rf_note(spark, ivfpq_layout):
     pq.append_to_ivfpq_index(inc, path, max_distortion_ratio=None)
 
     ids = [int(r["vec_id"]) for r in base_df.select("vec_id").collect()]
-    pq.delete_from_index(spark, path, ids[: n // 2])
+    lifecycle.delete_from_index(spark, path, ids[: n // 2])
     rec = maintain_index(
         spark, path, execute=False,
         policy=MaintenancePolicy(rf_growth_note=1.5),
@@ -395,7 +396,7 @@ def test_maintain_index_ivf_family(spark, tmp_path):
         pytest.fail("ivf maintenance never converged")
 
     ids = [int(r["vec_id"]) for r in base_df.select("vec_id").collect()]
-    pq.delete_from_index(spark, path, ids[: (n + 1000) // 3])
+    lifecycle.delete_from_index(spark, path, ids[: (n + 1000) // 3])
     rec3 = maintain_index(spark, path)
     assert rec3["action"] == "compact" and rec3["executed"]
     acts = [r["action"] for r in read_maintenance_log(path)]
@@ -416,7 +417,7 @@ def test_maintain_index_flat_pq_compacts_only(spark, tmp_path):
     assert rec["family"] == "pq" and rec["action"] == "none"
     assert "drifted_cells" not in rec["measurements"]
 
-    pq.delete_from_index(spark, path, list(range(n // 2)))
+    lifecycle.delete_from_index(spark, path, list(range(n // 2)))
     rec2 = maintain_index(spark, path)
     assert rec2["action"] == "compact" and rec2["executed"]
     assert rec2["result"]["rows_surviving"] == n - n // 2
@@ -485,7 +486,7 @@ def test_cli_maintain_and_log(spark, tmp_path, capsys):
     books = pq.train_pq_codebooks(base_df, m=8, k=32, sample_rows=1200)
     path = str(tmp_path / "cli_pq")
     pq.save_pq_index(pq.pq_encode(base_df, books), books, path)
-    pq.delete_from_index(spark, path, list(range(n // 2)))
+    lifecycle.delete_from_index(spark, path, list(range(n // 2)))
 
     rc = cli.main(["maintain", "--path", path, "--dry-run"])
     assert rc == 0
@@ -529,7 +530,7 @@ def test_cli_maintain_all_sweeps_every_structure(spark, tmp_path, capsys):
     books = pq.train_pq_codebooks(base_df, m=8, k=32, sample_rows=1200)
     pq_path = f"{root}/indexes/pq"
     pq.save_pq_index(pq.pq_encode(base_df, books), books, pq_path)
-    pq.delete_from_index(spark, pq_path, list(range(n // 2)))
+    lifecycle.delete_from_index(spark, pq_path, list(range(n // 2)))
 
     # structure 2: a healthy ivfpq layout → none
     _, cents = sim.build_ivf_index(base_df, n_clusters=8)
@@ -736,11 +737,11 @@ def test_reservoir_tombstones_and_compaction_purge(spark, tmp_path):
         int(r["vec_id"])
         for r in pq._load_reservoir(spark, path).limit(5).collect()
     ]
-    pq.delete_from_index(spark, path, victims)
+    lifecycle.delete_from_index(spark, path, victims)
     res = pq._load_reservoir(spark, path)
     assert res.filter(F.col("vec_id").isin(victims)).count() == 0
     # physical purge rides the codes compaction
-    pq.compact_index(spark, path)
+    lifecycle.compact_index(spark, path)
     raw = spark.read.parquet(f"{path}/reservoir")
     assert raw.filter(F.col("vec_id").isin(victims)).count() == 0
     assert pq.reservoir_per_cell(path) == 40  # meta survives the swap
@@ -770,8 +771,8 @@ def test_compaction_recovers_interrupted_reservoir_purge(spark, tmp_path):
         f.write(stage_name)
     os.rename(f"{path}/reservoir", f"{path}/.reservoir_old_999_1")
 
-    pq.delete_from_index(spark, path, victims)
-    pq.compact_index(spark, path)
+    lifecycle.delete_from_index(spark, path, victims)
+    lifecycle.compact_index(spark, path)
 
     raw = spark.read.parquet(f"{path}/reservoir")  # bypasses tombstones
     from pyspark.sql import functions as F
@@ -918,9 +919,9 @@ def test_maintain_dedup_store_walk(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from readwise_vector_db_spark.jobs.incremental_dedup import (
-        _synced_version,
         _write_synced_version,
         dedup_batch_against_store,
+        synced_version,
     )
     from readwise_vector_db_spark.maintenance import (
         DedupStorePolicy,
@@ -951,7 +952,7 @@ def test_maintain_dedup_store_walk(spark, tmp_path):
     _write_synced_version(root, (table.latest_version() or 1) - 1)
     rec2 = maintain_dedup_store(spark, root)
     assert rec2["action"] == "rebuild_index" and rec2["executed"]
-    assert _synced_version(root) == table.latest_version()
+    assert synced_version(root) == table.latest_version()
 
     # segment fan-in past the policy → compact the store; the compact
     # makes the index lag one version, which the NEXT run repairs

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from readwise_vector_db_spark.operators import index_lifecycle as lifecycle
 from readwise_vector_db_spark.operators import pq
 from readwise_vector_db_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -841,19 +842,19 @@ def test_tombstone_delete_and_compaction(spark, embs, books, tmp_path):
     before = [r["vec_id"] for r in pq.pq_search(codes, q, loaded_books, k=5).collect()]
     victim = before[0]  # the top hit — deletion must be visible at rank 1
 
-    assert pq.delete_from_index(spark, path, [victim]) == 1
+    assert lifecycle.delete_from_index(spark, path, [victim]) == 1
     codes2, _ = pq.load_pq_index(spark, path)
     assert codes2.count() == total - 1
     after = [r["vec_id"] for r in pq.pq_search(codes2, q, loaded_books, k=5).collect()]
     assert victim not in after and after[0] == before[1]
     # delete accepts a DataFrame too; duplicate tombstones are harmless
-    pq.delete_from_index(
+    lifecycle.delete_from_index(
         spark, path, spark.createDataFrame([(victim,)], "vec_id long")
     )
     assert pq.load_pq_index(spark, path)[0].count() == total - 1
 
     # compaction: physical removal, tombstones cleared, results unchanged
-    n = pq.compact_index(spark, path)
+    n = lifecycle.compact_index(spark, path)
     assert n == total - 1
     assert not os.path.isdir(f"{path}/tombstones")
     codes3, _ = pq.load_pq_index(spark, path)
@@ -874,7 +875,7 @@ def test_tombstone_delete_and_compaction(spark, embs, books, tmp_path):
         r["vec_id"]
         for r in pq.ivfpq_search(icodes, icents, ibooks, q, k=5, nprobe=4).collect()
     ]
-    pq.delete_from_index(spark, ipath, top[:2])
+    lifecycle.delete_from_index(spark, ipath, top[:2])
     icodes2, _, _ = pq.load_ivfpq_index(spark, ipath)
     assert icodes2.count() == itotal - 2
     got = [
@@ -882,7 +883,7 @@ def test_tombstone_delete_and_compaction(spark, embs, books, tmp_path):
         for r in pq.ivfpq_search(icodes2, icents, ibooks, q, k=5, nprobe=4).collect()
     ]
     assert not set(top[:2]) & set(got)
-    assert pq.compact_index(spark, ipath) == itotal - 2
+    assert lifecycle.compact_index(spark, ipath) == itotal - 2
     # the cluster partition layout survived (partition pruning intact)
     assert any(
         name.startswith("cluster=") for name in os.listdir(f"{ipath}/codes")
@@ -936,7 +937,7 @@ def test_compact_crash_recovery_and_concurrent_tombstones(spark, embs, books, tm
     assert codes.count() == total  # rolled back, not the gutted orphan
     ids = [r["vec_id"] for r in codes.limit(2).collect()]
     # the next compaction clears the orphan so it can never resurface
-    pq.compact_index(spark, path)
+    lifecycle.compact_index(spark, path)
     assert not os.path.isdir(f"{path}/.codes_compact_888_1")
 
     # concurrent tombstone: present in the dir but written AFTER the
@@ -944,9 +945,9 @@ def test_compact_crash_recovery_and_concurrent_tombstones(spark, embs, books, tm
     # happens at compact entry, so write the late tombstone via a
     # pre-listed compact.  Here: tombstone A, compact (consumes it),
     # then tombstone B and verify B still applies after compaction.
-    pq.delete_from_index(spark, path, [ids[0]])
-    assert pq.compact_index(spark, path) == total - 1
-    pq.delete_from_index(spark, path, [ids[1]])
+    lifecycle.delete_from_index(spark, path, [ids[0]])
+    assert lifecycle.compact_index(spark, path) == total - 1
+    lifecycle.delete_from_index(spark, path, [ids[1]])
     assert pq.load_pq_index(spark, path)[0].count() == total - 2
 
 
@@ -956,7 +957,7 @@ def test_tombstone_column_mismatch_raises(spark, embs, books, tmp_path):
     matched nothing, so deleted ids silently kept serving)."""
     path = str(tmp_path / "pq_badtomb")
     pq.save_pq_index(pq.pq_encode(embs, books), books, path)
-    pq.delete_from_index(spark, path, ["1", "2"], id_col="doc_id")
+    lifecycle.delete_from_index(spark, path, ["1", "2"], id_col="doc_id")
     with pytest.raises(ValueError, match="doc_id"):
         pq.load_pq_index(spark, path)[0].count()
 

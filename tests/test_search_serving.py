@@ -545,3 +545,47 @@ def test_scorer_masks_custom_column_generic_semantics():
     assert [i for i, _ in got] == ["b"]
     # a requested filter outside the declaration is NOT supported
     assert not scorer.supports_params(SearchParams(k=3, lang="en"))
+
+
+def test_concurrent_force_builds_of_one_tag(spark, tmp_path, monkeypatch):
+    """Two threads of one process force-building the same tag write
+    through temp catalog tables of their own, so neither drops the
+    other's table mid-write: both return, and the layout left behind is
+    fresh and readable."""
+    import threading
+
+    monkeypatch.setattr(si, "_INDEX_ROOT", tmp_path)
+    results, errors = [], []
+    temp_tables: dict[int, set] = {}
+    real_sql = spark.sql
+
+    def sql(stmt, *args, **kwargs):
+        if "rw_warm_build_" in stmt:
+            name = stmt.split()[-1]
+            temp_tables.setdefault(threading.get_ident(), set()).add(name)
+        return real_sql(stmt, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", sql)
+
+    def run():
+        try:
+            results.append(si.build_search_index(spark, SF_SMOKE, force=True))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and results == [True, True]
+    a, b = temp_tables.values()
+    assert len(a) == len(b) == 2 and not a & b
+    base = tmp_path / si._tag(SF_SMOKE)
+    assert si._is_fresh(base, si._source_fingerprint(SF_SMOKE))
+    n_vec = spark.read.parquet(str(base / "vectors")).count()
+    assert n_vec == spark.read.parquet(str(base / "metadata")).count() > 0
+    assert not [
+        t for t in spark.catalog.listTables() if t.name.startswith("rw_warm_build_")
+    ]

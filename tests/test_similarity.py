@@ -393,7 +393,7 @@ def test_ivf_layout_tombstone_delete_and_compaction(spark, tmp_path):
 
     import numpy as np
 
-    from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import index_lifecycle as lifecycle
     from readwise_vector_db_spark.operators import similarity as sim
 
     rng = np.random.default_rng(5)
@@ -407,12 +407,12 @@ def test_ivf_layout_tombstone_delete_and_compaction(spark, tmp_path):
     q = rows[0][1]
     top = [r["neighbor_id"] for r in sim.ivf_search(loaded, cents, q, k=5, nprobe=4).collect()]
     assert top[0] == 0
-    pq.delete_from_index(spark, path, [top[0]])
+    lifecycle.delete_from_index(spark, path, [top[0]])
     loaded2, _ = sim.load_ivf_index(spark, path)
     assert loaded2.count() == 299
     got = [r["neighbor_id"] for r in sim.ivf_search(loaded2, cents, q, k=5, nprobe=4).collect()]
     assert top[0] not in got and got[0] == top[1]
-    assert pq.compact_index(spark, path, subdir="assigned") == 299
+    assert lifecycle.compact_index(spark, path, subdir="assigned") == 299
     assert not os.path.isdir(f"{path}/tombstones")
     assert any(d.startswith("cluster=") for d in os.listdir(f"{path}/assigned"))
     loaded3, _ = sim.load_ivf_index(spark, path)

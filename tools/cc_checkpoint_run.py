@@ -32,7 +32,7 @@ def main() -> None:
     from readwise_vector_db_spark.operators import dedup as dd
     from readwise_vector_db_spark.operators.graph import resolve_clusters
     from readwise_vector_db_spark.session import get_spark
-    from readwise_vector_db_spark.suites.dedup import _augmented_docs
+    from readwise_vector_db_spark.suites.dedup import augmented_docs
 
     spark = get_spark("cc_checkpoint")
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -45,7 +45,7 @@ def main() -> None:
     ).mode("overwrite").save()
 
     # identical edge construction to suites/curation.py:dedup_clusters
-    docs = _augmented_docs(spark, sf_dir).persist()
+    docs = augmented_docs(spark, sf_dir).persist()
     fps = docs.select("doc_id", fingerprint_md5("text").alias("fp")).persist()
     groups = fps.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
     exact_edges = (

@@ -29,14 +29,14 @@ def main():
     from readwise_vector_db_spark.operators import dedup as dd
     from readwise_vector_db_spark.operators.graph import resolve_clusters
     from readwise_vector_db_spark.session import get_spark
-    from readwise_vector_db_spark.suites.dedup import _augmented_docs
+    from readwise_vector_db_spark.suites.dedup import augmented_docs
 
     spark = get_spark("profile")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     for rep in range(2):
         print(f"--- rep {rep} ---", flush=True)
-        docs = _augmented_docs(spark, SF_DIR)
+        docs = augmented_docs(spark, SF_DIR)
         fps = docs.select("doc_id", fingerprint_md5("text").alias("fp"))
         groups = (
             fps.groupBy("fp")
@@ -79,7 +79,7 @@ def main():
     # round count: instrument connected_components manually
     from pyspark.sql import DataFrame
 
-    docs = _augmented_docs(spark, SF_DIR)
+    docs = augmented_docs(spark, SF_DIR)
     fps = docs.select("doc_id", fingerprint_md5("text").alias("fp"))
     groups = (
         fps.groupBy("fp")
