@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 
 from readwise_vector_db_spark.api.metrics import MetricsRegistry, default_registry
 from readwise_vector_db_spark.api.models import SearchRequest, shape_result
-from readwise_vector_db_spark.functions.embedder import embed_text_local
+from readwise_vector_db_spark.functions.embedder import DEFAULT_DIM, embed_text_local
 from readwise_vector_db_spark.operators import search as search_ops
 from readwise_vector_db_spark.sources.tables import corpus_split
 
@@ -25,17 +25,18 @@ class SearchService:
     vector-first top-k against them.
 
     ``warm=True`` (the default) opens the prebuilt bucketed warm layout
-    (sources/search_index.py) and serves each request through the
-    single-SQL fast path — the configuration whose tails the bench gates.
+    (sources/search_index.py) and serves each request through
+    ``served_search_rows`` — the configuration whose tails the bench
+    gates.
     ``warm=False`` plans directly over the fixture parquet (no index
     build): the cold path, kept for tests and one-shot CLI queries.
     Both return identical rows (tests/test_api.py pins agreement).
 
     ``ann_nprobe`` (deployment-time, like the reference deciding to
-    serve through its HNSW index) routes unfiltered-extras requests
-    through the IVF-probe path: only the nprobe nearest cells are
-    scored, trading recall for fold CPU exactly as the reference's
-    approximate index does.  None (default) = exact scan."""
+    serve through its HNSW index) routes warm requests through the
+    IVF-probe path: only the nprobe nearest cells are scored, trading
+    recall for fold CPU exactly as the reference's approximate index
+    does.  None (default) = exact scan."""
 
     def __init__(
         self,
@@ -44,6 +45,8 @@ class SearchService:
         warm: bool = True,
         ann_nprobe: int | None = None,
     ):
+        if ann_nprobe is not None and ann_nprobe < 1:
+            raise ValueError(f"ann_nprobe must be >= 1, got {ann_nprobe}")
         self.spark = spark
         self.sf_dir = sf_dir
         self.warm = warm
@@ -80,51 +83,29 @@ class SearchService:
             highlighted_at_range=req.highlighted_at_range,
         )
 
-    def _plan(self, req: SearchRequest):
-        qv = (
-            embed_text_local(req.q, dim=self._embed_dim)
-            if self._embed_dim
-            else embed_text_local(req.q)
-        )
-        if self.warm:
-            from readwise_vector_db_spark.sources.search_index import (
-                served_search_ivf_sql,
-                served_search_sql,
-            )
-
-            if self.ann_nprobe is not None:
-                return served_search_ivf_sql(
-                    self.spark, self.sf_dir, qv, self._params(req),
-                    nprobe=self.ann_nprobe,
-                )
-            return served_search_sql(self.spark, self.sf_dir, qv, self._params(req))
-        return search_ops.semantic_search_indexed(
-            self.metadata, self.vectors, qv, self._params(req)
-        )
-
-    def _rows_fast(self, req: SearchRequest) -> list[dict[str, Any]] | None:
-        """Warm low-latency path: one Spark statement for the winners,
-        driver-side layout fetch for their metadata (no second job —
-        sources/search_index.py:served_search_rows).  None = fall back
-        to the DataFrame path (cold service, extra filters, layout
-        mid-rebuild); both return identical rows (tests/test_api.py)."""
+    def _rows(self, req: SearchRequest) -> list[dict[str, Any]] | None:
+        """Warm: the rows of ``served_search_rows`` (one winner
+        selection, one fetch).  Cold: None — the caller runs
+        :meth:`_plan`, planned over the fixture parquet."""
         if not self.warm:
             return None
-        from readwise_vector_db_spark.sources.search_index import (
-            served_search_rows,
+        from readwise_vector_db_spark.sources import search_index
+
+        return search_index.served_search_rows(
+            self.spark, self.sf_dir, self._embed(req), self._params(req),
+            nprobe=self.ann_nprobe,
         )
 
-        qv = (
-            embed_text_local(req.q, dim=self._embed_dim)
-            if self._embed_dim
-            else embed_text_local(req.q)
-        )
-        return served_search_rows(
-            self.spark, self.sf_dir, qv, self._params(req), nprobe=self.ann_nprobe
+    def _embed(self, req: SearchRequest) -> list[float]:
+        return embed_text_local(req.q, dim=self._embed_dim or DEFAULT_DIM)
+
+    def _plan(self, req: SearchRequest):
+        return search_ops.semantic_search_indexed(
+            self.metadata, self.vectors, self._embed(req), self._params(req)
         )
 
     def search(self, req: SearchRequest) -> list[dict[str, Any]]:
-        rows = self._rows_fast(req)
+        rows = self._rows(req)
         if rows is None:
             df = self._plan(req)
             rows = [r.asDict(recursive=True) for r in df.collect()]
@@ -136,7 +117,7 @@ class SearchService:
     def stream(self, req: SearchRequest) -> Iterator[dict[str, Any]]:
         """Per-row iterator (SSE / MCP framing consumes this).  k ≤ 100, so
         toLocalIterator never holds more than one small partition."""
-        rows = self._rows_fast(req)
+        rows = self._rows(req)
         self._searches.inc()
         if rows is not None:
             for row in rows:

@@ -1916,15 +1916,22 @@ def doc_dup_fraction(
             F.col("id").alias(id_col),
             "n_tokens",
             F.coalesce(F.col("dup_tokens"), F.lit(0)).alias("dup_tokens"),
-            F.round(
-                F.when(
-                    F.col("n_tokens") > 0,
-                    F.coalesce(F.col("dup_tokens"), F.lit(0))
-                    / F.col("n_tokens").cast("double"),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("dup_fraction"),
+            dup_fraction_col().alias("dup_fraction"),
         )
+    )
+
+
+def dup_fraction_col() -> Column:
+    """``dup_fraction`` over the ``n_tokens`` and (nullable, left-joined)
+    ``dup_tokens`` columns: the duplicated share of a document's tokens,
+    0 for an empty document, HALF-UP rounded to 6 dp."""
+    return F.round(
+        F.when(
+            F.col("n_tokens") > 0,
+            F.coalesce(F.col("dup_tokens"), F.lit(0))
+            / F.col("n_tokens").cast("double"),
+        ).otherwise(F.lit(0.0)),
+        6,
     )
 
 

@@ -369,6 +369,25 @@ def _save_rescore_json(path: str, record: dict) -> None:
     _storage.atomic_write_json(f"{path}/rescore.json", record)
 
 
+def _read_base_distortion(path: str) -> float | None:
+    """The train-time coarse distortion in ``{path}/distortion.json``, or
+    None when the layout has no such file (built without ``base_vecs=``).
+    A file that is present but unreadable raises: a torn baseline must
+    not read as "no baseline" and silently turn the drift gate off."""
+    import json as _json
+
+    try:
+        with open(f"{path}/distortion.json") as f:
+            return float(_json.load(f)["base_coarse_distortion"])
+    except FileNotFoundError:
+        return None
+    except (KeyError, TypeError, ValueError) as e:
+        raise ValueError(
+            f"{path}/distortion.json is unreadable ({e!r}); rebuild the "
+            "layout with base_vecs= or restore the file"
+        ) from e
+
+
 def _prime_persisted_rf(path: str) -> None:
     """Load ``{path}/rescore.json`` (if the layout carries one) into the
     process-level persisted-rf store — called by the index loaders so a
@@ -1073,8 +1092,6 @@ def save_ivfpq_index(
     recommendation); requires ``id_col`` present in ``base_vecs`` so
     reservoir rows can be tombstone-filtered and exactly re-encoded at
     rebuild time."""
-    import json as _json
-
     spark = codes.sparkSession
     codes.write.mode("overwrite").partitionBy("cluster").parquet(f"{path}/codes")
     if rotation is not None:
@@ -1082,8 +1099,9 @@ def save_ivfpq_index(
     if base_vecs is not None:
         base = coarse_distortion(base_vecs, centroids, vec_col=vec_col)
         _os.makedirs(path, exist_ok=True)
-        with open(f"{path}/distortion.json", "w") as f:
-            _json.dump({"base_coarse_distortion": base}, f)
+        _storage.atomic_write_json(
+            f"{path}/distortion.json", {"base_coarse_distortion": base}
+        )
         if rf_ks:
             _save_rescore_json(
                 path,
@@ -1437,19 +1455,13 @@ def append_to_ivfpq_index(
     structural (``lease_wait`` seconds of patience, then
     ``MaintenanceBusy``).
     """
-    import json as _json
-
     from readwise_vector_db_spark.layout import maintenance_lease
 
     with maintenance_lease(path, "append", wait=lease_wait):
         spark = new_vecs.sparkSession
         _, centroids, books = load_ivfpq_index(spark, path)
         if max_distortion_ratio is not None:
-            try:
-                with open(f"{path}/distortion.json") as f:
-                    base = float(_json.load(f)["base_coarse_distortion"])
-            except (FileNotFoundError, KeyError, ValueError):
-                base = None
+            base = _read_base_distortion(path)
             if base is not None and base > 0:
                 if source_col is not None:
                     # the gate consumes only the WORST group: ONE scalar
@@ -1643,16 +1655,13 @@ def recluster_cells(
         return codes, centroids, decode
 
     def baseline(spark, path, codes, centroids) -> float:
-        import json as _json
-
-        try:
-            with open(f"{path}/distortion.json") as f:
-                return float(_json.load(f)["base_coarse_distortion"])
-        except (FileNotFoundError, KeyError, ValueError):
+        base = _read_base_distortion(path)
+        if base is None:
             raise ValueError(
                 "recluster_cells: layout has no distortion.json baseline "
                 "(built without base_vecs=) — pass cells= explicitly"
             )
+        return base
 
     codec = _lifecycle.CellCodec(
         "recluster_cells", "codes", "pq_code", True, load, baseline

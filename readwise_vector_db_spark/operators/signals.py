@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from readwise_vector_db_spark.operators.dedup import dup_token_coverage
+from readwise_vector_db_spark.operators.dedup import dup_fraction_col, dup_token_coverage
 from readwise_vector_db_spark.operators.lm import make_scorer
 
 # re.ASCII (r11): Python's default \s is UNICODE-aware — it splits
@@ -110,9 +110,9 @@ def doc_quality_signals(
 def _join_signals_cov(per_doc: DataFrame, cov: DataFrame, id_col: str) -> DataFrame:
     """Join the coverage COUNTS (docs with repeated content only) and
     derive dup_fraction from the per-doc pass's own n_tokens — the
-    exact expression :func:`operators.dedup.doc_dup_fraction` emits
-    (same when/coalesce/HALF-UP round), over the same token count."""
-    dup_tokens = F.coalesce(F.col("dup_tokens"), F.lit(0))
+    expression :func:`operators.dedup.doc_dup_fraction` emits
+    (:func:`operators.dedup.dup_fraction_col`), over the same token
+    count."""
     return per_doc.join(cov, id_col, "left").select(
         per_doc[id_col],
         "n_tokens",
@@ -123,14 +123,8 @@ def _join_signals_cov(per_doc: DataFrame, cov: DataFrame, id_col: str) -> DataFr
         "n_bigrams",
         "avg_logp",
         "ppl",
-        dup_tokens.alias("dup_tokens"),
-        F.round(
-            F.when(
-                F.col("n_tokens") > 0,
-                dup_tokens / F.col("n_tokens").cast("double"),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("dup_fraction"),
+        F.coalesce(F.col("dup_tokens"), F.lit(0)).alias("dup_tokens"),
+        dup_fraction_col().alias("dup_fraction"),
     )
 
 

@@ -385,7 +385,7 @@ def ivf_search(
     with its cached per-filter stats.  The live estimate is memoized
     per (corpus plan, rendered predicate) in a small LRU, so repeated
     probes with the same filter pay the metadata scan once — the same
-    discipline as the serving layer's ``_filter_id_set`` cache.
+    discipline as the serving scorer's per-cell mask cache.
     """
     from readwise_vector_db_spark.operators.index_lifecycle import probe_cells
     from readwise_vector_db_spark.operators.search import vector_literal

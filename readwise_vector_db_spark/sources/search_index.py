@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from readwise_vector_db_spark import storage
+from readwise_vector_db_spark.operators.index_lifecycle import dir_bytes, probe_cells
 from readwise_vector_db_spark.session import env_int
 from readwise_vector_db_spark.sources.tables import corpus_split
 
@@ -330,10 +331,6 @@ _SCORING_RELS: dict[tuple[str, str, str], str] = {}
 _TARGET_PARTITION_BYTES = 4 << 20
 
 
-def _dir_bytes(path: Path) -> int:
-    return sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
-
-
 def scoring_relation(spark: SparkSession, sf_dir: str) -> str:
     """Name of the relation serving scan→score→top-k requests: the
     bucketed vectors table when its data justifies ≥ N_BUCKETS
@@ -355,7 +352,8 @@ def scoring_relation(spark: SparkSession, sf_dir: str) -> str:
                 pass
     warm_tables(spark, sf_dir)  # ensure layout + cached handles exist
     vname = f"rw_warm_vectors_{tag}"
-    n_parts = max(1, -(-_dir_bytes(_INDEX_ROOT / tag / "vectors") // _TARGET_PARTITION_BYTES))
+    vec_bytes = dir_bytes(str(_INDEX_ROOT / tag / "vectors"))
+    n_parts = max(1, -(-vec_bytes // _TARGET_PARTITION_BYTES))
     if n_parts >= N_BUCKETS:
         _SCORING_RELS[key] = vname
         return vname
@@ -378,43 +376,63 @@ def scoring_relation(spark: SparkSession, sf_dir: str) -> str:
     return view
 
 
+def _check_nprobe(nprobe: int | None) -> None:
+    if nprobe is not None and nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+
+
 def served_search_sql(
     spark: SparkSession,
     sf_dir: str,
     query_vec,
     params=None,
+    nprobe: int | None = None,
+    n_clusters: int = 16,
 ) -> DataFrame:
     """``semantic_search_served`` over the warm layout, with each request's
     plans built as single JVM-parsed SQL statements (see module note).
+    ``nprobe`` scores only the query's ``nprobe`` nearest IVF cells (of
+    ``n_clusters``; see the IVF-probe note below); None scans exactly.
     Falls back to the DataFrame path for non-renderable extra_filters."""
     from readwise_vector_db_spark.operators import search as search_ops
 
+    _check_nprobe(nprobe)
     params = params or search_ops.SearchParams()
     meta, vecs = warm_tables(spark, sf_dir)
     if params.extra_filters:
         return search_ops.semantic_search_served(meta, vecs, query_vec, params)
-    tag = _tag(sf_dir)
-    mname = f"rw_warm_meta_{tag}"
-    winners = _select_winners_sql(spark, sf_dir, query_vec, params, meta)
-    return _fetch_winners(spark, meta, mname, winners)
+    winners = _select_winners(
+        spark, sf_dir, query_vec, params, meta, nprobe, n_clusters
+    )
+    return _fetch_winners(spark, sf_dir, meta, winners)
 
 
-def _select_winners_sql(
-    spark: SparkSession, sf_dir: str, query_vec, params, meta: DataFrame
+def _select_winners(
+    spark: SparkSession,
+    sf_dir: str,
+    query_vec,
+    params,
+    meta: DataFrame,
+    nprobe: int | None = None,
+    n_clusters: int = 16,
 ):
     """First statement of a warm request: the scan→score→top-k winners,
-    collected (≤ k clamped to 100 rows)."""
+    collected (≤ k clamped to 100 rows).  With ``nprobe`` the scan is the
+    IVF relation restricted to the probed cells."""
     from readwise_vector_db_spark.operators import search as search_ops
 
-    tag = _tag(sf_dir)
-    mname = f"rw_warm_meta_{tag}"
-    vrel = scoring_relation(spark, sf_dir)
     where = ["embedding IS NOT NULL"]  # F1
+    if nprobe is None:
+        vrel = scoring_relation(spark, sf_dir)
+    else:
+        vrel, centroids = ivf_warm_index(spark, sf_dir, n_clusters=n_clusters)
+        cells = sorted(probe_cells(centroids, query_vec, nprobe))
+        where.insert(0, f"cluster IN ({', '.join(str(c) for c in cells)})")
     mf = search_ops.meta_filter_sql(params, meta.columns)
     if mf is not None:
         # metadata filters reduce to an id set; the IN-subquery plans as a
         # left-semi join, same as the DataFrame path
-        where.append(f"id IN (SELECT id FROM {mname} WHERE {mf})")
+        where.append(f"id IN (SELECT id FROM rw_warm_meta_{_tag(sf_dir)} WHERE {mf})")
     return spark.sql(
         f"SELECT id, {search_ops.score_sql(query_vec)} AS score "
         f"FROM {vrel} WHERE {' AND '.join(where)} "
@@ -499,7 +517,21 @@ def _winner_rows_local(sf_dir: str, winners) -> list[dict] | None:
     return rows
 
 
-def _fetch_winners(spark: SparkSession, meta: DataFrame, mname: str, winners):
+def _fetch_rows(spark: SparkSession, sf_dir: str, meta: DataFrame, winners):
+    """The winners' shaped row dicts in (score, id) order: the driver-side
+    layout fetch, or the Spark fetch when the layout can't serve it."""
+    if not winners:
+        return []
+    rows = _winner_rows_local(sf_dir, winners)
+    if rows is None:
+        rows = [
+            r.asDict(recursive=True)
+            for r in _fetch_winners(spark, sf_dir, meta, winners).collect()
+        ]
+    return rows
+
+
+def _fetch_winners(spark: SparkSession, sf_dir: str, meta: DataFrame, winners):
     """Second statement of a warm request: winners (≤ k clamped to 100,
     driver-side rows) → full metadata rows with scores, in score order."""
     from readwise_vector_db_spark.operators import search as search_ops
@@ -514,7 +546,8 @@ def _fetch_winners(spark: SparkSession, meta: DataFrame, mname: str, winners):
     fetched = spark.sql(
         f"SELECT {', '.join(out_cols)}, "
         f"{search_ops.winner_score_map_sql(winners)}[id] AS score "
-        f"FROM {mname} WHERE id IN ({search_ops.winner_in_list_sql(winners)})"
+        f"FROM rw_warm_meta_{_tag(sf_dir)} "
+        f"WHERE id IN ({search_ops.winner_in_list_sql(winners)})"
     )
     return fetched.coalesce(1).sortWithinPartitions(F.asc("score"), F.asc("id"))
 
@@ -567,8 +600,6 @@ def ivf_warm_index(
     existing layout rewrites the sidecar; the scorer cache keys on the
     declared set, so the next ``local_ivf_scorer`` call loads the new
     residency."""
-    import json as _json
-
     if filter_columns is not None:
         known = set(_meta_column_names()) - {"id", "text"}
         bad = [c for c in filter_columns if c not in known]
@@ -577,20 +608,35 @@ def ivf_warm_index(
                 f"filter_columns {bad} not in the warm metadata schema "
                 f"(maskable: {sorted(known)})"
             )
+    base = _INDEX_ROOT / _tag(sf_dir) / f"ivf{n_clusters}"
+    hit = _open_ivf_rel(spark, sf_dir, base, n_clusters, seed, filter_columns)
+    if (
+        filter_columns is not None
+        and base.is_dir()
+        and _declared_filter_columns(base) != tuple(filter_columns)
+    ):
+        # re-declaration on an existing layout, memoized or not: the
+        # sidecar drives only the scorer load, so an atomic rewrite is
+        # enough (the scorer cache keys on the declared set)
+        storage.atomic_write_json(base / _FILTER_COLS_FILE, list(filter_columns))
+    return hit
+
+
+def _open_ivf_rel(
+    spark: SparkSession,
+    sf_dir: str,
+    base: Path,
+    n_clusters: int,
+    seed: int,
+    filter_columns,
+) -> tuple[str, list[tuple[int, list[float]]]]:
+    """The memoized cached IVF relation, building the layout at ``base``
+    when it is missing or stale."""
+    import json as _json
+
     fp = _source_fingerprint(sf_dir)
     tag = _tag(sf_dir)
     key = (spark.sparkContext.applicationId, tag, fp, n_clusters)
-    if filter_columns is not None:
-        # re-declaration must land even when the relation is memoized —
-        # the sidecar drives only the scorer load, so an atomic rewrite
-        # is enough (the scorer cache keys on the declared set)
-        declared_base = _INDEX_ROOT / tag / f"ivf{n_clusters}"
-        if declared_base.is_dir() and tuple(
-            _declared_filter_columns(declared_base)
-        ) != tuple(filter_columns):
-            storage.atomic_write_json(
-                declared_base / _FILTER_COLS_FILE, list(filter_columns)
-            )
     hit = _IVF_RELS.get(key)
     if hit is not None:
         return hit
@@ -605,7 +651,6 @@ def ivf_warm_index(
         except Exception:
             pass
     _, vecs = warm_tables(spark, sf_dir)
-    base = _INDEX_ROOT / tag / f"ivf{n_clusters}"
     if not _is_fresh(base, fp):
         # offline build: KMeans-assign the warm vectors, persist the
         # cluster-partitioned layout, swap it in (_install_layout)
@@ -621,11 +666,6 @@ def ivf_warm_index(
             Path(stage, "FINGERPRINT").write_text(fp)
 
         _install_layout(base, fp, build)
-    elif filter_columns is not None and tuple(
-        _declared_filter_columns(base)
-    ) != tuple(filter_columns):
-        # re-declaration against an existing layout the memo hadn't seen
-        storage.atomic_write_json(base / _FILTER_COLS_FILE, list(filter_columns))
     # Read with fold-CPU-sized splits, then sort each partition by
     # cluster so cached batches carry tight cluster min/max stats and
     # the in-memory scan's batch pruning SKIPS non-probed cells instead
@@ -694,9 +734,9 @@ class _LocalIvfScorer:
         # per-shard filter structure (round 8, r7 verdict item 4):
         # metadata columns live NEXT TO the cells they describe, so a
         # filtered probe evaluates its predicate as a vectorized mask
-        # in-process at ANY selectivity — no id-set cap, no Spark
-        # statement per filter.  WHICH columns are resident is the
-        # layout's declaration (round 9), not a hardcoded triple.
+        # in-process at ANY selectivity — no Spark statement per
+        # filter.  WHICH columns are resident is the layout's
+        # declaration (round 9), not a hardcoded triple.
         self.meta = meta or {}
         self.filter_cols = tuple(
             filter_cols
@@ -715,8 +755,8 @@ class _LocalIvfScorer:
         """True iff every metadata filter ``params`` REQUESTS is
         evaluable against the columns this layout declared resident
         (round 9 — checked, not assumed): a request filtering a column
-        outside the declaration routes to the id-set / Spark-statement
-        fallback instead of silently unfiltered masks.  ``extra_filters``
+        outside the declaration routes to the Spark IVF statement
+        instead of silently unfiltered masks.  ``extra_filters``
         (arbitrary Columns) never reach this path — the caller already
         routed them to the DataFrame engine."""
         from readwise_vector_db_spark.operators.search import (
@@ -775,23 +815,7 @@ class _LocalIvfScorer:
                 self._mask_cache.popitem(last=False)
         return m
 
-    def probe_ids(self, query_vec, nprobe: int) -> list[int]:
-        """Same nearest-centroid rule (and tie-break) as the SQL mode."""
-        import numpy as np
-
-        qv = np.asarray(list(query_vec), dtype=float)
-        qn = float(np.linalg.norm(qv))
-        cents = np.asarray([c for _, c in self.centroids], dtype=float)
-        denoms = np.linalg.norm(cents, axis=1) * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            dists = np.where(denoms > 0, 1.0 - (cents @ qv) / denoms, 1.0)
-        order = sorted(
-            range(len(self.centroids)),
-            key=lambda i: (dists[i], self.centroids[i][0]),
-        )
-        return [self.centroids[i][0] for i in order[: max(1, nprobe)]]
-
-    def topk(self, query_vec, k: int, nprobe: int, allowed=None, params=None):
+    def topk(self, query_vec, k: int, nprobe: int, params=None):
         """[(id, score)] — winners identical to the SQL statement's.
 
         One float64 gemm scores every probed row; rounding to 6 dp is
@@ -807,7 +831,7 @@ class _LocalIvfScorer:
 
         from readwise_vector_db_spark.operators.search import query_norm
 
-        probe = self.probe_ids(query_vec, nprobe)
+        probe = probe_cells(self.centroids, query_vec, nprobe)
         cells = [c for c in probe if c in self.mats]
         if not cells:
             return []
@@ -823,18 +847,9 @@ class _LocalIvfScorer:
             # vectorized mask over the resident metadata columns — same
             # semantics as the SQL statement's `id IN (SELECT …)`
             # applied INSIDE the probed cells, at ANY selectivity, with
-            # no Spark statement and no id-set cap (r7 verdict item 4)
+            # no Spark statement (r7 verdict item 4)
             key = _canon_filter_key(params)
             keep = np.concatenate([self._cell_mask(c, params, key) for c in cells])
-            if not keep.any():
-                return []
-            ids = [i for i, f in zip(ids, keep) if f]
-            mat, norms = mat[keep], norms[keep]
-        if allowed is not None:
-            # metadata filter as an id mask — same semantics as the SQL
-            # statement's `id IN (SELECT …)` applied INSIDE the probed
-            # cells (post-filtering in ANN terms, parity-pinned)
-            keep = np.fromiter((i in allowed for i in ids), bool, len(ids))
             if not keep.any():
                 return []
             ids = [i for i, f in zip(ids, keep) if f]
@@ -887,8 +902,7 @@ def _spark_round6(x: float) -> float:
 def _canon_filter_key(params) -> tuple:
     """Canonical cache key for a SearchParams filter set — value-based,
     not rendered-SQL-based, so e.g. two date-range objects that render
-    different literals but mean the same instant still share an entry,
-    and the key is stable across mask/id-set/bench paths."""
+    different literals but mean the same instant still share a mask."""
     rng = params.highlighted_at_range
     return (
         params.source_type,
@@ -897,43 +911,6 @@ def _canon_filter_key(params) -> tuple:
         tuple(params.tags) if params.tags else None,
         (str(rng[0]), str(rng[1])) if rng is not None else None,
     )
-
-
-# Per-filter id sets — the FALLBACK filter path for scorers built
-# without resident metadata (the primary path since round 8 is the
-# per-cell mask in _LocalIvfScorer): a serving filter is resolved ONCE
-# through one Spark statement and cached as a frozenset keyed by
-# (fingerprint, canonical filter key).  LRU-evicted (round 8 — the old
-# clear()-everything at 32 entries let a burst of distinct filters
-# flush the hot entries).  Sets past the cap (default 100k ids) cache a
-# decline and keep serving on the Spark statement — the driver never
-# holds an unbounded id list.
-_FILTER_IDS_CACHE: "OrderedDict[tuple, frozenset | None]" = OrderedDict()
-_FILTER_IDS_LOCK = threading.Lock()
-_FILTER_IDS_MAX_ENTRIES = 32
-
-
-def _filter_id_set(
-    spark: SparkSession, sf_dir: str, where_sql: str, canon_key: tuple = ()
-) -> frozenset | None:
-    cap = env_int("SPARK_GRAFT_FILTER_IDS_MAX", 100000)
-    fp = _source_fingerprint(sf_dir)
-    key = (fp, canon_key or where_sql)
-    with _FILTER_IDS_LOCK:
-        if key in _FILTER_IDS_CACHE:
-            _FILTER_IDS_CACHE.move_to_end(key)
-            return _FILTER_IDS_CACHE[key]
-    tag = _tag(sf_dir)
-    rows = spark.sql(
-        f"SELECT id FROM rw_warm_meta_{tag} WHERE {where_sql}"
-    ).limit(cap + 1).collect()
-    ids = frozenset(r["id"] for r in rows) if len(rows) <= cap else None
-    with _FILTER_IDS_LOCK:
-        _FILTER_IDS_CACHE[key] = ids
-        _FILTER_IDS_CACHE.move_to_end(key)
-        while len(_FILTER_IDS_CACHE) > _FILTER_IDS_MAX_ENTRIES:
-            _FILTER_IDS_CACHE.popitem(last=False)
-    return ids
 
 
 def local_ivf_scorer(
@@ -957,12 +934,8 @@ def local_ivf_scorer(
         return hit or None
     base = layout_dir / "assigned"
     budget = env_int("SPARK_GRAFT_LOCAL_IVF_MB", 512) << 20
-    try:
-        vec_bytes = _dir_bytes(base)
-    except OSError:
-        return None
     scorer: _LocalIvfScorer | bool
-    if vec_bytes * 2 > budget:  # ×2: cells live as float64 in RAM
+    if dir_bytes(str(base)) * 2 > budget:  # ×2: cells live as float64 in RAM
         scorer = False  # cache the decline too
     else:
         try:
@@ -1036,75 +1009,6 @@ def local_ivf_scorer(
     return scorer or None
 
 
-def served_search_ivf_sql(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec,
-    params=None,
-    nprobe: int = 4,
-    n_clusters: int = 16,
-) -> DataFrame:
-    """``served_search_sql`` through the IVF coarse quantizer: identical
-    request shape and output schema, but the scoring statement folds only
-    rows whose cell is among the query's ``nprobe`` nearest centroids.
-    ``nprobe >= n_clusters`` degenerates to the exact path (every cell
-    probed) — pinned against ``served_search_sql`` in tests.  Approximate
-    otherwise, exactly as the reference's HNSW serving path is."""
-    import numpy as np
-
-    from readwise_vector_db_spark.operators import search as search_ops
-
-    params = params or search_ops.SearchParams()
-    meta, vecs = warm_tables(spark, sf_dir)
-    if params.extra_filters:
-        return search_ops.semantic_search_served(meta, vecs, query_vec, params)
-    tag = _tag(sf_dir)
-    mname = f"rw_warm_meta_{tag}"
-    winners = _select_winners_ivf(
-        spark, sf_dir, query_vec, params, meta, nprobe, n_clusters
-    )
-    return _fetch_winners(spark, meta, mname, winners)
-
-
-def _select_winners_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec,
-    params,
-    meta: DataFrame,
-    nprobe: int,
-    n_clusters: int,
-):
-    """IVF-probe winner selection: score only the nprobe nearest cells."""
-    import numpy as np
-
-    from readwise_vector_db_spark.operators import search as search_ops
-
-    vrel, centroids = ivf_warm_index(spark, sf_dir, n_clusters=n_clusters)
-    qv = np.asarray(list(query_vec), dtype=float)
-    qn = float(np.linalg.norm(qv))
-    cents = np.asarray([c for _, c in centroids], dtype=float)
-    denoms = np.linalg.norm(cents, axis=1) * qn
-    with np.errstate(divide="ignore", invalid="ignore"):
-        dists = np.where(denoms > 0, 1.0 - (cents @ qv) / denoms, 1.0)
-    order = sorted(range(len(centroids)), key=lambda i: (dists[i], centroids[i][0]))
-    probe_ids = sorted(centroids[i][0] for i in order[: max(1, nprobe)])
-    tag = _tag(sf_dir)
-    mname = f"rw_warm_meta_{tag}"
-    where = [
-        f"cluster IN ({', '.join(str(c) for c in probe_ids)})",
-        "embedding IS NOT NULL",  # F1
-    ]
-    mf = search_ops.meta_filter_sql(params, meta.columns)
-    if mf is not None:
-        where.append(f"id IN (SELECT id FROM {mname} WHERE {mf})")
-    return spark.sql(
-        f"SELECT id, {search_ops.score_sql(query_vec)} AS score "
-        f"FROM {vrel} WHERE {' AND '.join(where)} "
-        f"ORDER BY score ASC, id ASC LIMIT {params.clamped_k()}"
-    ).collect()
-
-
 def served_search_rows(
     spark: SparkSession,
     sf_dir: str,
@@ -1113,68 +1017,39 @@ def served_search_rows(
     nprobe: int | None = None,
     n_clusters: int = 16,
 ) -> list[dict] | None:
-    """The low-latency warm request: winner selection through the ONE
-    Spark statement (exact scan or IVF probe when ``nprobe`` is set),
-    winner metadata through the driver-side layout fetch — no second
-    Spark job.  Returns shaped row dicts in (score, id) order, or None
-    when this path can't serve the request faithfully (extra_filters, a
-    missing/mid-rebuild layout) — the caller falls back to the DataFrame
-    path, which returns identical rows (parity pinned in
-    tests/test_search_serving.py).  Measured single-request wall at
+    """The low-latency warm request: the winners are selected once, by
+    the RAM-resident scorer (``nprobe`` set, corpus within budget, every
+    requested filter resident) or else by the ONE Spark statement of
+    ``served_search_sql``, and their metadata comes from the driver-side
+    layout fetch (the Spark fetch when the layout can't serve it).
+    Returns shaped row dicts in (score, id) order — the rows
+    ``served_search_sql`` returns (parity pinned in
+    tests/test_search_serving.py) — or None for extra_filters, which
+    only the DataFrame path evaluates.  Measured single-request wall at
     3072-d: 281 ms (two statements) → ~115 ms."""
     from readwise_vector_db_spark.operators import search as search_ops
 
+    _check_nprobe(nprobe)
     params = params or search_ops.SearchParams()
     if params.extra_filters:
         return None
     meta, _ = warm_tables(spark, sf_dir)
+    winners = None
     if nprobe is not None:
-        # the RAM-resident scorer (when the corpus fits the budget)
-        # removes the job scheduler from the request path — winner
-        # selection AND fetch both driver-side.  Metadata filters
-        # evaluate as per-cell masks over the scorer's resident columns
-        # (round 8 — any selectivity, zero Spark statements); scorers
-        # built without metadata fall back to cached id sets (one Spark
-        # statement per DISTINCT filter; oversized sets decline to the
-        # Spark path)
-        mf = search_ops.meta_filter_sql(params, meta.columns)
+        # the resident scorer removes the job scheduler from the request
+        # path; metadata filters evaluate as per-cell masks over its
+        # resident columns, and a filter on a column outside them goes
+        # to the Spark IVF statement
+        filtered = search_ops.meta_filter_sql(params, meta.columns) is not None
         scorer = local_ivf_scorer(spark, sf_dir, n_clusters=n_clusters)
-        if scorer is not None:
-            allowed = None
-            mask_params = None
-            # SPARK_GRAFT_DISABLE_FILTER_MASKS=1 pins the id-set
-            # fallback — measurement knob for comparing the mask path
-            # against the round-7 design (tools/bench_scaleout.py
-            # filtered mode), not a serving configuration
-            masks_on = os.environ.get(
-                "SPARK_GRAFT_DISABLE_FILTER_MASKS", "0"
-            ) != "1"
-            if mf is not None and masks_on and scorer.supports_params(params):
-                mask_params = params
-            elif mf is not None:
-                allowed = _filter_id_set(
-                    spark, sf_dir, mf, canon_key=_canon_filter_key(params)
-                )
-            if mf is None or mask_params is not None or allowed is not None:
-                top = scorer.topk(
-                    query_vec,
-                    params.clamped_k(),
-                    nprobe,
-                    allowed=allowed,
-                    params=mask_params,
-                )
-                if not top:
-                    return []
-                rows = _winner_rows_local(
-                    sf_dir, [{"id": i, "score": s} for i, s in top]
-                )
-                if rows is not None:
-                    return rows
-        winners = _select_winners_ivf(
+        if scorer is not None and (not filtered or scorer.supports_params(params)):
+            top = scorer.topk(
+                query_vec, params.clamped_k(), nprobe,
+                params=params if filtered else None,
+            )
+            winners = [{"id": i, "score": sc} for i, sc in top]
+    if winners is None:
+        winners = _select_winners(
             spark, sf_dir, query_vec, params, meta, nprobe, n_clusters
         )
-    else:
-        winners = _select_winners_sql(spark, sf_dir, query_vec, params, meta)
-    if not winners:
-        return []
-    return _winner_rows_local(sf_dir, winners)
+    return _fetch_rows(spark, sf_dir, meta, winners)

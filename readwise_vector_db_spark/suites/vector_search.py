@@ -173,12 +173,10 @@ def search_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     — approximate, the reference-HNSW analogue) is covered by
     tests/test_search_serving.py and the scale-out harness, where recall
     is measured rather than asserted."""
-    from readwise_vector_db_spark.sources.search_index import served_search_ivf_sql
-
     meta, vecs = warm_tables(spark, sf_dir)
     qv = _stored_query_vec(sf_dir, vecs, "5")
     return _stringify_tags(
-        served_search_ivf_sql(
+        served_search_sql(
             spark, sf_dir, qv, search_ops.SearchParams(k=10), nprobe=16, n_clusters=16
         )
     )

@@ -437,6 +437,34 @@ def test_append_staleness_guard(spark, books, tmp_path):
     assert d_bad > 2 * d_base
 
 
+def test_append_rejects_torn_distortion_baseline(spark, books, tmp_path):
+    """A present but unreadable distortion.json (a torn write) must fail
+    the drift gate loudly instead of reading as "no baseline"; only a
+    missing file means the layout has none."""
+    import os
+
+    import numpy as np
+
+    from readwise_vector_db_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(43)
+    rows = [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(40)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    _, centroids = sim.build_ivf_index(vecs, n_clusters=2)
+    path = str(tmp_path / "ivfpq_torn")
+    pq.save_ivfpq_index(
+        pq.ivfpq_encode(vecs, centroids, books), centroids, books, path,
+        base_vecs=vecs,
+    )
+    inc = spark.createDataFrame(rows[:5], "vec_id long, embedding array<float>")
+    with open(f"{path}/distortion.json", "w") as f:
+        f.write('{"base_coarse_dist')
+    with pytest.raises(ValueError, match="distortion.json"):
+        pq.append_to_ivfpq_index(inc, path, max_distortion_ratio=1.5)
+    os.remove(f"{path}/distortion.json")
+    assert pq.append_to_ivfpq_index(inc, path, max_distortion_ratio=1.5) == 5
+
+
 def test_coarse_distortion_samples_uniformly_not_first_partitions(spark):
     """ADVICE r8 (medium): the old sample(1.0).limit(n) took the FIRST
     partitions — on a source-ordered corpus, one ingest epoch.  Corpus:

@@ -35,6 +35,31 @@ def _rows(df):
     return [r.asDict() for r in df.collect()]
 
 
+def _want_rows(spark, qv, params, nprobe=None):
+    """The rows of the Spark statement path, shaped as served_search_rows
+    returns them."""
+    return [
+        r.asDict(recursive=True)
+        for r in si.served_search_sql(
+            spark, SF_SMOKE, qv, params, nprobe=nprobe
+        ).collect()
+    ]
+
+
+def _spy_statements(monkeypatch) -> list:
+    """Record the ``nprobe`` of every Spark winner statement from here on
+    (None for an exact scan)."""
+    calls = []
+    real = si._select_winners
+
+    def spy(*args, **kwargs):
+        calls.append(args[5] if len(args) > 5 else kwargs.get("nprobe"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(si, "_select_winners", spy)
+    return calls
+
+
 def test_sql_path_matches_dataframe_path_unfiltered(spark, warm):
     meta, vecs, qv = warm
     params = SearchParams(k=10)
@@ -183,7 +208,7 @@ def test_ivf_probe_all_cells_matches_exact_path(spark, warm):
     meta, vecs, qv = warm
     params = SearchParams(k=10)
     got = _rows(
-        si.served_search_ivf_sql(spark, SF_SMOKE, qv, params, nprobe=16, n_clusters=16)
+        si.served_search_sql(spark, SF_SMOKE, qv, params, nprobe=16, n_clusters=16)
     )
     want = _rows(si.served_search_sql(spark, SF_SMOKE, qv, params))
     assert got == want and len(got) == 10
@@ -199,7 +224,7 @@ def test_ivf_probe_pruned_scores_are_exact_for_returned_rows(spark, warm):
     exact = {r["id"]: r["score"] for r in si.served_search_sql(
         spark, SF_SMOKE, qv, SearchParams(k=100)
     ).collect()}
-    out = si.served_search_ivf_sql(spark, SF_SMOKE, qv, params, nprobe=2)
+    out = si.served_search_sql(spark, SF_SMOKE, qv, params, nprobe=2)
     rows = _rows(out)
     assert out.columns == si.served_search_sql(spark, SF_SMOKE, qv, params).columns
     assert 0 < len(rows) <= 10
@@ -213,7 +238,7 @@ def test_ivf_probe_pruned_scores_are_exact_for_returned_rows(spark, warm):
 def test_ivf_probe_with_metadata_filter(spark, warm):
     meta, vecs, qv = warm
     params = SearchParams(k=20, lang="en")
-    got = _rows(si.served_search_ivf_sql(spark, SF_SMOKE, qv, params, nprobe=16))
+    got = _rows(si.served_search_sql(spark, SF_SMOKE, qv, params, nprobe=16))
     want = _rows(si.served_search_sql(spark, SF_SMOKE, qv, params))
     assert got == want and len(got) > 0
 
@@ -265,12 +290,71 @@ def test_served_rows_match_dataframe_path(spark, warm):
     # IVF probe winners, same local fetch
     rows = si.served_search_rows(spark, SF_SMOKE, qv, SearchParams(k=10), nprobe=16)
     assert rows == want(
-        si.served_search_ivf_sql(spark, SF_SMOKE, qv, SearchParams(k=10), nprobe=16)
+        si.served_search_sql(spark, SF_SMOKE, qv, SearchParams(k=10), nprobe=16)
     )
 
     # extra_filters: not SQL-renderable -> the fast path declines
     params = SearchParams(k=10, extra_filters=[F.col("n_chars") > 0])
     assert si.served_search_rows(spark, SF_SMOKE, qv, params) is None
+
+
+@pytest.mark.parametrize("nprobe", [None, 4])
+def test_served_rows_spark_fetch_selects_winners_once(spark, warm, monkeypatch, nprobe):
+    """When the driver-side layout fetch declines (a layout mid-rebuild),
+    served_search_rows fetches the SAME winners through Spark: its rows
+    equal served_search_sql's and the winners are selected exactly once
+    — by the Spark statement (exact, or IVF with the resident scorer
+    over budget) or by the resident scorer, never both."""
+    meta, vecs, qv = warm
+    cases = [
+        (p, _want_rows(spark, qv, p, nprobe=nprobe))
+        for p in (
+            SearchParams(k=10),
+            SearchParams(k=20, lang="en", tags=["the", "spark", "fast"]),
+        )
+    ]
+    selections = []
+    real_topk = si._LocalIvfScorer.topk
+
+    def topk_spy(self, *args, **kwargs):
+        selections.append("resident")
+        return real_topk(self, *args, **kwargs)
+
+    statements = _spy_statements(monkeypatch)
+    monkeypatch.setattr(si._LocalIvfScorer, "topk", topk_spy)
+    monkeypatch.setattr(si, "_winner_rows_local", lambda sf_dir, winners: None)
+    budgets = ["512"] if nprobe is None else ["512", "0"]
+    try:
+        for budget in budgets:
+            monkeypatch.setenv("SPARK_GRAFT_LOCAL_IVF_MB", budget)
+            si._LOCAL_IVF_CACHE.clear()
+            for params, want in cases:
+                statements.clear()
+                selections.clear()
+                rows = si.served_search_rows(
+                    spark, SF_SMOKE, qv, params, nprobe=nprobe
+                )
+                assert rows == want and len(rows) > 0
+                if nprobe is not None and budget == "512":
+                    assert (selections, statements) == (["resident"], [])
+                else:
+                    assert (selections, statements) == ([], [nprobe])
+    finally:
+        si._LOCAL_IVF_CACHE.clear()
+
+
+def test_probe_count_below_one_is_rejected(spark, warm):
+    """A probe count below 1 probes no cell: the served entry points and
+    the service reject it by name instead of clamping it."""
+    from readwise_vector_db_spark.api.service import SearchService
+
+    meta, vecs, qv = warm
+    for entry in (si.served_search_sql, si.served_search_rows):
+        for bad in (0, -3):
+            with pytest.raises(ValueError, match="nprobe must be >= 1"):
+                entry(spark, SF_SMOKE, qv, SearchParams(k=5), nprobe=bad)
+    with pytest.raises(ValueError, match="ann_nprobe must be >= 1"):
+        SearchService(spark, SF_SMOKE, warm=True, ann_nprobe=0)
 
 
 def test_local_ivf_scorer_engaged_and_budget_gated(spark, warm, monkeypatch):
@@ -284,116 +368,99 @@ def test_local_ivf_scorer_engaged_and_budget_gated(spark, warm, monkeypatch):
     assert scorer is not None
     # pruned probes: local rows == SQL rows (cells chosen by the same
     # tie-broken rule, scores from the exact refold)
+    statements = _spy_statements(monkeypatch)
     for nprobe in (1, 4):
+        want = _want_rows(spark, qv, SearchParams(k=10), nprobe=nprobe)
+        statements.clear()
         rows = si.served_search_rows(
             spark, SF_SMOKE, qv, SearchParams(k=10), nprobe=nprobe
         )
-        want = [
-            r.asDict(recursive=True)
-            for r in si.served_search_ivf_sql(
-                spark, SF_SMOKE, qv, SearchParams(k=10), nprobe=nprobe
-            ).collect()
-        ]
         assert rows == want
+        assert statements == []  # the resident scorer selected them
     # filtered probes: the filter evaluates as a per-cell MASK over the
     # scorer's resident metadata (round 8 — no Spark statement, no id
     # cap) and the local rows still match the SQL statement exactly
     # (which applies the same filter as an id IN-subquery inside the
     # probed cells) — including a no-match filter returning empty
-    si._FILTER_IDS_CACHE.clear()
     scorer._mask_cache.clear()
     for params in (
         SearchParams(k=10, lang="en"),
         SearchParams(k=20, lang="en", tags=["the", "spark", "fast"]),
         SearchParams(k=10, source_type="no-such-source"),
     ):
+        want = _want_rows(spark, qv, params, nprobe=4)
+        statements.clear()
         rows = si.served_search_rows(spark, SF_SMOKE, qv, params, nprobe=4)
-        want = [
-            r.asDict(recursive=True)
-            for r in si.served_search_ivf_sql(
-                spark, SF_SMOKE, qv, params, nprobe=4
-            ).collect()
-        ]
         assert rows == want
+        assert statements == []  # no Spark statement ran
     assert len(scorer._mask_cache) > 0     # the mask path actually served
-    assert len(si._FILTER_IDS_CACHE) == 0  # no per-filter Spark statement ran
 
-    # fallback: a scorer WITHOUT resident metadata rides cached id sets
-    # (one Spark statement per distinct filter) with identical rows, and
-    # an oversized set declines to the full Spark statement
+    # a scorer WITHOUT resident metadata cannot evaluate the filter: the
+    # Spark IVF statement serves it with identical rows, on every
+    # request (there is no per-filter cache to hit)
     monkeypatch.setattr(scorer, "meta", {})
-    rows = si.served_search_rows(
-        spark, SF_SMOKE, qv, SearchParams(k=10, lang="en"), nprobe=4
-    )
-    want_en = [
-        r.asDict(recursive=True)
-        for r in si.served_search_ivf_sql(
+    want_en = _want_rows(spark, qv, SearchParams(k=10, lang="en"), nprobe=4)
+    statements.clear()
+    for _ in range(2):
+        rows = si.served_search_rows(
             spark, SF_SMOKE, qv, SearchParams(k=10, lang="en"), nprobe=4
-        ).collect()
-    ]
-    assert rows == want_en
-    assert len(si._FILTER_IDS_CACHE) > 0   # the id sets actually cached
-    monkeypatch.setenv("SPARK_GRAFT_FILTER_IDS_MAX", "1")
-    si._FILTER_IDS_CACHE.clear()
-    rows = si.served_search_rows(
-        spark, SF_SMOKE, qv, SearchParams(k=10, lang="en"), nprobe=4
-    )
-    assert si._FILTER_IDS_CACHE.get(
-        (
-            si._source_fingerprint(SF_SMOKE),
-            si._canon_filter_key(SearchParams(k=10, lang="en")),
         )
-    ) is None
-    assert rows == want_en
-    monkeypatch.delenv("SPARK_GRAFT_FILTER_IDS_MAX")
-    si._FILTER_IDS_CACHE.clear()
+        assert rows == want_en
+    assert statements == [4, 4]  # the Spark IVF statement served
 
     # budget gate: 0 MB declines (fresh cache key via env + cleared memo)
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_IVF_MB", "0")
     si._LOCAL_IVF_CACHE.clear()
     assert si.local_ivf_scorer(spark, SF_SMOKE) is None
     # and the serving entrypoint still answers through the Spark path
+    statements.clear()
     rows = si.served_search_rows(spark, SF_SMOKE, qv, SearchParams(k=10), nprobe=4)
     assert rows is not None and len(rows) == 10
+    assert statements == [4]
     monkeypatch.delenv("SPARK_GRAFT_LOCAL_IVF_MB")
     si._LOCAL_IVF_CACHE.clear()
 
 
 def test_mask_path_serves_above_id_cap_and_cache_is_lru(spark, warm, monkeypatch):
     """r7 verdict item 4: broad filters must serve in-process at ANY
-    selectivity.  With the id-set cap forced to 1 (every filter would
-    have declined under the round-7 design), the mask path still serves
-    locally with rows identical to the SQL statement and never runs a
-    per-filter Spark statement.  And the id-set fallback cache evicts
-    LRU — a burst of distinct filters no longer flushes the hot entry."""
+    selectivity.  A filter matching most of the corpus (every such
+    filter declined under the round-7 id-set cap) serves locally through
+    the masks with rows identical to the SQL statement and never runs a
+    Spark statement.  And the per-cell mask cache evicts LRU — a burst
+    of distinct filters does not flush the hot entry."""
     meta, vecs, qv = warm
     scorer = si.local_ivf_scorer(spark, SF_SMOKE)
     assert scorer is not None and scorer.meta
-    monkeypatch.setenv("SPARK_GRAFT_FILTER_IDS_MAX", "1")
-    si._FILTER_IDS_CACHE.clear()
     params = SearchParams(k=10, lang="en")  # broad: most of the corpus
+    want = _want_rows(spark, qv, params, nprobe=4)
+    statements = _spy_statements(monkeypatch)
     rows = si.served_search_rows(spark, SF_SMOKE, qv, params, nprobe=4)
-    want = [
-        r.asDict(recursive=True)
-        for r in si.served_search_ivf_sql(spark, SF_SMOKE, qv, params, nprobe=4).collect()
-    ]
     assert rows == want
-    assert len(si._FILTER_IDS_CACHE) == 0  # no id-set statement, no decline
-    monkeypatch.delenv("SPARK_GRAFT_FILTER_IDS_MAX")
+    assert statements == []  # no Spark statement ran
 
     # LRU: hot key survives a burst of one-shot keys; oldest is evicted
-    si._FILTER_IDS_CACHE.clear()
-    hot = ("fp", ("hot",))
-    si._FILTER_IDS_CACHE[hot] = frozenset({"1"})
-    for i in range(si._FILTER_IDS_MAX_ENTRIES - 1):
-        si._FILTER_IDS_CACHE[("fp", (f"burst{i}",))] = frozenset()
-    si._FILTER_IDS_CACHE.move_to_end(hot)  # a hit refreshes recency
-    si._FILTER_IDS_CACHE[("fp", ("one-more",))] = frozenset()
-    while len(si._FILTER_IDS_CACHE) > si._FILTER_IDS_MAX_ENTRIES:
-        si._FILTER_IDS_CACHE.popitem(last=False)
-    assert hot in si._FILTER_IDS_CACHE
-    assert ("fp", ("burst0",)) not in si._FILTER_IDS_CACHE
-    si._FILTER_IDS_CACHE.clear()
+    cell = next(iter(scorer.meta))
+    old_max = scorer._mask_cache_max
+    scorer._mask_cache.clear()
+    scorer._mask_cache_max = 3
+
+    def touch(p):
+        scorer._cell_mask(cell, p, si._canon_filter_key(p))
+
+    def cached(p):
+        return (cell, si._canon_filter_key(p)) in scorer._mask_cache
+
+    try:
+        hot = SearchParams(k=5, lang="en")
+        touch(hot)
+        for i in range(3):
+            touch(SearchParams(k=5, tags=[f"burst{i}"]))
+            touch(hot)  # a hit refreshes recency
+        assert cached(hot)
+        assert not cached(SearchParams(k=5, tags=["burst0"]))
+    finally:
+        scorer._mask_cache_max = old_max
+        scorer._mask_cache.clear()
 
 
 def test_mask_cache_thread_safe_under_eviction(spark, warm):
@@ -453,12 +520,12 @@ def test_filters_on_absent_columns_raise_loudly(spark, warm):
     assert ok.count() > 0
 
 
-def test_declared_filter_columns_drive_scorer_residency(spark, warm):
+def test_declared_filter_columns_drive_scorer_residency(spark, warm, monkeypatch):
     """Round 9 (r8 verdict missing #3): the layout DECLARES which
     metadata columns the resident scorer keeps, the scorer loads exactly
     that set, and supports_params checks REQUESTED filters against it —
-    a filter outside the declaration routes to the id-set fallback with
-    identical rows, never silently-unfiltered masks."""
+    a filter outside the declaration routes to the Spark IVF statement
+    with identical rows, never silently-unfiltered masks."""
     meta, vecs, qv = warm
     try:
         # re-declare a REDUCED residency on the existing layout
@@ -467,32 +534,23 @@ def test_declared_filter_columns_drive_scorer_residency(spark, warm):
         scorer = si.local_ivf_scorer(spark, SF_SMOKE)
         assert scorer is not None and scorer.filter_cols == ("lang",)
         # resident filter: mask path serves, parity with the SQL twin
-        si._FILTER_IDS_CACHE.clear()
         scorer._mask_cache.clear()
         p_lang = SearchParams(k=10, lang="en")
-        rows = si.served_search_rows(spark, SF_SMOKE, qv, p_lang, nprobe=4)
-        want = [
-            r.asDict(recursive=True)
-            for r in si.served_search_ivf_sql(
-                spark, SF_SMOKE, qv, p_lang, nprobe=4
-            ).collect()
-        ]
-        assert rows == want
-        assert len(scorer._mask_cache) > 0
-        assert len(si._FILTER_IDS_CACHE) == 0
-        # non-resident filter (tags is in the meta TABLE but outside the
-        # declaration): supports_params declines, id-set fallback serves
         p_tags = SearchParams(k=10, tags=["the", "spark", "fast"])
+        want_lang = _want_rows(spark, qv, p_lang, nprobe=4)
+        want_tags = _want_rows(spark, qv, p_tags, nprobe=4)
+        statements = _spy_statements(monkeypatch)
+        rows = si.served_search_rows(spark, SF_SMOKE, qv, p_lang, nprobe=4)
+        assert rows == want_lang
+        assert len(scorer._mask_cache) > 0
+        assert statements == []
+        # non-resident filter (tags is in the meta TABLE but outside the
+        # declaration): supports_params declines, the Spark IVF
+        # statement serves
         assert not scorer.supports_params(p_tags)
         rows = si.served_search_rows(spark, SF_SMOKE, qv, p_tags, nprobe=4)
-        want = [
-            r.asDict(recursive=True)
-            for r in si.served_search_ivf_sql(
-                spark, SF_SMOKE, qv, p_tags, nprobe=4
-            ).collect()
-        ]
-        assert rows == want
-        assert len(si._FILTER_IDS_CACHE) > 0  # fallback actually ran
+        assert rows == want_tags
+        assert statements == [4]  # the Spark IVF statement served
         # unknown column: loud error, not a broken layout
         with pytest.raises(ValueError, match="nope"):
             si.ivf_warm_index(spark, SF_SMOKE, filter_columns=("nope",))
@@ -502,7 +560,6 @@ def test_declared_filter_columns_drive_scorer_residency(spark, warm):
             spark, SF_SMOKE, filter_columns=si._DEFAULT_FILTER_COLUMNS
         )
         si._LOCAL_IVF_CACHE.clear()
-        si._FILTER_IDS_CACHE.clear()
     restored = si.local_ivf_scorer(spark, SF_SMOKE)
     assert restored is not None and restored.filter_cols == si._DEFAULT_FILTER_COLUMNS
 

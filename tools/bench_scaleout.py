@@ -24,8 +24,7 @@ runs by band, not point).
 
 Part 3 (round 8) — FILTERED composed serving at the reference config
 (2 JVMs x local[16], 20 HTTP users, 3072-d, real proxy, IVF probe):
-mask-hit / mask-cold (the round-8 in-process mask path) vs idset-hit /
-decline (the round-7 fallback paths, pinned via measurement env knobs).
+mask-hit / mask-cold (the in-process mask path).
 
 Usage: python tools/bench_scaleout.py [http|inproc|ivf|composed|filtered|all]
 """
@@ -53,14 +52,12 @@ def pct(xs: list[float], p: float) -> float:
 
 
 def _spawn_http(
-    sf_dir: str, port: int, cores: int, variant: str = "exact",
-    env: dict | None = None,
+    sf_dir: str, port: int, cores: int, variant: str = "exact"
 ) -> subprocess.Popen:
     proc = subprocess.Popen(
         [sys.executable, f"{REPO}/tools/serving_worker.py", "http", sf_dir,
          str(port), str(cores), variant],
         stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
-        env={**os.environ, **(env or {})},
     )
     deadline = time.time() + 180
     while time.time() < deadline:
@@ -109,14 +106,14 @@ def _filter_for(mode: str | None, wave: int, uid: int, i: int) -> dict | None:
 def bench_http(
     n_workers: int, cores: int, users: int = 20, reps: int = 15,
     via_proxy: bool = False, sf_dir: str = SF01, variant: str = "exact",
-    filters_mode: str | None = None, worker_env: dict | None = None,
+    filters_mode: str | None = None,
 ) -> dict:
     ports = [18600 + i for i in range(n_workers)]
     procs = []
     proxy = None
     try:
         for p in ports:  # sequential: first worker builds, rest attach
-            procs.append(_spawn_http(sf_dir, p, cores, variant, env=worker_env))
+            procs.append(_spawn_http(sf_dir, p, cores, variant))
         urls = [f"http://127.0.0.1:{p}/search" for p in ports]
         if via_proxy:
             # a REAL balancer hop (tools/rr_proxy.py): every user hits
@@ -303,32 +300,14 @@ def main() -> None:
         # FILTERED composed serving at the reference config (r7 verdict
         # item 3): same 2 JVMs × local[16], 20 HTTP users, 3072-d
         # corpus, real proxy, IVF probe — but every request carries a
-        # metadata filter.  Four regimes:
+        # metadata filter.  Two regimes:
         #   mask-hit   small repeating filter set → per-cell masks
-        #              cached after first touch (the round-8 primary
-        #              path: zero Spark statements at any selectivity)
+        #              cached after first touch (zero Spark statements
+        #              at any selectivity)
         #   mask-cold  DISTINCT filter per request → every request
         #              builds fresh masks in-process
-        #   idset-hit  masks disabled (measurement knob) → the round-7
-        #              cached-id-set fallback, one Spark statement per
-        #              DISTINCT filter then local
-        #   decline    masks disabled + id cap 0 → EVERY request falls
-        #              back to a full Spark statement (what any broad
-        #              filter paid before round 8)
         sf3072 = ensure_sf3072()
-        regimes = [
-            ("mask-hit", "hit", {}),
-            ("mask-cold", "cold", {}),
-            ("idset-hit", "hit", {"SPARK_GRAFT_DISABLE_FILTER_MASKS": "1"}),
-            (
-                "decline",
-                "hit",
-                {
-                    "SPARK_GRAFT_DISABLE_FILTER_MASKS": "1",
-                    "SPARK_GRAFT_FILTER_IDS_MAX": "0",
-                },
-            ),
-        ]
+        regimes = [("mask-hit", "hit"), ("mask-cold", "cold")]
         # Calibration context (round 11 — r10 verdict item 7): the
         # filtered-serving numbers quoted against BASELINE.md must name
         # the host regime they were measured in, so bracket the study
@@ -369,10 +348,10 @@ def main() -> None:
             "calib_before": _calib_once(),
             "regimes": {},
         }
-        for name, mode, env in regimes:
+        for name, mode in regimes:
             res = bench_http(
                 2, 16, users=20, via_proxy=True, sf_dir=sf3072,
-                variant="ivf:4", filters_mode=mode, worker_env=env,
+                variant="ivf:4", filters_mode=mode,
             )
             record["regimes"][name] = res
             print(

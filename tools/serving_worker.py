@@ -15,8 +15,8 @@ Modes:
       Run <users> concurrent threads x <reps> warm served_search_sql
       requests (stored query vectors, k=10) and print one JSON line of
       latencies — the 3072-d concurrency harness, where HTTP would
-      change the embedding dimension.  ``ivf`` serves through
-      served_search_ivf_sql (nprobe=4/16 — the reference-HNSW-analogue
+      change the embedding dimension.  ``ivf`` passes nprobe=4 of 16
+      cells to served_search_sql (the reference-HNSW-analogue
       approximate mode) and reports recall@10 of each query vs the
       exact path next to the latencies.
 """
@@ -50,7 +50,7 @@ def main() -> None:
         variant = sys.argv[5] if len(sys.argv) > 5 else "exact"
         nprobe = None
         if variant.startswith("ivf"):
-            # "ivf" = nprobe 4 (of served_search_ivf_sql's 16 cells);
+            # "ivf" = nprobe 4 (of served_search_sql's 16 cells);
             # "ivf:8" = nprobe 8 — the cell count stays the serving
             # default so the artifact is shared across workers
             parts = variant.split(":")
@@ -66,7 +66,6 @@ def main() -> None:
 
     from readwise_vector_db_spark.operators.search import SearchParams
     from readwise_vector_db_spark.sources.search_index import (
-        served_search_ivf_sql,
         served_search_sql,
         stored_query_vector,
         warm_tables,
@@ -77,19 +76,17 @@ def main() -> None:
     qvs = [v for v in (stored_query_vector(sf_dir, str(q)) for q in range(1, 6)) if v]
     params = SearchParams(k=10)
 
+    nprobe, n_cells = None, 16
     if variant.startswith("ivf"):
         # "ivf" = nprobe 4 of 16 cells; "ivf:8:64" = nprobe 8 of 64
         parts = variant.split(":")
         nprobe = int(parts[1]) if len(parts) > 1 else 4
         n_cells = int(parts[2]) if len(parts) > 2 else 16
 
-        def request(qv):
-            return served_search_ivf_sql(
-                spark, sf_dir, qv, params, nprobe=nprobe, n_clusters=n_cells
-            )
-    else:
-        def request(qv):
-            return served_search_sql(spark, sf_dir, qv, params)
+    def request(qv):
+        return served_search_sql(
+            spark, sf_dir, qv, params, nprobe=nprobe, n_clusters=n_cells
+        )
 
     recall = None
     if variant.startswith("ivf"):
