@@ -1613,9 +1613,13 @@ def semantic_dedup(
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     numeric_ids = isinstance(embs.schema[id_col].dataType, NumericType)
     if not numeric_ids:
+        # the densify reads the pair list three times (both vertex
+        # branches and the id-mapping joins): cache it so the scorer
+        # runs once
+        scored = edges.persist()
         verts = (
-            edges.select(F.col("src").alias("oid"))
-            .union(edges.select("dst"))
+            scored.select(F.col("src").alias("oid"))
+            .union(scored.select("dst"))
             .distinct()
         )
         # global row_number: one single-partition pass over the
@@ -1624,7 +1628,7 @@ def semantic_dedup(
             "nid", F.row_number().over(Window.orderBy("oid"))
         ).persist()
         edges = (
-            edges.join(mapping.withColumnRenamed("oid", "src"), "src")
+            scored.join(mapping.withColumnRenamed("oid", "src"), "src")
             .select(F.col("nid").alias("src"), "dst")
             .join(mapping.withColumnRenamed("oid", "dst"), "dst")
             .select("src", F.col("nid").alias("dst"))
@@ -1638,7 +1642,7 @@ def semantic_dedup(
         losers = losers.join(
             mapping.withColumnRenamed("nid", "id"), "id"
         ).select(F.col("oid").alias(id_col))
-        register_cached(mapping)
+        register_cached(scored, mapping)
     else:
         losers = losers.select(F.col("id").alias(id_col))
     return embs.join(losers, id_col, "left_anti")

@@ -46,7 +46,7 @@ grow EXPONENTIALLY without truncation (each round nests two
 join+distinct stages — by round ~7 of the predecessor algorithm the
 plan string alone crossed 2 GB and killed the driver), and persist()
 does not truncate lineage, only caches results.  Local mode uses
-``localCheckpoint(eager=True)``; pass ``checkpoint_dir=`` to use
+``localCheckpoint(eager=False)``; pass ``checkpoint_dir=`` to use
 reliable ``checkpoint()`` into HDFS/object storage instead, which
 survives executor loss — what GraphX/GraphFrames do for exactly this
 reason, and what a 1000-executor 100 TB run requires.
@@ -100,6 +100,11 @@ def connected_components(
     localCheckpoint blocks are executor-memory/disk-resident — one lost
     executor mid-iteration kills the job at 100 TB; a reliable
     checkpoint survives executor loss at the cost of a write per round.
+
+    ``edges`` is evaluated exactly once: its normalized form is cut()
+    before anything reads it, and every later step reads that copy.
+    An expensive pair plan (a band join, a UDF scorer) therefore runs
+    once per call, not once per consumer.
     """
     spark = edges.sparkSession
     if checkpoint_dir is not None:
@@ -119,16 +124,16 @@ def connected_components(
     else:
 
         def cut(df: DataFrame) -> DataFrame:
-            # LAZY (round 13, guide §1.2): every round's cut() is
-            # immediately followed by a 1-row fixpoint aggregate, so an
-            # eager checkpoint paid TWO driver-blocking jobs per round
-            # — one to materialize, one to aggregate.  eager=False
-            # truncates the lineage identically (the returned frame is
-            # a LogicalRDD either way) but lets the fixpoint action
-            # itself materialize the checkpoint blocks: one job per
-            # round instead of two, halving the driver-latency floor of
-            # the iterative loop.  Consumers after the first action
-            # read the materialized blocks exactly as before.
+            # LAZY only in its last stage: localCheckpoint executes the
+            # physical plan to get its RDD, and under AQE that runs
+            # every upstream shuffle stage inside this call (a cProfile
+            # of dedup_clusters on 4 cores put 2.75 s of a 4.18 s op
+            # inside its four localCheckpoint calls).  What eager=False
+            # defers is the final, post-shuffle stage: the 1-row
+            # fixpoint aggregate that follows every round runs it and
+            # caches the checkpoint blocks, one job instead of a
+            # separate count() job.  The lineage is truncated either
+            # way (the returned frame is a LogicalRDD).
             return df.localCheckpoint(eager=False)
 
     e = (
@@ -140,6 +145,12 @@ def connected_components(
         e = e.select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
         ).distinct()
+    # the ONE evaluation of the caller's edge plan: sym reads e twice
+    # and phase 2 reads it three more times, and an uncut e re-runs the
+    # caller's whole plan (for dedup_clusters the MinHash band join and
+    # the exact-edge join) on every read
+    e = cut(e)
+
     def large_star(cur: DataFrame) -> DataFrame:
         # center u over ALL neighbors; strictly larger neighbors re-link
         # to m(u) = min(N(u) ∪ {u})
@@ -257,7 +268,7 @@ def connected_components(
         .unionByName(e.select(F.col("b").alias("id")))
         .distinct()
     )
-    cur = cut(e)
+    cur = e
     prev = checksum(cur)
     converged = prev[0] == 0
     for _ in range(max_iter):

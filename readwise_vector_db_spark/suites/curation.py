@@ -119,9 +119,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b")
     # exact edges are keep→non-rep, mh edges are rep↔rep: disjoint by
     # construction, so the symmetric-closure distinct can be skipped
-    return resolve_clusters(
+    clusters = resolve_clusters(
         exact_edges.unionByName(mh_edges), distinct_edges=False
     )
+    # the CC has materialized the edge list: nothing reads these again
+    fps.unpersist()
+    docs.unpersist()
+    return clusters
 
 
 # --- decontamination --------------------------------------------------------

@@ -229,3 +229,30 @@ def test_remove_boilerplate_rejects_bad_params(spark):
         remove_boilerplate(docs, min_df=1)
     with pytest.raises(ValueError):
         remove_boilerplate(docs, strategy="bogus")
+
+
+def test_dedup_clusters_releases_its_caches(spark):
+    """dedup_clusters caches the augmented corpus and its fingerprints
+    so the corpus is scanned once; once the result is consumed and the
+    detector caches are released, the session caches nothing.  (Its
+    rows are hash-checked against the DuckDB oracle by
+    test_oracle_parity; here they only have to be well-formed clusters.)"""
+    from collections import defaultdict
+
+    from readwise_vector_db_spark.operators.dedup import release_detector_cache
+    from readwise_vector_db_spark.suites.curation import dedup_clusters
+    from tests.conftest import SF_SMOKE
+
+    release_detector_cache()
+    spark.catalog.clearCache()
+    rows = dedup_clusters(spark, SF_SMOKE).collect()
+    release_detector_cache()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    members = defaultdict(set)
+    for r in rows:
+        members[r["cluster_id"]].add(r["doc_id"])
+    assert rows and len({r["doc_id"] for r in rows}) == len(rows)
+    for r in rows:
+        assert r["cluster_id"] == min(members[r["cluster_id"]])
+        assert r["cluster_size"] == len(members[r["cluster_id"]]) >= 2

@@ -132,3 +132,39 @@ def test_shuffled_ring_converges_within_bound(spark):
     out = connected_components(df, max_iter=12).collect()
     assert {r["component"] for r in out} == {min(ids)}
     assert len(out) == n
+
+
+@pytest.mark.parametrize("distinct_edges", [True, False])
+@pytest.mark.parametrize("reliable", [False, True])
+def test_edge_plan_evaluated_once(spark, tmp_path, distinct_edges, reliable):
+    """The caller's edge plan runs once per call, however many times the
+    algorithm reads the edges: a Python UDF in that plan bumps an
+    accumulator once per input row.  The shuffled ring outlives phase 1,
+    so phase 2's vertex and edge reads are covered too."""
+    from pyspark.sql import functions as F
+
+    rng = random.Random(5)
+    ids = list(range(200, 264))
+    rng.shuffle(ids)
+    ring = [(ids[i], ids[(i + 1) % len(ids)]) for i in range(len(ids))]
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def bump(v):
+        evaluated.add(1)
+        return v
+
+    # nondeterministic, so the optimizer cannot copy the call into the
+    # CC's null/self-loop filter (a second evaluation per row that no
+    # materialization could save)
+    counted = F.udf(bump, "long").asNondeterministic()
+
+    edges = spark.createDataFrame(ring, "src long, dst long").select(
+        counted("src").alias("src"), "dst"
+    )
+    out = connected_components(
+        edges,
+        checkpoint_dir=str(tmp_path / "ckpt") if reliable else None,
+        distinct_edges=distinct_edges,
+    ).collect()
+    assert {r["component"] for r in out} == {min(ids)}
+    assert evaluated.value == len(ring)

@@ -254,3 +254,58 @@ def test_assign_cells_blas_route_matches_expr_route(spark):
     for m in ("expr", "blas"):
         got = sim.assign_cells(nulls, q, vec_col="v", method=m).collect()
         assert got[0]["cluster"] is None
+
+
+def _plan_node_names(plan) -> list[str]:
+    """Names of the operators a physical plan EXECUTES: AQE wrappers and
+    query stages are unwrapped, a cache scan is a leaf (its cached plan
+    ran once, when the cache filled)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _plan_node_names(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _plan_node_names(plan.plan())
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_node_names(kids.apply(i))
+    ]
+
+
+def test_string_id_densify_scores_pairs_once(spark, monkeypatch):
+    """The string-id path reads the pair list three times (both vertex
+    branches and the id-mapping joins) before the CC; the scorer must
+    not run once per read.  Survivors equal the numeric-id path's."""
+    import random
+
+    from readwise_vector_db_spark.operators import graph
+
+    rng = random.Random(0)
+    vecs = [[rng.gauss(0.0, 1.0) for _ in range(8)] for _ in range(200)]
+    vecs += [vecs[i] for i in range(0, 200, 5)]  # 40 planted copies
+    cc_inputs = []
+    real_cc = graph.connected_components
+
+    def spy(edges, **kw):
+        cc_inputs.append(edges)
+        return real_cc(edges, **kw)
+
+    monkeypatch.setattr(graph, "connected_components", spy)
+    str_df = spark.createDataFrame(
+        [(f"d{i:04d}", v) for i, v in enumerate(vecs)],
+        "vec_id string, embedding array<float>",
+    )
+    got = {
+        r["vec_id"]
+        for r in dd.semantic_dedup(str_df, threshold=0.99, n_clusters=4).collect()
+    }
+    plan = cc_inputs[0]._jdf.queryExecution().executedPlan()
+    assert "FlatMapGroupsInPandas" not in _plan_node_names(plan)
+
+    num_df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id bigint, embedding array<float>"
+    )
+    want = {
+        f"d{r['vec_id']:04d}"
+        for r in dd.semantic_dedup(num_df, threshold=0.99, n_clusters=4).collect()
+    }
+    assert got == want and len(got) == 200
