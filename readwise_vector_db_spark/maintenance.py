@@ -101,11 +101,12 @@ def cell_coherence_frame(
     index-resident twin of ``index_lifecycle.cell_distortion_frame``
     (which scores raw increment vectors).  One Arrow map pass sharing
     the probes' decode gemm, one cells-sized shuffle of partials."""
-    from readwise_vector_db_spark.operators.pq import pq_reconstruct
+    from readwise_vector_db_spark.operators.quantizer import (
+        CoarseCells,
+        pq_reconstruct,
+    )
 
-    ordered = sorted(centroids)
-    c = np.asarray([v for _, v in ordered], dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    coarse = CoarseCells(centroids)
     books32 = [np.asarray(b, dtype=np.float32) for b in books]
     rot = None if rotation is None else np.asarray(rotation, dtype=np.float64)
 
@@ -118,10 +119,7 @@ def cell_coherence_frame(
             recon = pq_reconstruct(
                 np.asarray(list(pdf["pq_code"]), dtype=np.int64), books32, rot
             )
-            xn = recon / np.maximum(
-                np.linalg.norm(recon, axis=1, keepdims=True), 1e-12
-            )
-            d = 1.0 - (xn @ cn.T).max(axis=1)
+            d = coarse.cos_dist(recon)
             yield pd.DataFrame(
                 {"cluster": pdf["cluster"].to_numpy(np.int32), "_cd": d}
             )

@@ -13,9 +13,11 @@ does not depend on how a row stores its vector lives here, once:
   flat PQ layout);
 - drift remediation by cell split (:func:`recluster`), parameterized by
   a small per-family :class:`CellCodec`;
-- the family-agnostic helpers: :func:`kmeans_np`,
-  :func:`uniform_vector_sample`, :func:`cell_distortion_frame`,
+- the family-agnostic helpers: :func:`cell_distortion_frame` and
   :func:`dir_bytes`.
+
+Which cell a vector belongs to is ``quantizer.CoarseCells``'s rule, the
+one the IVF-PQ encoder and ``similarity.assign_cells`` use.
 
 The reference keeps one vector index with one lifecycle: Postgres
 builds it, maintains it in place and can REINDEX it (migration
@@ -37,128 +39,13 @@ from pyspark.sql import functions as F
 
 from readwise_vector_db_spark import storage
 from readwise_vector_db_spark.layout import maintenance_lease
+from readwise_vector_db_spark.operators.quantizer import (
+    CoarseCells,
+    kmeans_np,
+    uniform_vector_sample,
+)
 
 # --- family-agnostic helpers -------------------------------------------------
-
-
-def kmeans_np(
-    x: np.ndarray, k: int, iters: int, seed: int, init: np.ndarray | None = None
-) -> np.ndarray:
-    """Deterministic Lloyd's k-means (numpy): k centroids of x.
-    ``init`` warm-starts from given centroids (the OPQ alternation
-    refreshes codebooks incrementally instead of re-seeding)."""
-    rng = np.random.RandomState(seed)
-    n = x.shape[0]
-    if init is not None:
-        cents = init.copy()
-        for _ in range(iters):
-            d2 = ((x**2).sum(1)[:, None] - 2 * x @ cents.T + (cents**2).sum(1)[None, :])
-            assign = d2.argmin(1)
-            for j in range(k):
-                mask = assign == j
-                if mask.any():
-                    cents[j] = x[mask].mean(0)
-        return cents
-    if n <= k:
-        # degenerate: every point its own centroid, pad by repeating
-        reps = x[rng.choice(n, size=k, replace=True)]
-        reps[: min(n, k)] = x[: min(n, k)]
-        return reps
-    cents = x[rng.choice(n, size=k, replace=False)]
-    for _ in range(iters):
-        # (n, k) distances via the expansion trick; argmin per row
-        d2 = ((x**2).sum(1)[:, None] - 2 * x @ cents.T + (cents**2).sum(1)[None, :])
-        assign = d2.argmin(1)
-        for j in range(k):
-            mask = assign == j
-            if mask.any():
-                cents[j] = x[mask].mean(0)
-    return cents
-
-
-def uniform_vector_sample(
-    vecs: DataFrame,
-    vec_col: str,
-    sample_rows: int,
-    seed: int,
-    with_total: bool = False,
-):
-    """Uniform sample (without replacement) of a vector column in a
-    SINGLE map-only pass — the bottom-k sketch behind PQ codebook
-    training, ``coarse_distortion`` and :func:`recluster`'s drifted
-    sample.  Each row draws a U(0,1) key from a partition-seeded RNG and
-    each partition keeps its bottom-``quota`` keys (globally, the rows
-    with the smallest keys ARE a uniform sample without replacement);
-    the driver trims to the global bottom ``sample_rows``.  The
-    per-partition quota carries 2.5× slack over the balanced share;
-    fixed-width vector tables under ``maxPartitionBytes`` splitting are
-    row-balanced, so the sketch loses nothing.  NOT ``limit()`` (and
-    not ``sample(fraction).limit()``): limit takes the first partitions
-    — a spatially biased slice (one ingest epoch, one source).
-
-    ``with_total=True`` returns ``(sample, total_rows)`` — each
-    partition also emits its non-null row count in the SAME pass, so
-    callers needing the population size (e.g. the rescore-factor
-    probe's corpus/sample scaling) pay no extra scan."""
-    live = vecs.select(F.col(vec_col).cast("array<float>").alias("v")).filter(
-        F.col("v").isNotNull()
-    )
-    # Partition count from the UNFILTERED input (r9): a filtered plan's
-    # RDD partition count can diverge from the scan's under AQE.  This
-    # deliberately stays the plan's ACTUAL count, not an upper bound
-    # like defaultParallelism: quota must be ≥ 2.5× the balanced share
-    # over the partitions that really run (2.5·S/actual) — dividing by
-    # a 32-way parallelism cap when the scan has 4 partitions keeps
-    # 4·(2.5·S/32) ≈ 0.3·S rows total and silently starves the sample.
-    # The .rdd conversion is one driver-side plan analysis immediately
-    # before a full scan job — noise against the job it sizes.
-    nparts = max(1, vecs.rdd.getNumPartitions())
-    quota = max(1, -(-int(2.5 * sample_rows) // nparts))
-
-    def bottomk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rng = None
-        kept_k: np.ndarray | None = None
-        kept_v: list | None = None
-        seen = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            seen += len(pdf)
-            if rng is None:
-                rng = np.random.default_rng(
-                    seed * 1_000_003 + int(pdf["pid"].iloc[0])
-                )
-            keys = rng.random(len(pdf))
-            if kept_k is None:
-                kk, kv = keys, list(pdf["v"])
-            else:
-                kk = np.concatenate([kept_k, keys])
-                kv = kept_v + list(pdf["v"])
-            if len(kk) > quota:
-                sel = np.argpartition(kk, quota - 1)[:quota]
-                kept_k, kept_v = kk[sel], [kv[i] for i in sel]
-            else:
-                kept_k, kept_v = kk, kv
-        if kept_k is not None:
-            # summary row (k=2.0 > any U(0,1) key — never in the bottom-k)
-            yield pd.DataFrame(
-                {
-                    "k": list(kept_k.astype(float)) + [2.0],
-                    "v": kept_v + [None],
-                    "cnt": [0] * len(kept_v) + [seen],
-                }
-            )
-
-    rows = (
-        live.withColumn("pid", F.spark_partition_id())
-        .mapInPandas(bottomk, schema="k double, v array<float>, cnt long")
-        .collect()
-    )
-    total = sum(r["cnt"] for r in rows)
-    rows = [r for r in rows if r["v"] is not None]
-    rows.sort(key=lambda r: r["k"])  # global bottom-k = the uniform sample
-    sample = [r["v"] for r in rows[:sample_rows]]
-    return (sample, total) if with_total else sample
 
 
 def cell_distortion_frame(
@@ -172,11 +59,7 @@ def cell_distortion_frame(
     plus one tiny shuffle of (cell, partials).  This is the statistic
     :func:`recluster` localizes drift with: not "the increment is
     drifted" but "cells 3 and 17 are where the drifted mass lands"."""
-    ordered = sorted(centroids)
-    cell_ids = np.asarray([int(c) for c, _ in ordered], dtype=np.int64)
-    c = np.asarray([v for _, v in ordered], dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-
+    coarse = CoarseCells(centroids)
     schema = "cluster int, _cd double"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -184,15 +67,12 @@ def cell_distortion_frame(
             if len(pdf) == 0:
                 continue
             raw = np.asarray(list(pdf["_v"]), dtype=np.float64)
-            # assignment on the RAW vector (ivfpq_encode semantics)
-            cells = cell_ids[
-                np.argmin((c * c).sum(1)[None, :] - 2.0 * (raw @ c.T), 1)
-            ]
-            xn = raw / np.maximum(
-                np.linalg.norm(raw, axis=1, keepdims=True), 1e-12
+            yield pd.DataFrame(
+                {
+                    "cluster": coarse.assign(raw).astype(np.int32),
+                    "_cd": coarse.cos_dist(raw),
+                }
             )
-            d = 1.0 - (xn @ cn.T).max(axis=1)
-            yield pd.DataFrame({"cluster": cells.astype(np.int32), "_cd": d})
 
     return (
         vecs.select(F.col(vec_col).cast("array<float>").alias("_v"))
@@ -530,13 +410,7 @@ def recluster(
             )
             if samp:
                 x = np.asarray([list(v) for v in samp], dtype=np.float64)
-                ids_sorted = np.asarray(sorted(cent_by_id), dtype=np.int64)
-                cmat = np.asarray(
-                    [cent_by_id[int(c)] for c in ids_sorted], dtype=np.float64
-                )
-                assign = ids_sorted[
-                    np.argmin((cmat * cmat).sum(1)[None, :] - 2.0 * (x @ cmat.T), 1)
-                ]
+                assign = CoarseCells(centroids).assign(x)
                 if codec.unit_space:
                     raw_norms = np.maximum(np.linalg.norm(x, axis=1), 1e-12)
                     x = x / raw_norms[:, None]
@@ -622,7 +496,9 @@ def recluster(
         # --- re-assign ONLY the offending cells' rows --------------------
         cols = rows_all.columns
         code_col = codec.code_col
-        splits_bc = {c: (ids.copy(), sub.copy()) for c, (ids, sub) in split_cents.items()}
+        splits_bc = {
+            c: CoarseCells(zip(ids, sub)) for c, (ids, sub) in split_cents.items()
+        }
 
         def reassign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -631,13 +507,11 @@ def recluster(
                 cluster = pdf["cluster"].to_numpy()
                 out_cluster = cluster.copy()
                 codes = pdf[code_col].to_numpy()
-                for c, (ids, sub) in splits_bc.items():
+                for c, split in splits_bc.items():
                     mask = cluster == c
                     if not mask.any():
                         continue
-                    xv = decode(codes[mask])
-                    d2 = (sub * sub).sum(1)[None, :] - 2.0 * (xv @ sub.T)
-                    out_cluster[mask] = ids[d2.argmin(1)]
+                    out_cluster[mask] = split.assign(decode(codes[mask]))
                 pdf = pdf.assign(cluster=out_cluster.astype(np.int32))
                 yield pdf[cols]
 

@@ -20,11 +20,13 @@ adds, no float math against the original vector, which is never read.
 Scale shape: codebooks train on a driver-side SAMPLE (the FAISS
 practice — 256 centroids per subspace saturate long before millions of
 training rows), encoding is one vectorized mapInPandas pass (gemm per
-subspace), and the scan ships only (id, m bytes) — compose with the
-IVF layout (operators/similarity.py) for cell pruning on top, exactly
-IVF-PQ.  Scores are approximate; ``rescore=`` re-ranks the top
-candidates with the exact JVM fold so the returned scores are true
-cosines (the knn_join_blocked pattern).
+subspace) — both in ``operators/quantizer.py`` — and the scan ships
+only (id, m bytes) — compose with the IVF layout
+(operators/similarity.py) for cell pruning on top, exactly IVF-PQ.
+This module owns the layouts (save/load, append, recluster, rebuild),
+rescore-factor sizing and the ADC searches.  Scores are approximate;
+``rescore=`` re-ranks the top candidates with the exact JVM fold so
+the returned scores are true cosines (the knn_join_blocked pattern).
 
 No reference counterpart (the reference's pgvector HNSW stores full
 vectors) — north-star scope, SURVEY §2.7.
@@ -47,7 +49,7 @@ from readwise_vector_db_spark import storage as _storage
 from readwise_vector_db_spark.layout import check_layout as _check_layout
 from readwise_vector_db_spark.layout import stamp_layout as _stamp_layout
 from readwise_vector_db_spark.operators import index_lifecycle as _lifecycle
-from readwise_vector_db_spark.session import env_int as _env_int
+from readwise_vector_db_spark.operators import quantizer
 
 # Max candidate-union size pushed into the batched rescore scan as an
 # IN literal (round 13 — r12 residue item 2).  Below this, the literal
@@ -55,146 +57,8 @@ from readwise_vector_db_spark.session import env_int as _env_int
 # larger batch would bloat the plan with a multi-MB expression, so the
 # broadcast candidate join (which already bounds the rows exactly)
 # carries the restriction alone.  Serving fan-in (nq·k·rescore_factor)
-# sits far below the default; env-tunable for offline batch callers.
-ISIN_PUSHDOWN_MAX_IDS = _env_int("SPARK_GRAFT_ISIN_PUSHDOWN_MAX_IDS", 8192)
-
-
-def train_pq_codebooks(
-    vecs: DataFrame,
-    m: int = 8,
-    k: int = 256,
-    vec_col: str = "embedding",
-    sample_rows: int = 20_000,
-    iters: int = 12,
-    seed: int = 7,
-) -> list[np.ndarray]:
-    """Learn ``m`` codebooks of ``k`` centroids each from (a sample of)
-    the corpus.  Vectors are l2-normalized before splitting so ADC
-    inner products sum to the cosine; d must divide by m.  Returns a
-    list of (k, d/m) float32 arrays — the whole model is m·k·(d/m) =
-    k·d floats, broadcastable anywhere.
-
-    Sampling is a SINGLE map-only pass via the bottom-k sketch
-    (``index_lifecycle.uniform_vector_sample``) — no ``count()`` pre-pass, no
-    first-partitions bias."""
-    sample = _lifecycle.uniform_vector_sample(vecs, vec_col, sample_rows, seed)
-    x = np.asarray(sample, dtype=np.float32)
-    if x.ndim != 2 or x.shape[0] == 0:
-        raise ValueError("train_pq_codebooks needs a non-empty vector column")
-    d = x.shape[1]
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    sub = d // m
-    return [
-        _lifecycle.kmeans_np(
-            np.ascontiguousarray(x[:, j * sub : (j + 1) * sub], dtype=np.float64),
-            k,
-            iters,
-            seed + j,
-        ).astype(np.float32)
-        for j in range(m)
-    ]
-
-
-def train_opq(
-    vecs: DataFrame,
-    m: int = 8,
-    k: int = 256,
-    vec_col: str = "embedding",
-    sample_rows: int = 20_000,
-    iters: int = 12,
-    opq_iters: int = 10,
-    inner_iters: int = 2,
-    seed: int = 7,
-) -> tuple[np.ndarray, list[np.ndarray]]:
-    """OPQ: learn an orthogonal rotation R that minimizes quantization
-    error BEFORE subspace splitting, then the codebooks on the rotated
-    sample — the non-parametric alternation of Ge, He, Ke, Sun,
-    "Optimized Product Quantization" (CVPR 2013, public).  Plain PQ
-    quantizes each d/m-dim slice independently, so when variance/
-    correlation is unevenly spread across the NATIVE axes (every real
-    embedding model; the margin-concentrated regime where the round-7
-    curves measured raw ADC at 0.06–0.24 recall@10) some subspaces
-    carry most of the error.  The alternation:
-
-        repeat: codebooks ← Lloyd refresh on X·R (warm-started)
-                Y ← per-subspace reconstruction of X·R
-                R ← argmin_R ||X·R − Y||_F  =  U·Vᵀ of SVD(Xᵀ·Y)
-                (orthogonal Procrustes — the closed-form step)
-
-    Returns ``(rotation, codebooks)``; encode/search take ``rotation=``
-    and apply it to rows and queries symmetrically — R is orthogonal so
-    rotated inner products EQUAL original inner products, and ADC scores
-    remain approximate cosines of the ORIGINAL vectors.  Everything is
-    driver-side on the same bottom-k uniform sample as
-    :func:`train_pq_codebooks` (model fitting is sample-bounded; the
-    corpus pass stays one vectorized encode).  Cost at 3072-d/20 k rows:
-    the XᵀY gemm + d×d SVD per alternation — seconds, offline."""
-    sample = _lifecycle.uniform_vector_sample(vecs, vec_col, sample_rows, seed)
-    x = np.asarray(sample, dtype=np.float64)
-    if x.ndim != 2 or x.shape[0] == 0:
-        raise ValueError("train_opq needs a non-empty vector column")
-    d = x.shape[1]
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    sub = d // m
-    rot = np.eye(d)
-    books: list[np.ndarray] | None = None
-    for _ in range(max(1, opq_iters)):
-        xr = x @ rot
-        books = [
-            _lifecycle.kmeans_np(
-                np.ascontiguousarray(xr[:, j * sub : (j + 1) * sub]),
-                k,
-                inner_iters,
-                seed + j,
-                init=books[j] if books is not None else None,
-            )
-            for j in range(m)
-        ]
-        y = np.empty_like(xr)
-        for j, b in enumerate(books):
-            xs = xr[:, j * sub : (j + 1) * sub]
-            d2 = (xs**2).sum(1)[:, None] - 2 * xs @ b.T + (b**2).sum(1)[None, :]
-            y[:, j * sub : (j + 1) * sub] = b[d2.argmin(1)]
-        u, _, vt = np.linalg.svd(x.T @ y)
-        rot = u @ vt
-    # final polish: full Lloyd budget on the converged rotation
-    xr = x @ rot
-    books = [
-        _lifecycle.kmeans_np(
-            np.ascontiguousarray(xr[:, j * sub : (j + 1) * sub]),
-            k,
-            iters,
-            seed + j,
-            init=books[j],
-        ).astype(np.float32)
-        for j in range(m)
-    ]
-    return rot.astype(np.float32), books
-
-
-def quantization_error(
-    x: np.ndarray, codebooks: list[np.ndarray], rotation: np.ndarray | None = None
-) -> float:
-    """Mean squared reconstruction error of (rotated) rows against the
-    codebooks — the objective both trainers minimize; used to verify
-    OPQ's rotation actually helps on a given sample."""
-    x = np.asarray(x, dtype=np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    if rotation is not None:
-        x = x @ np.asarray(rotation, dtype=np.float64)
-    m = len(codebooks)
-    sub = codebooks[0].shape[1]
-    err = 0.0
-    for j, b in enumerate(codebooks):
-        b = np.asarray(b, dtype=np.float64)
-        xs = x[:, j * sub : (j + 1) * sub]
-        d2 = (xs**2).sum(1)[:, None] - 2 * xs @ b.T + (b**2).sum(1)[None, :]
-        err += float(np.maximum(d2.min(1), 0.0).sum())
-    return err / x.shape[0]
+# sits far below it.
+ISIN_PUSHDOWN_MAX_IDS = 8192
 
 
 def estimate_rescore_factor(
@@ -238,7 +102,7 @@ def estimate_rescore_factor(
     per trained model, next to the training job."""
     if not 0 < target_recall <= 1:
         raise ValueError("target_recall must be in (0, 1]")
-    sample, total = _lifecycle.uniform_vector_sample(
+    sample, total = quantizer.uniform_vector_sample(
         vecs, vec_col, sample_corpus, seed, with_total=True
     )
     x = np.asarray(sample, dtype=np.float64)
@@ -248,15 +112,9 @@ def estimate_rescore_factor(
     n = x.shape[0]
     nq = min(n_queries, n)
     k = min(k, n)
-    m = len(codebooks)
     sub = codebooks[0].shape[1]
     xr = x @ np.asarray(rotation, dtype=np.float64) if rotation is not None else x
-    codes = np.empty((n, m), dtype=np.int64)
-    for j, b in enumerate(codebooks):
-        b = np.asarray(b, dtype=np.float64)
-        xs = xr[:, j * sub : (j + 1) * sub]
-        d2 = (xs**2).sum(1)[:, None] - 2 * xs @ b.T + (b**2).sum(1)[None, :]
-        codes[:, j] = d2.argmin(1)
+    codes = quantizer.pq_codes(xr, codebooks)
     exact = x @ x[:nq].T  # (n, nq) true cosines
     adc = np.zeros((n, nq), dtype=np.float64)
     for j, b in enumerate(codebooks):
@@ -545,72 +403,6 @@ def _spawn_rf_refresh(key, rescore, codebooks, rotation, k, vec_col) -> None:
         raise
 
 
-def pq_encode(
-    vecs: DataFrame,
-    codebooks: list[np.ndarray],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rotation: np.ndarray | None = None,
-) -> DataFrame:
-    """(id, pq_code array<int>): each vector l2-normalized, split into
-    m subvectors, each assigned its nearest codebook centroid — one
-    vectorized gemm per subspace per Arrow batch, map-only.  The id
-    column keeps its input type (long, string, UUID — anything Arrow
-    round-trips).  ``rotation`` (from :func:`train_opq`) is applied
-    after normalization and before splitting; it ships to executors
-    once (d² float32 — 36 MB at 3072-d, broadcast-sized)."""
-    m = len(codebooks)
-    sub = codebooks[0].shape[1]
-    books = [np.asarray(b, dtype=np.float32) for b in codebooks]
-    rot32 = None if rotation is None else np.asarray(rotation, dtype=np.float32)
-
-    schema = T.StructType(
-        [
-            T.StructField("pq_id", vecs.schema[id_col].dataType, False),
-            T.StructField("pq_code", T.ArrayType(T.IntegerType()), False),
-        ]
-    )
-
-    d_expect = m * sub
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"pq_id": [], "pq_code": []})
-                continue
-            lens = pdf["v"].map(len)
-            if (lens != d_expect).any():
-                bad = pdf["id"][lens != d_expect].iloc[0]
-                raise ValueError(
-                    f"pq_encode: vector id={bad} has dim {lens[lens != d_expect].iloc[0]},"
-                    f" codebooks expect {d_expect}"
-                )
-            x = np.asarray(list(pdf["v"]), dtype=np.float32)
-            x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-            if rot32 is not None:
-                x = x @ rot32
-            codes = np.empty((x.shape[0], m), dtype=np.int32)
-            for j, b in enumerate(books):
-                xs = x[:, j * sub : (j + 1) * sub]
-                d2 = (
-                    (xs**2).sum(1)[:, None]
-                    - 2 * xs @ b.T
-                    + (b**2).sum(1)[None, :]
-                )
-                codes[:, j] = d2.argmin(1)
-            yield pd.DataFrame(
-                {"pq_id": pdf["id"].values, "pq_code": list(codes)}
-            )
-
-    base = vecs.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<float>").alias("v"),
-    ).filter(F.col("v").isNotNull())
-    return base.mapInPandas(run, schema=schema).select(
-        F.col("pq_id").alias(id_col), "pq_code"
-    )
-
-
 def save_pq_index(
     codes: DataFrame,
     codebooks: list[np.ndarray],
@@ -644,6 +436,12 @@ def save_pq_index(
                 base_vecs, codebooks, rotation=rotation, ks=rf_ks, vec_col=vec_col
             ),
         )
+    _write_codebooks(spark, codebooks, path)
+    _stamp_layout(path, "pq")  # last: a half-written build is never stamped
+
+
+def _write_codebooks(spark, codebooks: list[np.ndarray], path: str) -> None:
+    """``{path}/codebooks``: one (subspace, centroid, vec) table."""
     rows = [
         (j, c, [float(x) for x in b[c]])
         for j, b in enumerate(codebooks)
@@ -652,7 +450,17 @@ def save_pq_index(
     spark.createDataFrame(
         rows, "subspace int, centroid int, vec array<float>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    _stamp_layout(path, "pq")  # last: a half-written build is never stamped
+
+
+def _read_codebooks(spark, path: str) -> list[np.ndarray]:
+    """The float32 codebooks :func:`_write_codebooks` persisted, in
+    subspace order."""
+    cb = spark.read.parquet(f"{path}/codebooks").collect()
+    books = []
+    for j in range(1 + max(r["subspace"] for r in cb)):
+        ents = sorted((r["centroid"], r["vec"]) for r in cb if r["subspace"] == j)
+        books.append(np.asarray([v for _, v in ents], dtype=np.float32))
+    return books
 
 
 def save_rotation(spark, rotation: np.ndarray, path: str) -> None:
@@ -688,103 +496,7 @@ def load_pq_index(spark, path: str) -> tuple[DataFrame, list[np.ndarray]]:
     _prime_persisted_rf(path)
     _storage.recover_swap(path, "codes")
     codes = _lifecycle.apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
-    cb = spark.read.parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r["subspace"] for r in cb)
-    books = []
-    for j in range(m):
-        ents = sorted(
-            (r["centroid"], r["vec"]) for r in cb if r["subspace"] == j
-        )
-        books.append(np.asarray([v for _, v in ents], dtype=np.float32))
-    return codes, books
-
-
-def ivfpq_encode(
-    vecs: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[np.ndarray],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rotation: np.ndarray | None = None,
-) -> DataFrame:
-    """(id, cluster, pq_code): coarse-quantizer cell + PQ byte code in
-    ONE map-only Arrow pass (a gemm against the centroid matrix for the
-    cell — same argmin semantics as ``assign_cells(method="blas")`` —
-    plus one gemm per subspace for the code).  No join, no shuffle; the
-    write side partitions by ``cluster`` so probes prune directories.
-
-    This is FAISS IVF-PQ's layout half (Jégou et al. 2011) over parquet:
-    codes are computed on the l2-normalized vector (not the residual) so
-    the same codebooks serve both the flat and the IVF-composed scan and
-    ADC sums stay cosines.  ``rotation`` (OPQ) applies to the CODE side
-    only — the coarse cell stays in the original space, so the probe's
-    centroid ranking, the persisted layout, and the drift statistics
-    are all rotation-invariant."""
-    if not centroids:
-        raise ValueError("ivfpq_encode needs a non-empty centroid list")
-    m = len(codebooks)
-    sub = codebooks[0].shape[1]
-    books = [np.asarray(b, dtype=np.float32) for b in codebooks]
-    rot32 = None if rotation is None else np.asarray(rotation, dtype=np.float32)
-    ordered = sorted(centroids)
-    cell_ids = np.asarray([int(c) for c, _ in ordered], dtype=np.int64)
-    cmat = np.asarray([v for _, v in ordered], dtype=np.float64)
-    c_sq = (cmat * cmat).sum(axis=1)
-
-    schema = T.StructType(
-        [
-            T.StructField("pq_id", vecs.schema[id_col].dataType, False),
-            T.StructField("cluster", T.IntegerType(), False),
-            T.StructField("pq_code", T.ArrayType(T.IntegerType()), False),
-        ]
-    )
-
-    d_expect = m * sub
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"pq_id": [], "cluster": [], "pq_code": []})
-                continue
-            lens = pdf["v"].map(len)
-            if (lens != d_expect).any():
-                bad = pdf["id"][lens != d_expect].iloc[0]
-                raise ValueError(
-                    f"ivfpq_encode: vector id={bad} has dim"
-                    f" {lens[lens != d_expect].iloc[0]}, model expects {d_expect}"
-                )
-            raw = np.asarray(list(pdf["v"]), dtype=np.float64)
-            # cell on the RAW vector (KMeans.transform semantics —
-            # ‖x‖² is argmin-invariant, skip it)
-            cells = cell_ids[np.argmin(c_sq[None, :] - 2.0 * (raw @ cmat.T), 1)]
-            x = raw.astype(np.float32)
-            x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-            if rot32 is not None:
-                x = x @ rot32
-            codes = np.empty((x.shape[0], m), dtype=np.int32)
-            for j, b in enumerate(books):
-                xs = x[:, j * sub : (j + 1) * sub]
-                d2 = (
-                    (xs**2).sum(1)[:, None]
-                    - 2 * xs @ b.T
-                    + (b**2).sum(1)[None, :]
-                )
-                codes[:, j] = d2.argmin(1)
-            yield pd.DataFrame(
-                {
-                    "pq_id": pdf["id"].values,
-                    "cluster": cells.astype(np.int32),
-                    "pq_code": list(codes),
-                }
-            )
-
-    base = vecs.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<float>").alias("v"),
-    ).filter(F.col("v").isNotNull())
-    return base.mapInPandas(run, schema=schema).select(
-        F.col("pq_id").alias(id_col), "cluster", "pq_code"
-    )
+    return codes, _read_codebooks(spark, path)
 
 
 def coarse_distortion(
@@ -803,19 +515,16 @@ def coarse_distortion(
     numpy gemm against the k×d centroid matrix on the driver.
 
     The sample is a REAL uniform draw (the bottom-k sketch shared with
-    :func:`train_pq_codebooks`) — the round-7 ``sample(1.0).limit(n)``
+    ``quantizer.train_pq_codebooks``) — the round-7 ``sample(1.0).limit(n)``
     form was a no-op fraction followed by a first-partitions slice,
     i.e. exactly the ingest-epoch-biased cut this statistic must not be
     computed on (the drift baseline and the increment statistic would
     both see one source of a source-ordered corpus)."""
-    sample = _lifecycle.uniform_vector_sample(vecs, vec_col, int(sample_rows), seed)
+    sample = quantizer.uniform_vector_sample(vecs, vec_col, int(sample_rows), seed)
     if not sample:
         raise ValueError("coarse_distortion: no non-null vectors to sample")
     x = np.asarray([list(v) for v in sample], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    c = np.asarray([vec for _, vec in centroids], dtype=np.float64)
-    c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-    return float(np.mean(1.0 - (x @ c.T).max(axis=1)))
+    return float(np.mean(quantizer.CoarseCells(centroids).cos_dist(x)))
 
 
 def grouped_distortion_frame(
@@ -830,8 +539,7 @@ def grouped_distortion_frame(
     ``drift_by_source`` oracle query (which returns it).  ONE vectorized
     map pass (centroid matrix rides in the closure — k·d floats,
     broadcast-sized) + one tiny shuffle of (group, partial sums)."""
-    c = np.asarray([vec for _, vec in centroids], dtype=np.float64)
-    c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    coarse = quantizer.CoarseCells(centroids)
 
     schema = T.StructType(
         [
@@ -844,9 +552,7 @@ def grouped_distortion_frame(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.asarray(list(pdf["_v"]), dtype=np.float64)
-            x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-            d = 1.0 - (x @ c.T).max(axis=1)
+            d = coarse.cos_dist(np.asarray(list(pdf["_v"]), dtype=np.float64))
             yield pd.DataFrame({"_g": pdf["_g"].values, "_cd": d})
 
     return (
@@ -929,8 +635,8 @@ def _capture_reservoir(
     retrain PQ without compounding quantization bias — the measured
     codes-only bound in ``maintain_index``'s docstring).
 
-    One map pass: each row is assigned its coarse cell (the same gemm
-    as :func:`ivfpq_encode`), draws a U(0,1) key, and each PARTITION
+    One map pass: each row is assigned its coarse cell (the same rule
+    as ``quantizer.ivfpq_encode``), draws a U(0,1) key, and each PARTITION
     keeps only its bottom-``per_cell`` keys per cell across batches —
     so the write ships ≤ cells × per_cell rows per partition, never the
     corpus.  The persisted key makes the sample MERGEABLE: any key in
@@ -941,10 +647,7 @@ def _capture_reservoir(
     cell.  Append events must pass a fresh ``seed`` (the caller mixes a
     nonce) — reusing the build seed would replay the same key sequence
     and correlate events."""
-    ordered = sorted(centroids)
-    cell_ids = np.asarray([int(c) for c, _ in ordered], dtype=np.int64)
-    cmat = np.asarray([v for _, v in ordered], dtype=np.float64)
-    c_sq = (cmat * cmat).sum(axis=1)
+    coarse = quantizer.CoarseCells(centroids)
 
     schema = T.StructType(
         [
@@ -966,10 +669,7 @@ def _capture_reservoir(
                 rng = np.random.default_rng(
                     seed * 1_000_003 + int(pdf["pid"].iloc[0])
                 )
-            raw = np.asarray(list(pdf["v"]), dtype=np.float64)
-            cells = cell_ids[
-                np.argmin(c_sq[None, :] - 2.0 * (raw @ cmat.T), 1)
-            ]
+            cells = coarse.assign(np.asarray(list(pdf["v"]), dtype=np.float64))
             keys = rng.random(len(pdf))
             ids = list(pdf["id"])
             vs = list(pdf["v"])
@@ -1124,14 +824,7 @@ def save_ivfpq_index(
             )
             _write_reservoir_meta(path, reservoir_per_cell, seed=7)
     _lifecycle.write_centroids(spark, centroids, path)
-    rows = [
-        (j, c, [float(x) for x in b[c]])
-        for j, b in enumerate(codebooks)
-        for c in range(b.shape[0])
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, centroid int, vec array<float>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _write_codebooks(spark, codebooks, path)
     _stamp_layout(path, "ivfpq")  # last: a half-written build is never stamped
 
 
@@ -1146,13 +839,7 @@ def load_ivfpq_index(spark, path: str):
     _storage.recover_swap(path, "codes")
     codes = _lifecycle.apply_tombstones(spark, path, spark.read.parquet(f"{path}/codes"))
     centroids = _lifecycle.read_centroids(spark, path)
-    cb = spark.read.parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r["subspace"] for r in cb)
-    books = []
-    for j in range(m):
-        ents = sorted((r["centroid"], r["vec"]) for r in cb if r["subspace"] == j)
-        books.append(np.asarray([v for _, v in ents], dtype=np.float32))
-    return codes, centroids, books
+    return codes, centroids, _read_codebooks(spark, path)
 
 
 def pq_knn_join(
@@ -1216,7 +903,9 @@ def pq_knn_join(
         # OPQ frame for the LUTs only; the rescore joins run on the
         # ORIGINAL query/corpus vectors, untouched below
         qmat = (qmat @ np.asarray(rotation, dtype=np.float32)).astype(np.float32)
-    # (m, 256, Q): per-subspace LUTs for every query at once
+    # (m, 256, Q): per-subspace LUTs for every query at once.  One batched
+    # norm and gemm, not _query_lut per query: the two round differently
+    # in the last bit, and this join's scores are pinned by its own oracle.
     luts = np.stack(
         [codebooks[j] @ qmat[:, j * sub : (j + 1) * sub].T for j in range(m)]
     ).astype(np.float32)
@@ -1511,7 +1200,7 @@ def append_to_ivfpq_index(
         # run the encode pass, doubling the increment's cost.  The layout's
         # OPQ rotation (if any) rides along: increment codes must live in
         # the same rotated frame as the base codes.
-        codes = ivfpq_encode(
+        codes = quantizer.ivfpq_encode(
             new_vecs,
             centroids,
             books,
@@ -1585,20 +1274,6 @@ def _refresh_persisted_rf(path: str, appended_rows: int) -> None:
     _prime_persisted_rf(path)
 
 
-def pq_reconstruct(
-    codes: np.ndarray, books: list[np.ndarray], rotation: np.ndarray | None
-) -> np.ndarray:
-    """Decode (n, m) PQ codes to the normalized-space vectors ADC
-    scores — concat of per-subspace centroids, rotated back to the
-    original frame when the layout is OPQ (orthogonal: inverse = Tᵀ)."""
-    x = np.concatenate(
-        [books[j][codes[:, j]] for j in range(len(books))], axis=1
-    ).astype(np.float64)
-    if rotation is not None:
-        x = x @ np.asarray(rotation, dtype=np.float64).T
-    return x
-
-
 def recluster_cells(
     spark,
     path: str,
@@ -1618,7 +1293,7 @@ def recluster_cells(
     rebuilding the index.
 
     Why this is cheap: IVF-PQ here codes the normalized vector, not the
-    residual (see :func:`ivfpq_encode`), so a row's ``pq_code`` is
+    residual (see ``quantizer.ivfpq_encode``), so a row's ``pq_code`` is
     independent of its cell — re-clustering rewrites cluster
     ASSIGNMENTS of the offending cells' rows only; code bytes, all
     other partitions, tombstones, the OPQ rotation, and the persisted
@@ -1631,7 +1306,7 @@ def recluster_cells(
     (which documents how offending cells are located, split and
     rewritten): data in ``{path}/codes``; the drift baseline is the train-time coarse
     distortion in ``distortion.json``; existing rows decode through
-    :func:`pq_reconstruct`; sub-centroids train in the normalized space
+    ``quantizer.pq_reconstruct``; sub-centroids train in the normalized space
     and each is rescaled to the cell's raw norm — the drifted rows' mean
     raw norm when any land there, else the old centroid's norm — since
     encode-side assignment is raw-euclidean.
@@ -1648,7 +1323,7 @@ def recluster_cells(
         rotation = load_rotation(spark, path)
 
         def decode(vals) -> np.ndarray:
-            return pq_reconstruct(
+            return quantizer.pq_reconstruct(
                 np.asarray(list(vals), dtype=np.int64), books, rotation
             )
 
@@ -1835,12 +1510,12 @@ def rebuild_ivfpq_index(
             )
             m, k = len(books), int(books[0].shape[0])
             if rotation is not None:
-                new_rot, new_books = train_opq(
+                new_rot, new_books = quantizer.train_opq(
                     train_src, m=m, k=k, vec_col="vec", seed=seed
                 )
             else:
                 new_rot = None
-                new_books = train_pq_codebooks(
+                new_books = quantizer.train_pq_codebooks(
                     train_src, m=m, k=k, vec_col="vec", seed=seed
                 )
 
@@ -1859,7 +1534,7 @@ def rebuild_ivfpq_index(
                 for pdf in batches:
                     if len(pdf) == 0:
                         continue
-                    x = pq_reconstruct(
+                    x = quantizer.pq_reconstruct(
                         np.asarray(list(pdf["pq_code"]), dtype=np.int64),
                         books32, rot,
                     )
@@ -1899,7 +1574,7 @@ def rebuild_ivfpq_index(
             corpus = decoded.join(
                 raw_ids, on=id_col, how="left_anti"
             ).unionByName(raw)
-            new_codes = ivfpq_encode(
+            new_codes = quantizer.ivfpq_encode(
                 corpus, new_cents, new_books, id_col=id_col, vec_col="vec",
                 rotation=new_rot,
             )
@@ -1949,7 +1624,7 @@ def ivfpq_search(
     over a :func:`save_ivfpq_index` layout — then ADC-scan only those
     cells.  Pure composition: the scan half IS :func:`pq_search`.
     ``rotation`` (OPQ) affects only the ADC half — centroid ranking is
-    original-space, matching :func:`ivfpq_encode`'s cell assignment."""
+    original-space, matching ``quantizer.ivfpq_encode``'s cell assignment."""
     if not centroids:
         raise ValueError("ivfpq_search needs a non-empty centroid list")
     probe_ids = _lifecycle.probe_cells(centroids, query, nprobe)
@@ -1965,6 +1640,24 @@ def ivfpq_search(
         rescore_factor=rescore_factor,
         rotation=rotation,
     )
+
+
+def _query_lut(
+    query, codebooks: list[np.ndarray], rotation: np.ndarray | None
+) -> tuple[np.ndarray, np.ndarray]:
+    """ADC query prep: the float32 l2-normalized query in the original
+    frame (what the rescore ranks against) and its (m, k_c) float32
+    lookup table, built in the rotated frame when the model is OPQ."""
+    q = np.asarray(query, dtype=np.float32)
+    q = q / max(float(np.linalg.norm(q)), 1e-12)
+    qr = q
+    if rotation is not None:
+        qr = (q @ np.asarray(rotation, dtype=np.float32)).astype(np.float32)
+    sub = codebooks[0].shape[1]
+    lut = np.stack(
+        [b @ qr[j * sub : (j + 1) * sub] for j, b in enumerate(codebooks)]
+    ).astype(np.float32)
+    return q, lut
 
 
 def pq_search(
@@ -1986,7 +1679,7 @@ def pq_search(
     JVM cosine fold and the returned ``score`` is the TRUE cosine —
     ADC then only has to get the right vectors into the candidate set,
     the standard two-stage PQ serving shape.  ``rotation`` must be the
-    one the codes were encoded with (:func:`train_opq`): the query
+    one the codes were encoded with (``quantizer.train_opq``): the query
     rotates into the same frame, and because R is orthogonal the LUT
     sums still approximate ORIGINAL-space cosines — rescore stays on
     the raw vectors untouched.  ``rescore_factor="auto"`` sizes the
@@ -1998,15 +1691,7 @@ def pq_search(
         rescore_factor, rescore, codebooks, rotation, k, vec_col
     )
     m = len(codebooks)
-    q = np.asarray(query, dtype=np.float32)
-    q = q / max(float(np.linalg.norm(q)), 1e-12)
-    q_unrot = q  # rescore ranks against the ORIGINAL-space vectors
-    if rotation is not None:
-        q = (q @ np.asarray(rotation, dtype=np.float32)).astype(np.float32)
-    sub = codebooks[0].shape[1]
-    lut = np.stack(
-        [codebooks[j] @ q[j * sub : (j + 1) * sub] for j in range(m)]
-    ).astype(np.float32)  # (m, k_centroids)
+    q_unrot, lut = _query_lut(query, codebooks, rotation)
 
     schema = T.StructType(
         [
@@ -2117,21 +1802,11 @@ def pq_search_many(
         rescore_factor, rescore, codebooks, rotation, k, vec_col
     )
     m = len(codebooks)
-    sub = codebooks[0].shape[1]
-    qids: list[int] = []
-    luts = []
-    q_unrots = []
-    for qid, qvec in queries:
-        q = np.asarray(qvec, dtype=np.float32)
-        q = q / max(float(np.linalg.norm(q)), 1e-12)
-        q_unrots.append(q)  # rescore ranks against ORIGINAL-space vectors
-        if rotation is not None:
-            q = (q @ np.asarray(rotation, dtype=np.float32)).astype(np.float32)
-        luts.append(
-            np.stack([codebooks[j] @ q[j * sub : (j + 1) * sub] for j in range(m)])
-        )
-        qids.append(int(qid))
-    lut_all = np.stack(luts).astype(np.float32)  # (nq, m, k_c)
+    qids = [int(qid) for qid, _ in queries]
+    q_unrots, luts = zip(
+        *(_query_lut(qvec, codebooks, rotation) for _, qvec in queries)
+    )
+    lut_all = np.stack(luts)  # (nq, m, k_c)
     nq = len(qids)
     fetch = k * rescore_factor if rescore is not None else k
 

@@ -588,9 +588,9 @@ def assign_cells(
       argmin with ties broken by cell id.  One pass, k interpreted
       folds of d per row — fine at serving-index cell counts.
     - ``"blas"`` (k ≥ 32): one Arrow batch → one numpy gemm against
-      the centroid matrix (‖x−c‖² = ‖x‖² − 2x·c + ‖c‖², argmin over
-      the c-terms; np.argmin's first-hit rule IS the smallest-cell-id
-      tie-break).  Measured at k=64, d=64, 2 k rows: the expr route
+      the centroid matrix — ``quantizer.CoarseCells``, the rule the
+      IVF-PQ encoder and the drift statistics share, with ties to the
+      smallest cell id.  Measured at k=64, d=64, 2 k rows: the expr route
       costs 1.8 s (k py4j-built fold expressions dominate — the same
       plan-build pathology the curate funnel hit) vs 0.3 s BLAS; at
       SemDeDup's k≈√n this is the only route that scales.  NULL
@@ -604,10 +604,9 @@ def assign_cells(
         import pandas as pd
         from pyspark.sql.types import IntegerType, StructField, StructType
 
-        ordered = sorted(centroids)
-        cell_ids = np.asarray([int(c) for c, _ in ordered], dtype=np.int64)
-        cmat = np.asarray([v for _, v in ordered], dtype=np.float64)
-        c_sq = (cmat * cmat).sum(axis=1)
+        from readwise_vector_db_spark.operators.quantizer import CoarseCells
+
+        coarse = CoarseCells(centroids)
         out_schema = StructType(
             list(frame.schema) + [StructField(cell_col, IntegerType())]
         )
@@ -620,11 +619,7 @@ def assign_cells(
                     mat = np.asarray(
                         [list(v) for v in pdf.loc[live, vec_col]], dtype=np.float64
                     )
-                    # ‖x‖² is argmin-invariant; skip it
-                    d = c_sq[None, :] - 2.0 * (mat @ cmat.T)
-                    cells[np.nonzero(live.to_numpy())[0]] = cell_ids[
-                        np.argmin(d, axis=1)
-                    ]
+                    cells[np.nonzero(live.to_numpy())[0]] = coarse.assign(mat)
                 pdf = pdf.copy()
                 pdf[cell_col] = cells
                 yield pdf

@@ -38,6 +38,10 @@ from readwise_vector_db_spark.suites.dedup import (
 # here (one shuffle, banded candidates), and its pair list is already
 # hash-checked standalone by dedup_minhash_lsh; the exact-Jaccard
 # detector keeps its own standalone check in dedup_ngram_jaccard.
+#
+# The two edge CTEs are MATERIALIZED: DuckDB otherwise inlines them into
+# every step of the recursive ``reach`` and recomputes the MinHash chain
+# each time (about 6x the oracle's run time at sf0.001).
 
 _CLUSTERS_ORACLE = f"""
     WITH RECURSIVE aug AS ({AUG_DOCS_SQL}),
@@ -52,12 +56,14 @@ _CLUSTERS_ORACLE = f"""
         WHERE p.doc_id <> g.keep_id
     ),
     {minhash_pairs_ctes("aug")},
-    edges0 AS (
+    edges0 AS MATERIALIZED (
         SELECT u, v FROM exact_edges
         UNION
         SELECT id_a AS u, id_b AS v FROM mh_pairs WHERE est_jaccard >= 0.6
     ),
-    edges AS (SELECT u, v FROM edges0 UNION SELECT v AS u, u AS v FROM edges0),
+    edges AS MATERIALIZED (
+        SELECT u, v FROM edges0 UNION SELECT v AS u, u AS v FROM edges0
+    ),
     verts AS (SELECT DISTINCT u AS id FROM edges),
     reach(id, r) AS (
         SELECT id, id FROM verts

@@ -295,11 +295,11 @@ def pq_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC with exact rescore.  A planted pair shares its original's byte
     code, so both rows carry the corpus-max true cosine and MUST come
     back at similarity 1.0; graded recall stays in tests/test_pq.py."""
-    from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
 
     corpus = _planted_corpus(spark, sf_dir)
-    books = pq.train_pq_codebooks(corpus, m=8, k=256)
-    codes = pq.pq_encode(corpus, books).persist()
+    books = quantizer.train_pq_codebooks(corpus, m=8, k=256)
+    codes = quantizer.pq_encode(corpus, books).persist()
     return _planted_pq_rows(spark, sf_dir, codes, books)
 
 
@@ -307,11 +307,12 @@ def planted_pq_artifact(spark: SparkSession, sf_dir: str) -> str:
     """Build-once path of the saved planted PQ index for ``sf_dir`` —
     published like :func:`planted_ivf_artifact`."""
     from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
 
     def build(stage: str) -> None:
         corpus = _planted_corpus(spark, sf_dir)
-        books = pq.train_pq_codebooks(corpus, m=8, k=256)
-        pq.save_pq_index(pq.pq_encode(corpus, books), books, stage)
+        books = quantizer.train_pq_codebooks(corpus, m=8, k=256)
+        pq.save_pq_index(quantizer.pq_encode(corpus, books), books, stage)
 
     return publish_artifact(sf_dir, f"pq8x256|v{_IVF_ARTIFACT_VERSION}", build)
 
@@ -399,11 +400,11 @@ def opq_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-exact expectation as ``pq_planted``, proving the rotated
     encode/search frames agree (a frame mismatch would hash-mismatch
     immediately)."""
-    from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
 
     corpus = _planted_corpus(spark, sf_dir)
-    rotation, books = pq.train_opq(corpus, m=8, k=256, opq_iters=4)
-    codes = pq.pq_encode(corpus, books, rotation=rotation)
+    rotation, books = quantizer.train_opq(corpus, m=8, k=256, opq_iters=4)
+    codes = quantizer.pq_encode(corpus, books, rotation=rotation)
     return _planted_pq_rows(spark, sf_dir, codes, books, rotation=rotation)
 
 
@@ -466,10 +467,11 @@ def pq_knn_join_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes.  Same exact planted expectation; the corpus's raw vectors
     are touched only for the ≤Q·k·factor candidates."""
     from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
 
     corpus = _planted_corpus(spark, sf_dir)
-    books = pq.train_pq_codebooks(corpus, m=8, k=256)
-    codes = pq.pq_encode(corpus, books).persist()
+    books = quantizer.train_pq_codebooks(corpus, m=8, k=256)
+    codes = quantizer.pq_encode(corpus, books).persist()
     embs = load_table(spark, sf_dir, "embeddings")
     queries = embs.filter(
         (F.col("vec_id") < 5) & F.col("embedding").isNotNull()
@@ -489,12 +491,13 @@ def planted_ivfpq_artifact(spark: SparkSession, sf_dir: str) -> str:
     (coarse KMeans(16) + PQ 8×256 codebooks, codes partitioned by
     cluster) — published like the other artifacts."""
     from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
 
     def build(stage: str) -> None:
         corpus = _planted_corpus(spark, sf_dir)
         _, centroids = sim.build_ivf_index(corpus, n_clusters=16)
-        books = pq.train_pq_codebooks(corpus, m=8, k=256)
-        codes = pq.ivfpq_encode(corpus, centroids, books)
+        books = quantizer.train_pq_codebooks(corpus, m=8, k=256)
+        codes = quantizer.ivfpq_encode(corpus, centroids, books)
         pq.save_ivfpq_index(codes, centroids, books, stage)
 
     return publish_artifact(sf_dir, f"ivfpq16x8x256|v{_IVF_ARTIFACT_VERSION}", build)

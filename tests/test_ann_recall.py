@@ -33,6 +33,7 @@ import pytest
 pytestmark = pytest.mark.slow
 
 from readwise_vector_db_spark.operators import pq
+from readwise_vector_db_spark.operators import quantizer
 from readwise_vector_db_spark.operators import similarity as sim
 
 N, D, CENTERS, SIGMA = 1_500, 256, 12, 0.9
@@ -103,8 +104,8 @@ def test_ivf_recall_curve_bends_and_converges(spark, hard_corpus):
 
 def test_pq_rescore_lifts_hard_fixture_recall(spark, hard_corpus):
     embs, x, q, truth = hard_corpus
-    books = pq.train_pq_codebooks(embs, m=8, k=64, sample_rows=N, seed=5)
-    codes = pq.pq_encode(embs, books).persist()
+    books = quantizer.train_pq_codebooks(embs, m=8, k=64, sample_rows=N, seed=5)
+    codes = quantizer.pq_encode(embs, books).persist()
     codes.count()
     try:
         def run(rescore, rf):

@@ -10,6 +10,7 @@ import pytest
 
 from readwise_vector_db_spark.operators import index_lifecycle as lifecycle
 from readwise_vector_db_spark.operators import pq
+from readwise_vector_db_spark.operators import quantizer
 from readwise_vector_db_spark.operators import similarity as sim
 
 FAMILIES = {
@@ -33,9 +34,9 @@ def _build(spark, family: str, path: str):
     if family == "ivf":
         sim.save_ivf_index(assigned, cents, path)
     else:
-        books = pq.train_pq_codebooks(base, m=4, k=16, sample_rows=320)
+        books = quantizer.train_pq_codebooks(base, m=4, k=16, sample_rows=320)
         pq.save_ivfpq_index(
-            pq.ivfpq_encode(base, cents, books), cents, books, path,
+            quantizer.ivfpq_encode(base, cents, books), cents, books, path,
             base_vecs=base, rf_ks=(), reservoir_per_cell=0,
         )
     return base

@@ -23,6 +23,7 @@ from readwise_vector_db_spark.maintenance import (
 )
 from readwise_vector_db_spark.operators import index_lifecycle as lifecycle
 from readwise_vector_db_spark.operators import pq
+from readwise_vector_db_spark.operators import quantizer
 from readwise_vector_db_spark.operators import similarity as sim
 
 
@@ -135,10 +136,10 @@ def ivfpq_layout(spark, tmp_path):
     base = _blobs(n, d, 10, seed=3)
     base_df = _to_df(spark, base)
     _, cents = sim.build_ivf_index(base_df, n_clusters=16)
-    books = pq.train_pq_codebooks(base_df, m=8, k=32, sample_rows=2400)
+    books = quantizer.train_pq_codebooks(base_df, m=8, k=32, sample_rows=2400)
     path = str(tmp_path / "ivfpq")
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(base_df, cents, books), cents, books, path,
+        quantizer.ivfpq_encode(base_df, cents, books), cents, books, path,
         base_vecs=base_df, rf_ks=(10,),
     )
     return path, base_df, cents, books, d, n
@@ -409,9 +410,9 @@ def test_maintain_index_flat_pq_compacts_only(spark, tmp_path):
     to tombstones-vs-none."""
     d, n = 32, 1200
     base_df = _to_df(spark, _blobs(n, d, 8, seed=11))
-    books = pq.train_pq_codebooks(base_df, m=8, k=32, sample_rows=1200)
+    books = quantizer.train_pq_codebooks(base_df, m=8, k=32, sample_rows=1200)
     path = str(tmp_path / "pq_flat")
-    pq.save_pq_index(pq.pq_encode(base_df, books), books, path)
+    pq.save_pq_index(quantizer.pq_encode(base_df, books), books, path)
 
     rec = maintain_index(spark, path)
     assert rec["family"] == "pq" and rec["action"] == "none"
@@ -483,9 +484,9 @@ def test_cli_maintain_and_log(spark, tmp_path, capsys):
 
     d, n = 32, 1200
     base_df = _to_df(spark, _blobs(n, d, 8, seed=21))
-    books = pq.train_pq_codebooks(base_df, m=8, k=32, sample_rows=1200)
+    books = quantizer.train_pq_codebooks(base_df, m=8, k=32, sample_rows=1200)
     path = str(tmp_path / "cli_pq")
-    pq.save_pq_index(pq.pq_encode(base_df, books), books, path)
+    pq.save_pq_index(quantizer.pq_encode(base_df, books), books, path)
     lifecycle.delete_from_index(spark, path, list(range(n // 2)))
 
     rc = cli.main(["maintain", "--path", path, "--dry-run"])
@@ -527,16 +528,16 @@ def test_cli_maintain_all_sweeps_every_structure(spark, tmp_path, capsys):
     base_df = _to_df(spark, _blobs(n, d, 8, seed=21))
 
     # structure 1: a flat pq layout with tombstone buildup → compact
-    books = pq.train_pq_codebooks(base_df, m=8, k=32, sample_rows=1200)
+    books = quantizer.train_pq_codebooks(base_df, m=8, k=32, sample_rows=1200)
     pq_path = f"{root}/indexes/pq"
-    pq.save_pq_index(pq.pq_encode(base_df, books), books, pq_path)
+    pq.save_pq_index(quantizer.pq_encode(base_df, books), books, pq_path)
     lifecycle.delete_from_index(spark, pq_path, list(range(n // 2)))
 
     # structure 2: a healthy ivfpq layout → none
     _, cents = sim.build_ivf_index(base_df, n_clusters=8)
     ivfpq_path = f"{root}/indexes/ivfpq"
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(base_df, cents, books), cents, books, ivfpq_path,
+        quantizer.ivfpq_encode(base_df, cents, books), cents, books, ivfpq_path,
         base_vecs=base_df, rf_ks=(), reservoir_per_cell=20,
     )
 
@@ -679,10 +680,10 @@ def _bounded_layout(spark, tmp_path, per_cell=40):
     base = _blobs(n, d, 10, seed=3)
     base_df = _to_df(spark, base)
     _, cents = sim.build_ivf_index(base_df, n_clusters=16)
-    books = pq.train_pq_codebooks(base_df, m=8, k=32, sample_rows=2400)
+    books = quantizer.train_pq_codebooks(base_df, m=8, k=32, sample_rows=2400)
     path = str(tmp_path / "ivfpq_res")
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(base_df, cents, books), cents, books, path,
+        quantizer.ivfpq_encode(base_df, cents, books), cents, books, path,
         base_vecs=base_df, rf_ks=(), reservoir_per_cell=per_cell,
     )
     return path, base_df, base, d, n
@@ -903,9 +904,9 @@ def test_maintain_index_rebuild_executes_for_ivfpq(spark, tmp_path):
     bare = str(tmp_path / "bare")
     base_df2 = base_df
     _, cents2 = sim.build_ivf_index(base_df2, n_clusters=8)
-    books2 = pq.train_pq_codebooks(base_df2, m=8, k=32, sample_rows=2400)
+    books2 = quantizer.train_pq_codebooks(base_df2, m=8, k=32, sample_rows=2400)
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(base_df2, cents2, books2), cents2, books2, bare,
+        quantizer.ivfpq_encode(base_df2, cents2, books2), cents2, books2, bare,
         base_vecs=base_df2, rf_ks=(), reservoir_per_cell=0,
     )
     with pytest.raises(ValueError, match="reservoir"):

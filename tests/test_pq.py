@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from readwise_vector_db_spark.operators import index_lifecycle as lifecycle
 from readwise_vector_db_spark.operators import pq
+from readwise_vector_db_spark.operators import quantizer
 from readwise_vector_db_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -20,7 +21,7 @@ def embs(spark):
 
 @pytest.fixture(scope="module")
 def books(spark, embs):
-    return pq.train_pq_codebooks(embs, m=8, k=32, sample_rows=5000)
+    return quantizer.train_pq_codebooks(embs, m=8, k=32, sample_rows=5000)
 
 
 def _exact_topk(spark, embs, q, k):
@@ -48,17 +49,19 @@ def test_codebook_shapes_and_validation(spark, embs, books):
     d = len(embs.first()["embedding"])
     assert all(b.shape == (32, d // 8) for b in books)
     with pytest.raises(ValueError, match="divisible"):
-        pq.train_pq_codebooks(embs, m=7)
+        quantizer.train_pq_codebooks(embs, m=7)
 
 
 def test_encode_is_total_and_deterministic(spark, embs, books):
-    codes = pq.pq_encode(embs, books)
+    codes = quantizer.pq_encode(embs, books)
     n = embs.filter(F.col("embedding").isNotNull()).count()
     rows = codes.collect()
     assert len(rows) == n
     assert all(len(r["pq_code"]) == 8 for r in rows)
     assert all(0 <= c < 32 for r in rows for c in r["pq_code"])
-    again = {r["vec_id"]: r["pq_code"] for r in pq.pq_encode(embs, books).collect()}
+    again = {
+        r["vec_id"]: r["pq_code"] for r in quantizer.pq_encode(embs, books).collect()
+    }
     assert {r["vec_id"]: r["pq_code"] for r in rows} == again
 
 
@@ -73,13 +76,13 @@ def test_adc_matches_reconstruction_inner_product(spark, books):
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    codes = {r["vec_id"]: r["pq_code"] for r in pq.pq_encode(df, books).collect()}
+    codes = {r["vec_id"]: r["pq_code"] for r in quantizer.pq_encode(df, books).collect()}
     q = np.asarray(rows[7][1], dtype=np.float32)
     qn = q / np.linalg.norm(q)
     got = {
         r["vec_id"]: r["score"]
         for r in pq.pq_search(
-            pq.pq_encode(df, books), list(q), books, k=40
+            quantizer.pq_encode(df, books), list(q), books, k=40
         ).collect()
     }
     for i, code in codes.items():
@@ -89,7 +92,7 @@ def test_adc_matches_reconstruction_inner_product(spark, books):
 
 
 def test_save_load_roundtrip(spark, embs, books, tmp_path):
-    codes = pq.pq_encode(embs, books)
+    codes = quantizer.pq_encode(embs, books)
     pq.save_pq_index(codes, books, str(tmp_path / "pqidx"))
     codes2, books2 = pq.load_pq_index(spark, str(tmp_path / "pqidx"))
     assert len(books2) == len(books)
@@ -112,30 +115,86 @@ def test_encode_rejects_wrong_dim(spark, books):
         [(0, [1.0] * 64), (1, [1.0] * 63)], "vec_id long, embedding array<float>"
     )
     with pytest.raises(Exception, match="dim 63.*expect"):
-        pq.pq_encode(bad, books).collect()
+        quantizer.pq_encode(bad, books).collect()
     cents = [(0, [0.0] * 64)]
     with pytest.raises(Exception, match="dim 63.*expects"):
-        pq.ivfpq_encode(bad, cents, books).collect()
+        quantizer.ivfpq_encode(bad, cents, books).collect()
+
+
+def _tied_cells(spark):
+    """(vecs, centroids) where coarse assignment is decided by ties: cells
+    3 and 7 share one centroid vector, and most rows sit exactly between
+    cells (small multiples of 0.5, so both routes' sums are exact)."""
+    e = np.eye(64)
+    centroids = [(7, 2 * e[1]), (5, 2 * e[0]), (3, 2 * e[1]), (2, -2 * e[0])]
+    rows = []
+    for s in (0.5, 1.0, 2.0):
+        rows += [s * (e[0] + e[1]), s * (e[1] - e[0]), s * e[2], s * e[1]]
+        rows += [s * e[0] + 0.5 * e[5], -s * e[0]]
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in r]) for i, r in enumerate(rows)],
+        "vec_id long, embedding array<float>",
+    )
+    return vecs, [(c, [float(x) for x in v]) for c, v in centroids]
 
 
 def test_ivfpq_encode_matches_components(spark, embs, books):
     """One-pass ivfpq_encode must agree with the two components it fuses:
-    assign_cells(blas) for the cell, pq_encode for the code."""
+    assign_cells(blas) for the cell, pq_encode for the code — on the
+    fixture and on rows whose cell is decided by a tie."""
     from readwise_vector_db_spark.operators import similarity as sim
 
     _, centroids = sim.build_ivf_index(embs, n_clusters=8)
-    fused = {
-        r["vec_id"]: (r["cluster"], r["pq_code"])
-        for r in pq.ivfpq_encode(embs, centroids, books).collect()
+    for vecs, centroids in ((embs, centroids), _tied_cells(spark)):
+        fused = {
+            r["vec_id"]: (r["cluster"], r["pq_code"])
+            for r in quantizer.ivfpq_encode(vecs, centroids, books).collect()
+        }
+        cells = {
+            r["vec_id"]: r["cluster"]
+            for r in sim.assign_cells(
+                vecs.filter(F.col("embedding").isNotNull()), centroids, method="blas"
+            ).collect()
+        }
+        codes = {
+            r["vec_id"]: r["pq_code"]
+            for r in quantizer.pq_encode(vecs, books).collect()
+        }
+        assert fused == {i: (cells[i], codes[i]) for i in codes}
+
+
+def test_coarse_cell_ties_agree_across_paths(spark, tmp_path):
+    """Every path that assigns a coarse cell breaks a tie toward the
+    smallest cell id: both assign_cells routes, the IVF-PQ encoder, the
+    per-cell drift statistic and the reservoir capture."""
+    from collections import Counter
+
+    from readwise_vector_db_spark.operators import similarity as sim
+
+    vecs, centroids = _tied_cells(spark)
+    want = {
+        r["vec_id"]: min(
+            (sum((a - b) ** 2 for a, b in zip(r["embedding"], c)), cid)
+            for cid, c in centroids
+        )[1]
+        for r in vecs.collect()
     }
-    cells = {
-        r["vec_id"]: r["cluster"]
-        for r in sim.assign_cells(
-            embs.filter(F.col("embedding").isNotNull()), centroids, method="blas"
-        ).collect()
-    }
-    codes = {r["vec_id"]: r["pq_code"] for r in pq.pq_encode(embs, books).collect()}
-    assert fused == {i: (cells[i], codes[i]) for i in codes}
+    assert set(want.values()) == {2, 3, 5}  # 7 always loses its tie to 3
+
+    def cells_of(frame, col="cluster"):
+        return {r["vec_id"]: r[col] for r in frame.collect()}
+
+    assert cells_of(sim.assign_cells(vecs, centroids, method="expr")) == want
+    assert cells_of(sim.assign_cells(vecs, centroids, method="blas")) == want
+    books = [np.eye(8)[:4] for _ in range(8)]
+    assert cells_of(quantizer.ivfpq_encode(vecs, centroids, books)) == want
+    stats = lifecycle.cell_distortion_frame(vecs, centroids).collect()
+    assert {r["cluster"]: r["n"] for r in stats} == Counter(want.values())
+    path = str(tmp_path / "res")
+    pq._capture_reservoir(
+        vecs, centroids, path, 100, "vec_id", "embedding", seed=7, mode="overwrite"
+    )
+    assert cells_of(spark.read.parquet(f"{path}/reservoir")) == want
 
 
 def test_ivfpq_probe_prunes_and_matches(spark, embs, books, tmp_path):
@@ -152,7 +211,7 @@ def test_ivfpq_probe_prunes_and_matches(spark, embs, books, tmp_path):
     )
     corpus = embs.select("vec_id", "embedding").unionByName(plant)
     _, centroids = sim.build_ivf_index(corpus, n_clusters=8)
-    codes = pq.ivfpq_encode(corpus, centroids, books)
+    codes = quantizer.ivfpq_encode(corpus, centroids, books)
     path = str(tmp_path / "ivfpq")
     pq.save_ivfpq_index(codes, centroids, books, path)
     codes2, cents2, books2 = pq.load_ivfpq_index(spark, path)
@@ -188,7 +247,7 @@ def test_ivfpq_incremental_append(spark, embs, books, tmp_path):
     _, centroids = sim.build_ivf_index(base, n_clusters=8)
     path = str(tmp_path / "ivfpq_inc")
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(base, centroids, books), centroids, books, path
+        quantizer.ivfpq_encode(base, centroids, books), centroids, books, path
     )
 
     def code_files():
@@ -216,7 +275,7 @@ def test_ivfpq_incremental_append(spark, embs, books, tmp_path):
 
     codes, cents, bks = pq.load_ivfpq_index(spark, path)
     # the appended row carries the code/cell the frozen model assigns
-    want = pq.ivfpq_encode(plant, centroids, books).first()
+    want = quantizer.ivfpq_encode(plant, centroids, books).first()
     got = codes.filter(F.col("vec_id") == plant_id).first()
     assert (got["cluster"], got["pq_code"]) == (want["cluster"], want["pq_code"])
 
@@ -242,7 +301,7 @@ def test_streaming_index_append(spark, embs, books, tmp_path):
     _, centroids = sim.build_ivf_index(base, n_clusters=8)
     path = str(tmp_path / "ivfpq_stream")
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(base, centroids, books), centroids, books, path
+        quantizer.ivfpq_encode(base, centroids, books), centroids, books, path
     )
 
     q0 = embs.orderBy("vec_id").first()
@@ -290,7 +349,7 @@ def test_pq_knn_join_recall_vs_exact(spark, embs, books):
         (r["query_id"], r["neighbor_id"]): r["cos_dist"]
         for r in sim.knn_join(queries, embs, k=5, corpus_id="vec_id").collect()
     }
-    codes = pq.pq_encode(embs, books).persist()
+    codes = quantizer.pq_encode(embs, books).persist()
     got = {
         (r["query_id"], r["neighbor_id"]): r["cos_dist"]
         for r in pq.pq_knn_join(
@@ -307,7 +366,7 @@ def test_pq_knn_join_adc_only_schema(spark, embs, books):
     queries = embs.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    rows = pq.pq_knn_join(pq.pq_encode(embs, books), queries, books, k=4).collect()
+    rows = pq.pq_knn_join(quantizer.pq_encode(embs, books), queries, books, k=4).collect()
     assert {r["query_id"] for r in rows} == {0, 1, 2}
     per_q = {}
     for r in rows:
@@ -319,7 +378,7 @@ def test_pq_knn_join_adc_only_schema(spark, embs, books):
         assert scores == sorted(scores, reverse=True)
     with pytest.raises(ValueError, match="at least one query"):
         pq.pq_knn_join(
-            pq.pq_encode(embs, books), queries.filter("query_id < 0"), books
+            quantizer.pq_encode(embs, books), queries.filter("query_id < 0"), books
         )
 
 
@@ -331,7 +390,7 @@ def test_pq_string_ids_roundtrip(spark, embs, books):
     sembs = embs.select(
         F.concat(F.lit("doc-"), F.col("vec_id")).alias("doc_key"), "embedding"
     )
-    codes = pq.pq_encode(sembs, books, id_col="doc_key").persist()
+    codes = quantizer.pq_encode(sembs, books, id_col="doc_key").persist()
     assert dict(codes.dtypes)["doc_key"] == "string"
     queries = sembs.filter(F.col("doc_key").isin("doc-0", "doc-1")).select(
         F.col("doc_key").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -360,7 +419,7 @@ def test_pq_string_ids_roundtrip(spark, embs, books):
 def test_pq_recall_and_rescore(spark, embs, books):
     q = list(embs.orderBy("vec_id").first()["embedding"])
     exact = _exact_topk(spark, embs, q, 10)
-    codes = pq.pq_encode(embs, books).persist()
+    codes = quantizer.pq_encode(embs, books).persist()
     adc = [r["vec_id"] for r in pq.pq_search(codes, q, books, k=10).collect()]
     recall = len(set(adc) & set(exact)) / 10
     assert recall >= 0.5, recall  # raw ADC on a 32-centroid toy model
@@ -378,9 +437,9 @@ def test_pq_recall_and_rescore(spark, embs, books):
 
 def test_ivfpq_rejects_empty_centroids(spark, embs, books):
     with pytest.raises(ValueError, match="non-empty centroid"):
-        pq.ivfpq_encode(embs, [], books)
+        quantizer.ivfpq_encode(embs, [], books)
     with pytest.raises(ValueError, match="non-empty centroid"):
-        pq.ivfpq_search(pq.pq_encode(embs, books), [], books, [0.0] * 64)
+        pq.ivfpq_search(quantizer.pq_encode(embs, books), [], books, [0.0] * 64)
 
 
 def test_append_staleness_guard(spark, books, tmp_path):
@@ -403,7 +462,7 @@ def test_append_staleness_guard(spark, books, tmp_path):
     _, centroids = sim.build_ivf_index(base, n_clusters=4)
     path = str(tmp_path / "ivfpq_stale")
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(base, centroids, books), centroids, books, path,
+        quantizer.ivfpq_encode(base, centroids, books), centroids, books, path,
         base_vecs=base,
     )
     import os
@@ -453,7 +512,7 @@ def test_append_rejects_torn_distortion_baseline(spark, books, tmp_path):
     _, centroids = sim.build_ivf_index(vecs, n_clusters=2)
     path = str(tmp_path / "ivfpq_torn")
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(vecs, centroids, books), centroids, books, path,
+        quantizer.ivfpq_encode(vecs, centroids, books), centroids, books, path,
         base_vecs=vecs,
     )
     inc = spark.createDataFrame(rows[:5], "vec_id long, embedding array<float>")
@@ -494,7 +553,7 @@ def test_pq_knn_join_shortlist_registered_for_drain(spark, embs, books):
     from readwise_vector_db_spark.operators import dedup as dd
 
     dd.release_detector_cache()
-    codes = pq.pq_encode(embs, books, id_col="vec_id")
+    codes = quantizer.pq_encode(embs, books, id_col="vec_id")
     queries = (
         embs.filter(F.col("vec_id") < 3)
         .select(
@@ -531,7 +590,7 @@ def test_append_drift_gate_per_source_catches_needle(spark, books, tmp_path):
     _, centroids = sim.build_ivf_index(base, n_clusters=4)
     path = str(tmp_path / "ivfpq_needle")
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(base, centroids, books), centroids, books, path,
+        quantizer.ivfpq_encode(base, centroids, books), centroids, books, path,
         base_vecs=base,
     )
 
@@ -603,8 +662,8 @@ def _correlated_fixture(spark, n=3000, d=64, seed=5):
 
 def test_opq_rotation_orthogonal_and_reduces_error(spark):
     df = _correlated_fixture(spark)
-    plain = pq.train_pq_codebooks(df, m=8, k=16, sample_rows=2000, iters=8)
-    rot, books = pq.train_opq(
+    plain = quantizer.train_pq_codebooks(df, m=8, k=16, sample_rows=2000, iters=8)
+    rot, books = quantizer.train_opq(
         df, m=8, k=16, sample_rows=2000, iters=8, opq_iters=6
     )
     d = rot.shape[0]
@@ -613,8 +672,8 @@ def test_opq_rotation_orthogonal_and_reduces_error(spark):
     sample = np.asarray(
         [r["embedding"] for r in df.limit(1500).collect()], dtype=np.float64
     )
-    err_plain = pq.quantization_error(sample, plain)
-    err_opq = pq.quantization_error(sample, books, rotation=rot)
+    err_plain = quantizer.quantization_error(sample, plain)
+    err_opq = quantizer.quantization_error(sample, books, rotation=rot)
     # the rotation must buy a real reduction on the correlated corpus
     assert err_opq < 0.9 * err_plain, (err_opq, err_plain)
 
@@ -624,8 +683,8 @@ def test_opq_encode_search_roundtrip(spark):
     at the top of the ADC scan, and the rescore path must return TRUE
     original-space cosines (rotation never leaks into output scores)."""
     df = _correlated_fixture(spark, n=800)
-    rot, books = pq.train_opq(df, m=8, k=16, sample_rows=800, iters=6, opq_iters=4)
-    codes = pq.pq_encode(df, books, id_col="vec_id", rotation=rot)
+    rot, books = quantizer.train_opq(df, m=8, k=16, sample_rows=800, iters=6, opq_iters=4)
+    codes = quantizer.pq_encode(df, books, id_col="vec_id", rotation=rot)
     q_row = df.filter(F.col("vec_id") == 7).first()
     q = [float(v) for v in q_row["embedding"]]
     top = pq.pq_search(codes, q, books, k=5, id_col="vec_id", rotation=rot).collect()
@@ -645,9 +704,9 @@ def test_opq_rotation_persists_and_appends_in_frame(spark, tmp_path):
     from readwise_vector_db_spark.operators import similarity as sim
 
     df = _correlated_fixture(spark, n=600)
-    rot, books = pq.train_opq(df, m=8, k=16, sample_rows=600, iters=6, opq_iters=4)
+    rot, books = quantizer.train_opq(df, m=8, k=16, sample_rows=600, iters=6, opq_iters=4)
     _, centroids = sim.build_ivf_index(df, n_clusters=4)
-    codes = pq.ivfpq_encode(df, centroids, books, rotation=rot)
+    codes = quantizer.ivfpq_encode(df, centroids, books, rotation=rot)
     path = str(tmp_path / "opq_idx")
     pq.save_ivfpq_index(codes, centroids, books, path, rotation=rot)
 
@@ -655,7 +714,9 @@ def test_opq_rotation_persists_and_appends_in_frame(spark, tmp_path):
     assert loaded is not None and np.allclose(loaded, rot, atol=1e-6)
     # plain layout → None
     path2 = str(tmp_path / "plain_idx")
-    pq.save_ivfpq_index(pq.ivfpq_encode(df, centroids, books), centroids, books, path2)
+    pq.save_ivfpq_index(
+        quantizer.ivfpq_encode(df, centroids, books), centroids, books, path2
+    )
     assert pq.load_rotation(spark, path2) is None
 
     inc = _correlated_fixture(spark, n=50, seed=9).withColumn(
@@ -670,7 +731,7 @@ def test_opq_rotation_persists_and_appends_in_frame(spark, tmp_path):
     }
     want = {
         r["vec_id"]: list(r["pq_code"])
-        for r in pq.ivfpq_encode(inc, centroids, books, rotation=rot).collect()
+        for r in quantizer.ivfpq_encode(inc, centroids, books, rotation=rot).collect()
     }
     assert got == want  # appended codes are in the rotated frame
 
@@ -694,8 +755,8 @@ def test_estimate_rescore_factor_tracks_margin_hardness(spark):
     ]
     hard = spark.createDataFrame(hard_rows, "vec_id long, embedding array<float>")
 
-    books_e = pq.train_pq_codebooks(easy, m=8, k=16, sample_rows=1500, iters=6)
-    books_h = pq.train_pq_codebooks(hard, m=8, k=16, sample_rows=1500, iters=6)
+    books_e = quantizer.train_pq_codebooks(easy, m=8, k=16, sample_rows=1500, iters=6)
+    books_h = quantizer.train_pq_codebooks(hard, m=8, k=16, sample_rows=1500, iters=6)
     rf_easy = pq.estimate_rescore_factor(
         easy, books_e, k=10, sample_corpus=1500, n_queries=16
     )
@@ -712,7 +773,7 @@ def test_estimate_rescore_factor_tracks_margin_hardness(spark):
     # cached value steers the second call, proving no re-probe ran
     pq._RF_CACHE.clear()
     books_h2 = books_h
-    codes_h = pq.pq_encode(hard, books_h2, id_col="vec_id").persist()
+    codes_h = quantizer.pq_encode(hard, books_h2, id_col="vec_id").persist()
     q = [float(v) for v in hard_rows[7][1]]
     out = pq.pq_search(
         codes_h, q, books_h2, k=10, rescore=hard, rescore_factor="auto"
@@ -774,7 +835,7 @@ def test_pq_knn_join_drains_previous_call(spark, embs, books):
     from readwise_vector_db_spark.operators import dedup as dd
 
     dd.release_detector_cache()
-    codes = pq.pq_encode(embs, books, id_col="vec_id")
+    codes = quantizer.pq_encode(embs, books, id_col="vec_id")
     queries = (
         embs.filter(F.col("vec_id") < 2)
         .select(
@@ -803,7 +864,7 @@ def test_persisted_auto_rf_zero_probe_and_append_refresh(spark, embs, books, tmp
 
     path = str(tmp_path / "pq_rf")
     pq.save_pq_index(
-        pq.pq_encode(embs, books), books, path, base_vecs=embs, rf_ks=(10,)
+        quantizer.pq_encode(embs, books), books, path, base_vecs=embs, rf_ks=(10,)
     )
     assert os.path.isfile(f"{path}/rescore.json")
     with open(f"{path}/rescore.json") as f:
@@ -834,7 +895,7 @@ def test_persisted_auto_rf_zero_probe_and_append_refresh(spark, embs, books, tmp
 
     _, centroids = sim.build_ivf_index(embs, n_clusters=4)
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(embs, centroids, books), centroids, books, ivf_path,
+        quantizer.ivfpq_encode(embs, centroids, books), centroids, books, ivf_path,
         base_vecs=embs, rf_ks=(10,),
     )
     with open(f"{ivf_path}/rescore.json") as f:
@@ -863,7 +924,7 @@ def test_tombstone_delete_and_compaction(spark, embs, books, tmp_path):
     from readwise_vector_db_spark.operators import similarity as sim
 
     path = str(tmp_path / "pq_del")
-    pq.save_pq_index(pq.pq_encode(embs, books), books, path)
+    pq.save_pq_index(quantizer.pq_encode(embs, books), books, path)
     codes, loaded_books = pq.load_pq_index(spark, path)
     total = codes.count()
     q = [float(x) for x in embs.first()["embedding"]]
@@ -895,7 +956,7 @@ def test_tombstone_delete_and_compaction(spark, embs, books, tmp_path):
     ipath = str(tmp_path / "ivfpq_del")
     _, centroids = sim.build_ivf_index(embs, n_clusters=4)
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(embs, centroids, books), centroids, books, ipath
+        quantizer.ivfpq_encode(embs, centroids, books), centroids, books, ipath
     )
     icodes, icents, ibooks = pq.load_ivfpq_index(spark, ipath)
     itotal = icodes.count()
@@ -935,7 +996,7 @@ def test_compact_crash_recovery_and_concurrent_tombstones(spark, embs, books, tm
     import shutil
 
     path = str(tmp_path / "pq_crash")
-    pq.save_pq_index(pq.pq_encode(embs, books), books, path)
+    pq.save_pq_index(quantizer.pq_encode(embs, books), books, path)
     total = spark.read.parquet(f"{path}/codes").count()
 
     # (a1) crash mid-swap WITH intent: codes renamed away, committed
@@ -984,7 +1045,7 @@ def test_tombstone_column_mismatch_raises(spark, embs, books, tmp_path):
     codes schema must raise loudly, never guess a join key (guessing
     matched nothing, so deleted ids silently kept serving)."""
     path = str(tmp_path / "pq_badtomb")
-    pq.save_pq_index(pq.pq_encode(embs, books), books, path)
+    pq.save_pq_index(quantizer.pq_encode(embs, books), books, path)
     lifecycle.delete_from_index(spark, path, ["1", "2"], id_col="doc_id")
     with pytest.raises(ValueError, match="doc_id"):
         pq.load_pq_index(spark, path)[0].count()
@@ -1001,7 +1062,7 @@ def test_drift_gate_cardinality_guard(spark, embs, books, tmp_path, monkeypatch)
     _, centroids = sim.build_ivf_index(sub, n_clusters=4)
     path = str(tmp_path / "ivfpq_guard")
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(sub, centroids, books), centroids, books, path,
+        quantizer.ivfpq_encode(sub, centroids, books), centroids, books, path,
         base_vecs=sub, rf_ks=(),
     )
     inc = sub.limit(50).select(
@@ -1036,7 +1097,7 @@ def test_layout_version_stamp_and_migration(spark, embs, books, tmp_path):
     )
 
     path = str(tmp_path / "pq_stamped")
-    pq.save_pq_index(pq.pq_encode(embs, books), books, path)
+    pq.save_pq_index(quantizer.pq_encode(embs, books), books, path)
     assert read_stamp(path) == {"layout_version": LAYOUT_VERSION, "family": "pq"}
     pq.load_pq_index(spark, path)  # stamped current: loads
 
@@ -1093,11 +1154,11 @@ def test_recluster_cells_restores_gate_and_recall(spark, tmp_path):
 
     base_df, drifted_df = to_df(base), to_df(drifted, id0=1_000_000)
     _, cents = sim.build_ivf_index(base_df, n_clusters=24)
-    books = pq.train_pq_codebooks(base_df, m=8, k=64, sample_rows=3000)
+    books = quantizer.train_pq_codebooks(base_df, m=8, k=64, sample_rows=3000)
 
     def build(path):
         pq.save_ivfpq_index(
-            pq.ivfpq_encode(base_df, cents, books), cents, books, path,
+            quantizer.ivfpq_encode(base_df, cents, books), cents, books, path,
             base_vecs=base_df, rf_ks=(),
         )
 
@@ -1178,7 +1239,7 @@ def test_interleaved_rescored_knn_joins_single_scan(spark, embs, books):
     twice).  Scan volume counted by an accumulator in a pass-through
     stage under the codes scan."""
     acc = spark.sparkContext.accumulator(0)
-    codes = pq.pq_encode(embs, books)
+    codes = quantizer.pq_encode(embs, books)
     n = codes.count()
 
     def counting(batches):
@@ -1210,7 +1271,7 @@ def test_pq_search_many_matches_per_query_loop(spark, embs, books):
     """Round-12 batched probe: pq_search_many must return EXACTLY the
     rows the per-query pq_search loop returns — same candidates, same
     rescored scores, same per-query top-k cut."""
-    codes = pq.pq_encode(embs, books).persist()
+    codes = quantizer.pq_encode(embs, books).persist()
     qrows = (
         embs.filter(F.col("vec_id") < 4)
         .select("vec_id", "embedding")
@@ -1239,7 +1300,7 @@ def test_ivfpq_search_many_matches_per_query_loop(spark, embs, books):
     from readwise_vector_db_spark.operators import similarity as sim
 
     _, cents = sim.build_ivf_index(embs, n_clusters=4)
-    codes = pq.ivfpq_encode(embs, cents, books).persist()
+    codes = quantizer.ivfpq_encode(embs, cents, books).persist()
     qrows = (
         embs.filter(F.col("vec_id") < 4)
         .select("vec_id", "embedding")
@@ -1271,7 +1332,7 @@ def test_pq_search_many_isin_cap_drops_pushdown_not_rows(
     batched rescore scan is a pushdown aid only — with the cap forced
     to 0 (literal dropped, broadcast candidate join alone bounds the
     rows) the output must be row-identical to the default path."""
-    codes = pq.pq_encode(embs, books).persist()
+    codes = quantizer.pq_encode(embs, books).persist()
     qrows = (
         embs.filter(F.col("vec_id") < 4).select("vec_id", "embedding").collect()
     )

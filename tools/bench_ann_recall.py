@@ -113,6 +113,7 @@ def emit(**kv) -> None:
 
 def run_sweep(n: int, d: int, n_centers: int, sigma: float) -> None:
     from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
     from readwise_vector_db_spark.operators import similarity as sim
     from readwise_vector_db_spark.session import get_spark
 
@@ -175,8 +176,8 @@ def run_sweep(n: int, d: int, n_centers: int, sigma: float) -> None:
     m_list = sorted({m for m in (d // 96, d // 48) if m > 0 and d % m == 0})
     for m in m_list:  # 3072-d -> m=32 (sub 96), m=64 (sub 48)
         t0 = time.monotonic()
-        books = pq.train_pq_codebooks(embs, m=m, k=256, sample_rows=8000)
-        codes = pq.pq_encode(embs, books).persist()
+        books = quantizer.train_pq_codebooks(embs, m=m, k=256, sample_rows=8000)
+        codes = quantizer.pq_encode(embs, books).persist()
         codes.count()
         build_s = time.monotonic() - t0
         for rf in (None, 2, 4, 8):
@@ -205,8 +206,8 @@ def run_sweep(n: int, d: int, n_centers: int, sigma: float) -> None:
     assigned, cents = sim.build_ivf_index(
         embs, n_clusters=n_cells, fit_sample_rows=min(n, 8000)
     )
-    books = pq.train_pq_codebooks(embs, m=m, k=256, sample_rows=8000)
-    icodes = pq.ivfpq_encode(embs, cents, books).persist()
+    books = quantizer.train_pq_codebooks(embs, m=m, k=256, sample_rows=8000)
+    icodes = quantizer.ivfpq_encode(embs, cents, books).persist()
     icodes.count()
     for nprobe in (4, 8, 16):
         for rf in (4, 8):
@@ -234,6 +235,7 @@ def run_opq(n: int, d: int, n_centers: int, sigma: float) -> None:
     queries, and truth construction as sweep mode (seeds 3/17), so the
     rows compare directly against the round-7 floor measurements."""
     from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
     from readwise_vector_db_spark.session import get_spark
 
     spark = get_spark("ann_recall_opq")
@@ -253,16 +255,18 @@ def run_opq(n: int, d: int, n_centers: int, sigma: float) -> None:
 
     models = {}
     t0 = time.monotonic()
-    models["plain"] = (None, pq.train_pq_codebooks(embs, m=m, k=256, sample_rows=8000))
+    models["plain"] = (
+        None, quantizer.train_pq_codebooks(embs, m=m, k=256, sample_rows=8000)
+    )
     t_plain = time.monotonic() - t0
     t0 = time.monotonic()
-    rot, obooks = pq.train_opq(embs, m=m, k=256, sample_rows=8000, opq_iters=8)
+    rot, obooks = quantizer.train_opq(embs, m=m, k=256, sample_rows=8000, opq_iters=8)
     models["opq"] = (rot, obooks)
     t_opq = time.monotonic() - t0
 
     for label, (rotation, books) in models.items():
-        qe = pq.quantization_error(err_sample, books, rotation=rotation)
-        codes = pq.pq_encode(embs, books, rotation=rotation).persist()
+        qe = quantizer.quantization_error(err_sample, books, rotation=rotation)
+        codes = quantizer.pq_encode(embs, books, rotation=rotation).persist()
         codes.count()
         t0 = time.monotonic()
         rf_auto = pq.estimate_rescore_factor(
@@ -308,7 +312,7 @@ def run_opq(n: int, d: int, n_centers: int, sigma: float) -> None:
     _, cents = sim.build_ivf_index(
         embs, n_clusters=n_cells, fit_sample_rows=min(n, 8000)
     )
-    icodes = pq.ivfpq_encode(embs, cents, obooks, rotation=rot).persist()
+    icodes = quantizer.ivfpq_encode(embs, cents, obooks, rotation=rot).persist()
     icodes.count()
     for nprobe in (8, 16):
         recalls = []
@@ -337,6 +341,7 @@ def run_drift(n: int, d: int, n_centers: int, sigma: float) -> None:
     cumulative append (frozen model) and the same-corpus retrain
     control, so the gap IS the staleness cost."""
     from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
     from readwise_vector_db_spark.operators import similarity as sim
     from readwise_vector_db_spark.session import get_spark
 
@@ -357,10 +362,12 @@ def run_drift(n: int, d: int, n_centers: int, sigma: float) -> None:
     assigned, cents = sim.build_ivf_index(
         base_df, n_clusters=n_cells, fit_sample_rows=min(n, 8000)
     )
-    books = pq.train_pq_codebooks(base_df, m=m, k=256, sample_rows=8000)
+    books = quantizer.train_pq_codebooks(base_df, m=m, k=256, sample_rows=8000)
     idx_path = f"{WORK}/drift_ivfpq"
     shutil.rmtree(idx_path, ignore_errors=True)
-    pq.save_ivfpq_index(pq.ivfpq_encode(base_df, cents, books), cents, books, idx_path)
+    pq.save_ivfpq_index(
+        quantizer.ivfpq_encode(base_df, cents, books), cents, books, idx_path
+    )
 
     corpus = base
     appended = 0
@@ -409,8 +416,8 @@ def run_drift(n: int, d: int, n_centers: int, sigma: float) -> None:
             full_df, n_clusters=n_cells,
             fit_sample_rows=min(len(corpus), 8000),
         )
-        r_books = pq.train_pq_codebooks(full_df, m=m, k=256, sample_rows=8000)
-        r_codes = pq.ivfpq_encode(full_df, r_cents, r_books).persist()
+        r_books = quantizer.train_pq_codebooks(full_df, m=m, k=256, sample_rows=8000)
+        r_codes = quantizer.ivfpq_encode(full_df, r_cents, r_books).persist()
         r_codes.count()
         retrain_b = recall_set(q_b, r_codes, r_cents, r_books)
         r_codes.unpersist()
@@ -445,6 +452,7 @@ def run_remediate(
                    bound, at full-rewrite cost)
     """
     from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
     from readwise_vector_db_spark.operators import similarity as sim
     from readwise_vector_db_spark.session import get_spark
 
@@ -472,7 +480,7 @@ def run_remediate(
     _, cents = sim.build_ivf_index(
         base_df, n_clusters=n_cells, fit_sample_rows=min(n, 8000)
     )
-    books = pq.train_pq_codebooks(base_df, m=m, k=256, sample_rows=8000)
+    books = quantizer.train_pq_codebooks(base_df, m=m, k=256, sample_rows=8000)
 
     inc_path = f"{WORK}/rem_inc"
     write_corpus(inc, inc_path)
@@ -501,7 +509,7 @@ def run_remediate(
     def build(path):
         shutil.rmtree(path, ignore_errors=True)
         pq.save_ivfpq_index(
-            pq.ivfpq_encode(base_df, cents, books), cents, books, path,
+            quantizer.ivfpq_encode(base_df, cents, books), cents, books, path,
             base_vecs=base_df, rf_ks=(),
         )
 
@@ -536,8 +544,8 @@ def run_remediate(
     _, r_cents = sim.build_ivf_index(
         full_df, n_clusters=n_cells, fit_sample_rows=min(len(corpus), 8000)
     )
-    r_books = pq.train_pq_codebooks(full_df, m=m, k=256, sample_rows=8000)
-    r_codes = pq.ivfpq_encode(full_df, r_cents, r_books).persist()
+    r_books = quantizer.train_pq_codebooks(full_df, m=m, k=256, sample_rows=8000)
+    r_codes = quantizer.ivfpq_encode(full_df, r_cents, r_books).persist()
     r_codes.count()
     wall_retrain = time.time() - t0
     r_retrain = recall_set(r_codes, r_cents, r_books)

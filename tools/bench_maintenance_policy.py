@@ -50,6 +50,7 @@ def main() -> None:
         maintain_index,
     )
     from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
     from readwise_vector_db_spark.operators import similarity as sim
     from readwise_vector_db_spark.session import get_spark
 
@@ -69,10 +70,10 @@ def main() -> None:
 
     shutil.rmtree(work, ignore_errors=True)
     _, cents = sim.build_ivf_index(base_df, n_clusters=n_centers)
-    books = pq.train_pq_codebooks(base_df, m=8, k=256, sample_rows=5000)
+    books = quantizer.train_pq_codebooks(base_df, m=8, k=256, sample_rows=5000)
     t0 = time.monotonic()
     pq.save_ivfpq_index(
-        pq.ivfpq_encode(base_df, cents, books), cents, books, f"{work}/idx",
+        quantizer.ivfpq_encode(base_df, cents, books), cents, books, f"{work}/idx",
         base_vecs=base_df, rf_ks=(),
     )
     rebuild_wall = time.monotonic() - t0

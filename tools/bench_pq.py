@@ -36,6 +36,7 @@ def main() -> None:
     art_root = os.environ.get("RWVDB_PQ_BENCH_DIR", "/tmp/pq_bench_artifacts")
 
     from readwise_vector_db_spark.operators import pq
+    from readwise_vector_db_spark.operators import quantizer
     from readwise_vector_db_spark.operators import similarity as sim
     from readwise_vector_db_spark.operators.search import vector_literal
     from readwise_vector_db_spark.functions.vector import cosine_distance
@@ -83,11 +84,11 @@ def main() -> None:
         assigned, centroids = sim.build_ivf_index(embs, n_clusters=16)
         sim.save_ivf_index(assigned, centroids, f"{art}/ivf")
         t1 = time.monotonic()
-        books = pq.train_pq_codebooks(embs, m=m, k=256, sample_rows=5000)
-        pq.save_pq_index(pq.pq_encode(embs, books), books, f"{art}/pq")
+        books = quantizer.train_pq_codebooks(embs, m=m, k=256, sample_rows=5000)
+        pq.save_pq_index(quantizer.pq_encode(embs, books), books, f"{art}/pq")
         t2 = time.monotonic()
         pq.save_ivfpq_index(
-            pq.ivfpq_encode(embs, centroids, books), centroids, books,
+            quantizer.ivfpq_encode(embs, centroids, books), centroids, books,
             f"{art}/ivfpq",
         )
         t3 = time.monotonic()
@@ -96,9 +97,9 @@ def main() -> None:
         # serving probe below then resolves rescore_factor="auto" with
         # zero sampling jobs (r9's persisted-rf machinery, measured here
         # at the ×10 corpus)
-        rot, obooks = pq.train_opq(embs, m=m, k=256, sample_rows=5000)
+        rot, obooks = quantizer.train_opq(embs, m=m, k=256, sample_rows=5000)
         pq.save_ivfpq_index(
-            pq.ivfpq_encode(embs, centroids, obooks, rotation=rot),
+            quantizer.ivfpq_encode(embs, centroids, obooks, rotation=rot),
             centroids, obooks, f"{art}/ivfpq_opq",
             base_vecs=embs, rotation=rot, rf_ks=(10,),
         )
