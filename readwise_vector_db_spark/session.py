@@ -19,6 +19,19 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Entries in the JVM-wide generated-code cache (a static conf, so it only
+# takes effect in the session that starts the JVM).  Spark's default of
+# 100 is below the engine's working set: one curate_corpus plus one
+# dedup_clusters compile 123 distinct entries, so with 100 each op evicts
+# the other's and every warm op compiles (and JITs) its code again; one
+# pass over bench.py's 46 headline rows compiles 792-824.  The size is
+# that pass with about 2.4x headroom, and a constant rather than a knob
+# because it bounds memory, not behaviour.  Per entry (measured, 4 cores):
+# about 2.2 generated classes of 2.4-2.8 KB bytecode each, and about
+# 20 KB of JVM memory once retained (metaspace plus JIT code), so a full
+# cache costs about 40 MB.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def env_int(name: str, default: int) -> int:
     """Integer value of the environment variable ``name``, or ``default``
@@ -82,6 +95,7 @@ def get_spark(app_name: str = "readwise_vector_db_spark", cores: int | None = No
         # unaffected (one job at a time either way).
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     spark = builder.getOrCreate()

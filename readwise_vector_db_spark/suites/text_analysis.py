@@ -59,30 +59,27 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The naive form (each metric calling ws_tokens independently) re-split
     ``text`` seven times per row — Catalyst does not CSE through
     higher-order-function lambdas, and the round-1 bench clocked it at
-    8 s for 600 k rows.  Here the token array is bound ONCE (the
-    1-element-transform trick from functions/text.py:word_shingles) and
+    8 s for 600 k rows.  Here the token array is bound ONCE
+    (``functions/text.py:bind_once``) and
     every token metric is a field of a single per-row struct; the second
     projection only recombines struct fields.
     """
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     sw = F.array(*[F.lit(s) for s in T.STOPWORDS])
     # one split per row; all token passes run over the bound lambda var
-    tok_stats = F.element_at(
-        F.transform(
-            F.array(T.ws_tokens("text")),
-            lambda toks: F.struct(
-                F.size(toks).alias("n_toks"),
-                F.aggregate(
-                    F.transform(toks, lambda t: F.length(t).cast("double")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("len_sum"),
-                F.size(
-                    F.filter(toks, lambda t: F.array_contains(sw, F.lower(t)))
-                ).alias("n_sw"),
-            ),
+    tok_stats = T.bind_once(
+        T.ws_tokens("text"),
+        lambda toks: F.struct(
+            F.size(toks).alias("n_toks"),
+            F.aggregate(
+                F.transform(toks, lambda t: F.length(t).cast("double")),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ).alias("len_sum"),
+            F.size(
+                F.filter(toks, lambda t: F.array_contains(sw, F.lower(t)))
+            ).alias("n_sw"),
         ),
-        1,
     )
     n_punct = F.length("text") - F.length(F.regexp_replace("text", r"[.!?,;:]", ""))
     staged = docs.select(
@@ -381,8 +378,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             return F.transform(idx, gram)
 
-        # bind toks once (Catalyst does not CSE through HOF lambdas)
-        return F.element_at(F.transform(F.array(F.col("toks")), grams), 1)
+        return T.bind_once(F.col("toks"), grams)
 
     uni = base.select("doc_id", F.explode("toks").alias("tok"))
     umax = (

@@ -63,6 +63,33 @@ def test_curate_corpus_is_deterministic(spark, tmp_path):
     assert ids_a == ids_b
 
 
+def test_warm_curate_compiles_nothing_after_dedup_clusters(spark, tmp_path):
+    """One curate plus one dedup_clusters fit the generated-code cache
+    together (``session.CODEGEN_CACHE_ENTRIES``): with Spark's default of
+    100 entries, the ~70 classes dedup_clusters compiles evict curate's,
+    and the second curate compiled 33 classes again."""
+    import readwise_vector_db_spark.suites  # noqa: F401  (fills the registry)
+    from readwise_vector_db_spark.operators.dedup import release_detector_cache
+    from readwise_vector_db_spark.registry import all_queries
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def cold():
+        release_detector_cache()
+        spark.catalog.clearCache()
+
+    cold()
+    curate_corpus(spark, SF_SMOKE, str(tmp_path / "a"))
+    cold()
+    all_queries()["dedup_clusters"](spark, SF_SMOKE) \
+        .write.format("noop").mode("overwrite").save()
+    cold()
+    before = compiles.getCount()
+    curate_corpus(spark, SF_SMOKE, str(tmp_path / "b"))
+    assert compiles.getCount() - before == 0
+
+
 def test_curate_corpus_boilerplate_stage(spark, tmp_path):
     """Optional CCNet stage: with planted boilerplate in the corpus,
     the funnel strips it BEFORE scoring/dedup, reports segment

@@ -121,3 +121,85 @@ def test_engine_case_mapping_is_internally_consistent(spark):
     df = spark.createDataFrame([(c,) for c in cases], "t string")
     for r in df.select("t", F.lower("t").alias("l")).collect():
         assert r["l"] == r["t"].lower(), r["t"]
+
+
+# The per-row forms of lang_id and quality_score before their token array
+# and marker counts were bound once: every marker count re-split the text
+# and the nested-CASE argmax copied each count into every branch.  Kept
+# here as the reference the bound forms must reproduce value for value.
+def _reference_lang_id(text):
+    toks = T.ws_tokens(F.lower(F.col(text)))
+    scores = {
+        lang: F.size(F.filter(
+            toks, lambda t: F.array_contains(F.array(*map(F.lit, markers)), t)
+        ))
+        for lang, markers in T.LANG_MARKERS.items()
+    }
+    langs = list(T.LANG_MARKERS)
+    best_lang, best_score = F.lit(langs[0]), scores[langs[0]]
+    for lang in langs[1:]:
+        s = scores[lang]
+        better = s > best_score
+        best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
+        best_score = F.when(better, s).otherwise(best_score)
+    return F.when(best_score > 0, best_lang).otherwise(F.lit("und"))
+
+
+def _reference_quality_score(text):
+    t = F.col(text)
+    toks = T.ws_tokens(F.lower(t))
+    sw_arr = F.array(*map(F.lit, T.STOPWORDS))
+    n_sw = F.size(F.filter(toks, lambda x: F.array_contains(sw_arr, x)))
+    sw = F.when(F.size(toks) > 0, n_sw.cast("double") / F.size(toks))
+    len_ok = F.when(F.length(t).between(50, 5000), F.lit(0.4)).otherwise(F.lit(0.0))
+    sw_ok = F.when((sw >= 0.05) & (sw <= 0.6), F.lit(0.4)).otherwise(F.lit(0.0))
+    pr = T.punct_ratio(t)
+    punct_ok = F.when(pr <= 0.1, F.lit(0.2)).otherwise(F.lit(0.0))
+    return len_ok + sw_ok + punct_ok
+
+
+def test_bound_lang_id_and_quality_match_reference(spark):
+    import random
+
+    edge = [
+        None,                       # NULL text
+        "",                         # empty
+        "   ",                      # whitespace only
+        "THE DOG AND THE CAT",      # upper case still counts
+        "la",                       # shared es/fr marker: tie → es
+        "la le",                    # fr 2, es 1
+        "der the",                  # en/de tie → en (language order)
+        "el le ne",                 # es 1, fr 2
+        "que es la de los",         # es only
+        "xyzzy plugh",              # all zero → und
+        "The, quick; brown fox!! is... here? and: there, and of it.",
+    ]
+    rng = random.Random(7)
+    vocab = sorted({m for ms in T.LANG_MARKERS.values() for m in ms}
+                   | set(T.STOPWORDS) | {"fox", "dog", "river", "stone"})
+    rows = edge + [
+        " ".join(
+            rng.choice([w, w.upper(), w.capitalize(), w + ","])
+            for w in rng.choices(vocab, k=rng.randint(0, 60))
+        )
+        for _ in range(400)
+    ]
+    df = spark.createDataFrame(list(enumerate(rows)), "id int, text string")
+    got = df.select(
+        "id",
+        T.lang_id("text").alias("lang"),
+        _reference_lang_id("text").alias("lang_ref"),
+        T.quality_score("text").alias("q"),
+        _reference_quality_score("text").alias("q_ref"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert r["lang"] == r["lang_ref"], (rows[r["id"]], r)
+        assert r["q"] == r["q_ref"], (rows[r["id"]], r)
+    by_id = {r["id"]: r["lang"] for r in got}
+    assert [by_id[i] for i in range(len(edge))] == [
+        "und", "und", "und", "en", "es", "fr", "en", "fr", "es", "und", "en",
+    ]
+    # the rows exercise every language and every quality band
+    assert {r["lang"] for r in got} == {"en", "de", "es", "fr", "und"}
+    assert len({r["q"] for r in got}) >= 4

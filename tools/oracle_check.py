@@ -17,6 +17,7 @@ import sys
 from collections import Counter
 from datetime import date, datetime
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 
@@ -105,7 +106,14 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    # this checkout's own code, in the driver and in Spark's Python
+    # workers, whatever the working directory: a second checkout checks
+    # itself
+    root = str(Path(__file__).resolve().parents[1])
+    sys.path.insert(0, root)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as entry
 
     # deliberately a VANILLA session (not session.py's get_spark): the driver
