@@ -75,30 +75,15 @@ def _meta_column_names() -> list[str]:
     return [part.strip().split()[0] for part in _META_SCHEMA.split(",")]
 
 
-# layout dir → (source fingerprint, declared filter columns), so a warm
-# request reads the sidecar once per layout generation, not per request
-_FILTER_COLS_SEEN: dict[str, tuple[str, tuple]] = {}
-
-
-def _declared_filter_columns(base, fp: str | None = None) -> tuple:
-    """The filter columns an IVF layout declares, default when absent.
-    With the source fingerprint ``fp`` the sidecar is read once per
-    (layout, fingerprint); this process's own re-declarations and builds
-    drop the memo, another process's re-declaration is seen once the
-    fingerprint changes."""
+def _declared_filter_columns(base) -> tuple:
+    """The filter columns an IVF layout declares, default when absent."""
     import json as _json
 
-    seen = _FILTER_COLS_SEEN.get(str(base))
-    if fp is not None and seen is not None and seen[0] == fp:
-        return seen[1]
     try:
         with open(os.path.join(str(base), _FILTER_COLS_FILE)) as f:
-            cols = tuple(_json.load(f))
+            return tuple(_json.load(f))
     except (OSError, ValueError):
-        cols = _DEFAULT_FILTER_COLUMNS
-    if fp is not None:
-        _FILTER_COLS_SEEN[str(base)] = (fp, cols)
-    return cols
+        return _DEFAULT_FILTER_COLUMNS
 
 
 def _tag(sf_dir: str) -> str:
@@ -264,7 +249,7 @@ _HANDLES: dict[tuple[str, str, str, bool], tuple[DataFrame, DataFrame]] = {}
 
 
 def warm_tables(
-    spark: SparkSession, sf_dir: str, cache: bool = True, fp: str | None = None
+    spark: SparkSession, sf_dir: str, cache: bool = True
 ) -> tuple[DataFrame, DataFrame]:
     """(metadata, vectors) DataFrames over the warm layout, building it on
     first use.  Reads come from registered bucketed catalog tables so
@@ -275,9 +260,8 @@ def warm_tables(
     latency also assumes the index is in RAM, not read per query).
     MEMORY_AND_DISK default storage: an index bigger than executor
     memory spills instead of failing, and a `clearCache()` (or executor
-    loss) just re-materializes lazily from the parquet layout.  ``fp``:
-    the source fingerprint when the caller already has it."""
-    fp = fp or _source_fingerprint(sf_dir)
+    loss) just re-materializes lazily from the parquet layout."""
+    fp = _source_fingerprint(sf_dir)
     key = (spark.sparkContext.applicationId, _tag(sf_dir), fp, cache)
     hit = _HANDLES.get(key)
     if hit is not None:
@@ -347,11 +331,11 @@ _SCORING_RELS: dict[tuple[str, str, str], str] = {}
 _TARGET_PARTITION_BYTES = 4 << 20
 
 
-def scoring_relation(spark: SparkSession, sf_dir: str, fp: str | None = None) -> str:
+def scoring_relation(spark: SparkSession, sf_dir: str) -> str:
     """Name of the relation serving scan→score→top-k requests: the
     bucketed vectors table when its data justifies ≥ N_BUCKETS
     partitions, else a cached coalesced view right-sized to the bytes."""
-    fp = fp or _source_fingerprint(sf_dir)
+    fp = _source_fingerprint(sf_dir)
     tag = _tag(sf_dir)
     key = (spark.sparkContext.applicationId, tag, fp)
     hit = _SCORING_RELS.get(key)
@@ -366,7 +350,7 @@ def scoring_relation(spark: SparkSession, sf_dir: str, fp: str | None = None) ->
                 spark.catalog.dropTempView(name)
             except Exception:
                 pass
-    warm_tables(spark, sf_dir, fp=fp)  # ensure layout + cached handles exist
+    warm_tables(spark, sf_dir)  # ensure layout + cached handles exist
     vname = f"rw_warm_vectors_{tag}"
     vec_bytes = dir_bytes(str(_INDEX_ROOT / tag / "vectors"))
     n_parts = max(1, -(-vec_bytes // _TARGET_PARTITION_BYTES))
@@ -431,7 +415,6 @@ def _select_winners(
     meta: DataFrame,
     nprobe: int | None = None,
     n_clusters: int = 16,
-    fp: str | None = None,
 ):
     """First statement of a warm request: the scan→score→top-k winners,
     collected (≤ k clamped to 100 rows).  With ``nprobe`` the scan is the
@@ -440,9 +423,9 @@ def _select_winners(
 
     where = ["embedding IS NOT NULL"]  # F1
     if nprobe is None:
-        vrel = scoring_relation(spark, sf_dir, fp=fp)
+        vrel = scoring_relation(spark, sf_dir)
     else:
-        vrel, centroids = ivf_warm_index(spark, sf_dir, n_clusters=n_clusters, fp=fp)
+        vrel, centroids = ivf_warm_index(spark, sf_dir, n_clusters=n_clusters)
         cells = sorted(probe_cells(centroids, query_vec, nprobe))
         where.insert(0, f"cluster IN ({', '.join(str(c) for c in cells)})")
     mf = search_ops.meta_filter_sql(params, meta.columns)
@@ -478,24 +461,22 @@ _META_CON_CACHE: dict[tuple[str, str], object] = {}
 _META_CON_LOCK = threading.Lock()
 
 
-def _winner_rows_local(
-    sf_dir: str, winners, fp: str | None = None
-) -> list[dict] | None:
+def _winner_rows_local(sf_dir: str, winners) -> list[dict] | None:
     """≤k metadata rows for the winner ids, fetched driver-side from the
     warm layout; None when the layout can't serve (caller falls back to
     the Spark fetch).  Thread-safe: each request runs on a cursor of the
     memoized per-layout connection."""
     meta_dir = _INDEX_ROOT / _tag(sf_dir) / "metadata"
     try:
-        fp = fp or _source_fingerprint(sf_dir)
+        fp = _source_fingerprint(sf_dir)
     except OSError:
+        return None
+    if not meta_dir.exists():
         return None
     key = (str(meta_dir), fp)
     with _META_CON_LOCK:
         con = _META_CON_CACHE.get(key)
         if con is None:
-            if not meta_dir.exists():
-                return None
             try:
                 import duckdb
 
@@ -536,14 +517,12 @@ def _winner_rows_local(
     return rows
 
 
-def _fetch_rows(
-    spark: SparkSession, sf_dir: str, meta: DataFrame, winners, fp: str | None = None
-):
+def _fetch_rows(spark: SparkSession, sf_dir: str, meta: DataFrame, winners):
     """The winners' shaped row dicts in (score, id) order: the driver-side
     layout fetch, or the Spark fetch when the layout can't serve it."""
     if not winners:
         return []
-    rows = _winner_rows_local(sf_dir, winners, fp)
+    rows = _winner_rows_local(sf_dir, winners)
     if rows is None:
         rows = [
             r.asDict(recursive=True)
@@ -603,7 +582,6 @@ def ivf_warm_index(
     n_clusters: int = 16,
     seed: int = 42,
     filter_columns: tuple | list | None = None,
-    fp: str | None = None,
 ) -> tuple[str, list[tuple[int, list[float]]]]:
     """(relation name, centroids) for the IVF serving path, building and
     persisting the index on first use.
@@ -621,8 +599,7 @@ def ivf_warm_index(
     defaulting to ``(source_type, lang, tags)``.  Re-declaring on an
     existing layout rewrites the sidecar; the scorer cache keys on the
     declared set, so the next ``local_ivf_scorer`` call loads the new
-    residency.  ``fp``: the source fingerprint when the caller already
-    has it."""
+    residency."""
     if filter_columns is not None:
         known = set(_meta_column_names()) - {"id", "text"}
         bad = [c for c in filter_columns if c not in known]
@@ -632,10 +609,7 @@ def ivf_warm_index(
                 f"(maskable: {sorted(known)})"
             )
     base = _INDEX_ROOT / _tag(sf_dir) / f"ivf{n_clusters}"
-    hit = _open_ivf_rel(
-        spark, sf_dir, base, n_clusters, seed, filter_columns,
-        fp or _source_fingerprint(sf_dir),
-    )
+    hit = _open_ivf_rel(spark, sf_dir, base, n_clusters, seed, filter_columns)
     if (
         filter_columns is not None
         and base.is_dir()
@@ -645,7 +619,6 @@ def ivf_warm_index(
         # sidecar drives only the scorer load, so an atomic rewrite is
         # enough (the scorer cache keys on the declared set)
         storage.atomic_write_json(base / _FILTER_COLS_FILE, list(filter_columns))
-        _FILTER_COLS_SEEN.pop(str(base), None)
     return hit
 
 
@@ -656,12 +629,12 @@ def _open_ivf_rel(
     n_clusters: int,
     seed: int,
     filter_columns,
-    fp: str,
 ) -> tuple[str, list[tuple[int, list[float]]]]:
     """The memoized cached IVF relation, building the layout at ``base``
     when it is missing or stale."""
     import json as _json
 
+    fp = _source_fingerprint(sf_dir)
     tag = _tag(sf_dir)
     key = (spark.sparkContext.applicationId, tag, fp, n_clusters)
     hit = _IVF_RELS.get(key)
@@ -677,7 +650,7 @@ def _open_ivf_rel(
             spark.catalog.dropTempView(name)
         except Exception:
             pass
-    _, vecs = warm_tables(spark, sf_dir, fp=fp)
+    _, vecs = warm_tables(spark, sf_dir)
     if not _is_fresh(base, fp):
         # offline build: KMeans-assign the warm vectors, persist the
         # cluster-partitioned layout, swap it in (_install_layout)
@@ -693,7 +666,6 @@ def _open_ivf_rel(
             Path(stage, "FINGERPRINT").write_text(fp)
 
         _install_layout(base, fp, build)
-        _FILTER_COLS_SEEN.pop(str(base), None)
     # Read with fold-CPU-sized splits, then sort each partition by
     # cluster so cached batches carry tight cluster min/max stats and
     # the in-memory scan's batch pruning SKIPS non-probed cells instead
@@ -942,20 +914,19 @@ def _canon_filter_key(params) -> tuple:
 
 
 def local_ivf_scorer(
-    spark: SparkSession, sf_dir: str, n_clusters: int = 16, fp: str | None = None
+    spark: SparkSession, sf_dir: str, n_clusters: int = 16
 ) -> _LocalIvfScorer | None:
     """The process-resident probe scorer over the persisted IVF layout,
     or None when the corpus exceeds SPARK_GRAFT_LOCAL_IVF_MB (default
     512) — the caller then serves through the Spark statement.  Built
     once per (layout, fingerprint); ensures the Spark-side artifact
-    exists first (first process builds, the rest attach).  ``fp``: the
-    source fingerprint when the caller already has it."""
-    fp = fp or _source_fingerprint(sf_dir)
+    exists first (first process builds, the rest attach)."""
+    fp = _source_fingerprint(sf_dir)
     tag = _tag(sf_dir)
     # ensure the persisted artifact + centroids exist (Spark build path)
-    _, centroids = ivf_warm_index(spark, sf_dir, n_clusters=n_clusters, fp=fp)
+    _, centroids = ivf_warm_index(spark, sf_dir, n_clusters=n_clusters)
     layout_dir = _INDEX_ROOT / tag / f"ivf{n_clusters}"
-    fcols = _declared_filter_columns(layout_dir, fp)
+    fcols = _declared_filter_columns(layout_dir)
     key = (tag, fp, n_clusters, fcols)
     with _LOCAL_IVF_LOCK:
         hit = _LOCAL_IVF_CACHE.get(key)
@@ -1062,9 +1033,7 @@ def served_search_rows(
     params = params or search_ops.SearchParams()
     if params.extra_filters:
         return None
-    # one fingerprint per request: every memo below keys on it
-    fp = _source_fingerprint(sf_dir)
-    meta, _ = warm_tables(spark, sf_dir, fp=fp)
+    meta, _ = warm_tables(spark, sf_dir)
     winners = None
     if nprobe is not None:
         # the resident scorer removes the job scheduler from the request
@@ -1072,7 +1041,7 @@ def served_search_rows(
         # resident columns, and a filter on a column outside them goes
         # to the Spark IVF statement
         filtered = search_ops.meta_filter_sql(params, meta.columns) is not None
-        scorer = local_ivf_scorer(spark, sf_dir, n_clusters=n_clusters, fp=fp)
+        scorer = local_ivf_scorer(spark, sf_dir, n_clusters=n_clusters)
         if scorer is not None and (not filtered or scorer.supports_params(params)):
             top = scorer.topk(
                 query_vec, params.clamped_k(), nprobe,
@@ -1081,6 +1050,6 @@ def served_search_rows(
             winners = [{"id": i, "score": sc} for i, sc in top]
     if winners is None:
         winners = _select_winners(
-            spark, sf_dir, query_vec, params, meta, nprobe, n_clusters, fp
+            spark, sf_dir, query_vec, params, meta, nprobe, n_clusters
         )
-    return _fetch_rows(spark, sf_dir, meta, winners, fp)
+    return _fetch_rows(spark, sf_dir, meta, winners)

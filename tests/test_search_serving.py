@@ -322,7 +322,7 @@ def test_served_rows_spark_fetch_selects_winners_once(spark, warm, monkeypatch, 
 
     statements = _spy_statements(monkeypatch)
     monkeypatch.setattr(si._LocalIvfScorer, "topk", topk_spy)
-    monkeypatch.setattr(si, "_winner_rows_local", lambda sf_dir, winners, fp=None: None)
+    monkeypatch.setattr(si, "_winner_rows_local", lambda sf_dir, winners: None)
     budgets = ["512"] if nprobe is None else ["512", "0"]
     try:
         for budget in budgets:
@@ -562,47 +562,6 @@ def test_declared_filter_columns_drive_scorer_residency(spark, warm, monkeypatch
         si._LOCAL_IVF_CACHE.clear()
     restored = si.local_ivf_scorer(spark, SF_SMOKE)
     assert restored is not None and restored.filter_cols == si._DEFAULT_FILTER_COLUMNS
-
-
-def test_warm_probe_request_reads_only_the_fingerprint(spark, warm, monkeypatch):
-    """A warm probe request served by the resident scorer touches the
-    engine's files only through the one source fingerprint of the
-    request (two ``os.stat``): the layout's filter declaration, the IVF
-    relation, the scorer and the metadata connection all come from memos
-    keyed on it.  (Before, each of four callees took its own fingerprint
-    and the scorer re-read ``filter_columns.json``: 9 stats and 1 open.)"""
-    import builtins
-    import os
-
-    meta, vecs, qv = warm
-    roots = (SF_SMOKE, str(si._INDEX_ROOT))
-    calls = []
-    real_stat, real_open = os.stat, builtins.open
-
-    def stat(path, *args, **kwargs):
-        calls.append(("stat", os.fspath(path)))
-        return real_stat(path, *args, **kwargs)
-
-    def open_(file, *args, **kwargs):
-        calls.append(("open", str(file)))
-        return real_open(file, *args, **kwargs)
-
-    for params in (SearchParams(k=10), SearchParams(k=10, lang="en")):
-        want = _want_rows(spark, qv, params, nprobe=4)
-        # the first request fills the memos
-        assert si.served_search_rows(spark, SF_SMOKE, qv, params, nprobe=4)
-        calls.clear()
-        with monkeypatch.context() as m:
-            statements = _spy_statements(m)
-            m.setattr(os, "stat", stat)
-            m.setattr(builtins, "open", open_)
-            rows = si.served_search_rows(spark, SF_SMOKE, qv, params, nprobe=4)
-        assert rows == want
-        assert statements == []  # the resident scorer served it
-        assert [c for c in calls if c[1].startswith(roots)] == [
-            ("stat", f"{SF_SMOKE}/documents.parquet"),
-            ("stat", f"{SF_SMOKE}/embeddings.parquet"),
-        ]
 
 
 def test_scorer_masks_custom_column_generic_semantics():
